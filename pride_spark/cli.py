@@ -349,7 +349,7 @@ def cmd_run_pipeline(args) -> int:
     §3.2 stage consumes the written T1 artifact — its schema contract —
     through the same session.
     """
-    from pride_spark.operators.filters import spectrum_validity_filter
+    from pride_spark.operators.filters import spectrum_validity_counts
     from pride_spark.sinks.mgf import write_mgf
     from pride_spark.sources.jsonlines import read_archive_spectra, write_jsonlines
 
@@ -371,8 +371,7 @@ def cmd_run_pipeline(args) -> int:
         )
 
     # json_check_validator (F12) — same abort-the-pipeline contract
-    total = archive.count()
-    valid = spectrum_validity_filter(archive).count()
+    total, valid = spectrum_validity_counts(archive)
     if valid != total:
         print(f"ABORT: {total - valid}/{total} archive spectra invalid", file=sys.stderr)
         base.unpersist()
@@ -538,13 +537,12 @@ def cmd_curate_corpus(args) -> int:
 
 
 def cmd_spectra_json_check(args) -> int:
-    from pride_spark.operators.filters import spectrum_validity_filter
+    from pride_spark.operators.filters import spectrum_validity_counts
     from pride_spark.sources.jsonlines import read_archive_spectra
 
     spark = _spark("spectra-json-check")
     archive = read_archive_spectra(spark, args.archive_json)
-    total = archive.count()
-    valid = spectrum_validity_filter(archive).count()
+    total, valid = spectrum_validity_counts(archive)
     print(f"{valid}/{total} spectra valid")
     return 0 if valid == total else 1
 

@@ -60,7 +60,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from pride_spark.session import register_pinned
+from pride_spark.session import local_frame, register_pinned
 from pride_spark.operators.similarity import (
     _kmeans_centroids,
     _l2_sql,
@@ -113,8 +113,8 @@ def build_ivf_index(
     cents = _kmeans_centroids(df, id_col, vec_col, n_centroids, kmeans_iters)
     if not cents:
         raise ValueError("cannot build an IVF index over an empty table")
-    cent_df = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "centroid_id int, centroid array<double>"
+    cent_df = local_frame(
+        spark, [(i, c) for i, c in enumerate(cents)], "centroid_id int, centroid array<double>"
     )
     cent_df.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
 

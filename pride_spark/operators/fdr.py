@@ -27,7 +27,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pride_spark.session import checkpoint_handle, register_pinned, track_cached
+from pride_spark.session import checkpoint_handle, local_frame, register_pinned, track_cached
 
 _KEY, _PID = "__fdr_key", "__fdr_pid"
 
@@ -206,7 +206,7 @@ def _global_two_pass(
     part = register_pinned(
         fined.withColumn(_PID, bucket).drop(FINE).persist()
     )
-    off_df = spark.createDataFrame(offsets, f"{_PID} int, __off_d long, __off_t long")
+    off_df = local_frame(spark, offsets, f"{_PID} int, __off_d long, __off_t long")
 
     w_cum = Window.partitionBy(_PID).orderBy(_KEY).rangeBetween(Window.unboundedPreceding, Window.currentRow)
     with_fdr = (
@@ -229,7 +229,8 @@ def _global_two_pass(
     for pid in sorted(pid_min, reverse=True):
         suffix.append((pid, running))  # min over strictly-later buckets
         running = min(running, pid_min[pid])
-    later_df = spark.createDataFrame(
+    later_df = local_frame(
+        spark,
         [(p, None if m == float("inf") else m) for p, m in suffix],
         f"{_PID} int, __later_min double",
     )

@@ -114,20 +114,40 @@ def score_denoise_flat(
     )
 
 
-def spectrum_validity_filter(
-    df: DataFrame,
+def spectrum_validity(
     masses: str = "masses",
     intensities: str = "intensities",
     required_non_null: tuple[str, ...] = ("precursorMz", "precursorCharge"),
-) -> DataFrame:
-    """F12 — peak arrays non-empty/parallel + precursor fields present.
+) -> Column:
+    """F12 predicate — peak arrays non-empty/parallel + precursor fields present.
 
     Ref: PSMClusteringService.java:45-51 (the ``spectra-json-check`` CLI).
     """
     cond = (F.size(masses) == F.size(intensities)) & (F.size(masses) > 0)
     for c in required_non_null:
         cond = cond & F.col(c).isNotNull()
-    return df.filter(cond)
+    return cond
+
+
+def spectrum_validity_filter(
+    df: DataFrame,
+    masses: str = "masses",
+    intensities: str = "intensities",
+    required_non_null: tuple[str, ...] = ("precursorMz", "precursorCharge"),
+) -> DataFrame:
+    """F12 — keep the rows :func:`spectrum_validity` accepts."""
+    return df.filter(spectrum_validity(masses, intensities, required_non_null))
+
+
+def spectrum_validity_counts(df: DataFrame) -> tuple[int, int]:
+    """F12 gate figures ``(total, valid)`` from ONE aggregate job.
+
+    ``count_if`` skips rows whose predicate is NULL, exactly as the
+    filter drops them, so ``valid`` equals the filter's row count."""
+    row = df.agg(
+        F.count("*").alias("total"), F.count_if(spectrum_validity()).alias("valid")
+    ).first()
+    return row["total"], row["valid"]
 
 
 def ms_level_filter(df: DataFrame, col: str = "msLevel") -> DataFrame:

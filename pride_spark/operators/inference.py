@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pride_spark.session import local_frame
+
 GROUP_SCHEMA = StructType(
     [
         StructField("proteinAccession", StringType(), False),
@@ -169,7 +171,7 @@ def occams_razor(
         )
         for acc in members:
             rows.append((acc, gid, list(members), sorted(peps), gid in leading, cat))
-    return spark.createDataFrame(rows, GROUP_SCHEMA)
+    return local_frame(spark, rows, GROUP_SCHEMA)
 
 
 def _occams_razor_distributed(
@@ -253,8 +255,8 @@ def _occams_razor_distributed(
         leading.add(gid)
         uncovered -= peps
 
-    leading_df = spark.createDataFrame(
-        [(g,) for g in sorted(leading)], "groupId string"
+    leading_df = local_frame(
+        spark, [(g,) for g in sorted(leading)], "groupId string"
     ).withColumn("__lead", F.lit(True))
     return (
         grouped.join(absorbed, "groupId", "left")

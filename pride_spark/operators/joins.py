@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..session import register_pinned
+from ..session import local_frame, register_pinned
 
 
 def contains_first_match(
@@ -186,7 +186,7 @@ def global_row_index(
             for b in sorted(counts):
                 offsets.append((b, cum))
                 cum += counts[b]
-        off = spark.createDataFrame(offsets, "__zb int, __zoff long")
+        off = local_frame(spark, offsets, "__zb int, __zoff long")
         w = Window.partitionBy("__zb").orderBy(*order_cols)
         indexed = (
             part.join(F.broadcast(off), "__zb")
@@ -482,7 +482,8 @@ def asof_join(
                 ),
             )
         if seed_rows:
-            seed_df = spark.createDataFrame(
+            seed_df = local_frame(
+                spark,
                 seed_rows,
                 StructType(
                     [

@@ -14,6 +14,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pride_spark.session import local_frame
+
 
 def _d(x) -> str:
     """SQL text of one double literal.  ``repr`` is Python's shortest
@@ -554,8 +556,8 @@ def ivf_topk(
     n_probe = n_probe or len(cents) or n_centroids
     if not cents:  # empty table: empty result with the output schema
         id_t = dict(df.dtypes)[id_col]
-        return df.sparkSession.createDataFrame(
-            [], f"query_id {id_t}, nbr_id {id_t}, cosine double, rank int"
+        return local_frame(
+            df.sparkSession, [], f"query_id {id_t}, nbr_id {id_t}, cosine double, rank int"
         )
     nearest, order = _nearest_centroids_expr(vec_col, cents)
     bucket = (

@@ -51,6 +51,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pride_spark.session import local_frame
+
 #: supported resolutions, finest-first order
 _RES_ORDER = ["minute", "hour", "day", "week", "month", "quarter", "year"]
 
@@ -409,7 +411,7 @@ def _write_store_meta(spark, path: str, finest: str) -> None:
     import uuid
 
     tmp = os.path.join(path, f".meta-{uuid.uuid4().hex}")
-    spark.createDataFrame([(finest,)], "finest string").coalesce(1).write.mode(
+    local_frame(spark, [(finest,)], "finest string").coalesce(1).write.mode(
         "overwrite"
     ).json(tmp)
     final = os.path.join(path, "_meta")

@@ -41,6 +41,7 @@ from pride_spark.operators.text import (
     detect_language,
     quality_score,
 )
+from pride_spark.session import local_frame
 
 _GATE = "__gate_fail"
 
@@ -220,6 +221,6 @@ def curate_corpus(
         curated = (
             spark.read.parquet(output_dir)
             if kept
-            else spark.createDataFrame([], schema)
+            else local_frame(spark, [], schema)
         )
     return curated, report

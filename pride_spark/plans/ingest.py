@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from pride_spark.functions.proforma import encode_peptidoform
 from pride_spark.functions.spectrum_id import normalize_spectrum_id
+from pride_spark.session import local_frame
 from pride_spark.sources.apl import read_apl
 from pride_spark.sources.mgf import read_mgf
 from pride_spark.sources.mzid import read_mzid_psms
@@ -362,8 +363,8 @@ def route_psms_to_spectra(
     from pride_spark.operators.joins import SpectraRelationError
 
     spark = psms.sparkSession
-    user = spark.createDataFrame(
-        [(os.path.basename(p),) for p in spectra_files], "__specFile string"
+    user = local_frame(
+        spark, [(os.path.basename(p),) for p in spectra_files], "__specFile string"
     ).withColumn(
         "__key", F.lower(file_name_no_extension(F.col("__specFile")))
     )

@@ -12,7 +12,8 @@ import contextlib
 import os
 import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Config applied to every session this package creates.  All of these are
 #: also safe to set at runtime on a borrowed session (see :func:`tune`).
@@ -102,6 +103,31 @@ def get_spark(
         except Exception:  # static conf (e.g. spark.ui.enabled) on a
             pass  # pre-existing session cannot change — keep going
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-side row tuples, planned as a ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` parallelizes the rows as a Python
+    RDD, so every job that reads the frame runs ``defaultParallelism``
+    Python-worker tasks (a 4-row table measured 0.45 s wall and ~1.1 CPU s
+    per evaluation on 4 cores).  Built from a ``pyarrow.Table`` the same
+    rows are a ``LocalTableScan``: no Python worker, ~0.05 s.  ``schema``
+    is a DDL string or a ``StructType``; values follow the list path's
+    conversions (naive datetimes are local time, ``Row`` fills a struct).
+    """
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    rows = list(rows)
+    table = (
+        LocalDataToArrowConversion.convert(rows, schema, False)
+        if rows
+        else to_arrow_schema(schema).empty_table()
+    )
+    return spark.createDataFrame(table, schema)
 
 
 # ---------------------------------------------------------------------------

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from pride_spark import schemas
+from pride_spark.session import local_frame
 
 
 def read_jsonlines(spark: SparkSession, path: str | list[str], schema: StructType) -> DataFrame:
@@ -46,8 +47,7 @@ def point_lookup(table: DataFrame, usis: DataFrame | list[str], usi_col: str = "
     from pyspark.sql import functions as F
 
     if isinstance(usis, list):
-        spark = table.sparkSession
-        usis = spark.createDataFrame([(u,) for u in usis], f"{usi_col} string")
+        usis = local_frame(table.sparkSession, [(u,) for u in usis], f"{usi_col} string")
     return table.join(F.broadcast(usis.select(usi_col).distinct()), usi_col, "left_semi")
 
 

@@ -68,6 +68,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pride_spark.session import local_frame
+
 _NS = "{http://psidev.info/psi/pi/mzIdentML/1.1}"
 
 MZID_PSM_SCHEMA = StructType(
@@ -200,7 +202,7 @@ def _parse_one(path: str) -> tuple[list, list]:
 
 
 def _paths_df(spark: SparkSession, paths: list[str]) -> DataFrame:
-    return spark.createDataFrame([(p,) for p in paths], "path string").repartition(
+    return local_frame(spark, [(p,) for p in paths], "path string").repartition(
         min(len(paths), 64)
     )
 

@@ -32,6 +32,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
+from pride_spark.session import local_frame
 from pride_spark.sources import numpress, xmlsplit
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -336,7 +337,7 @@ def _reader(parse) -> "callable":
     def read(spark: SparkSession, paths: list[str]) -> DataFrame:
         if isinstance(paths, str):
             paths = [paths]
-        pdf = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
+        pdf = local_frame(spark, [(p,) for p in paths], "path string").repartition(
             min(len(paths), 64)
         )
 

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from pride_spark import schemas
 from pride_spark.operators.filters import result_file_filters
+from pride_spark.session import local_frame
 
 #: public API base (docs/usage.md in the reference)
 DEFAULT_BASE = "https://www.ebi.ac.uk/pride/ws/archive/v2"
@@ -147,7 +148,9 @@ def project_files_df(spark: SparkSession, files: list[dict]) -> DataFrame:
         or not any("fileCategoryAccession" in f for f in dicts)
     ):
         files = normalize_pride_files(files)
-    return spark.createDataFrame(files, schemas.PROJECT_FILE)
+    names = schemas.PROJECT_FILE.fieldNames()
+    rows = [tuple(f.get(n) for n in names) for f in files]
+    return local_frame(spark, rows, schemas.PROJECT_FILE)
 
 
 def result_file_manifest(files: DataFrame, project_accession: str) -> DataFrame:

@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from pride_spark.session import local_frame
+
 #: files larger than this parse in split mode under mode="auto"
 SPLIT_THRESHOLD_MB = float(os.environ.get("PRIDE_SPARK_MZID_SPLIT_MB", "32"))
 #: planned range size — ~4 MB keeps 32 cores busy from ~128 MB of input up
@@ -118,8 +120,8 @@ def ranges_df(spark: SparkSession, paths: list[str]) -> DataFrame:
     flat = [
         (local, s, min(s + step, size)) for local, starts, size in rows for s in starts
     ]
-    return spark.createDataFrame(
-        flat, "path string, start bigint, end bigint"
+    return local_frame(
+        spark, flat, "path string, start bigint, end bigint"
     ).repartition(len(flat))
 
 

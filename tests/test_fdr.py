@@ -516,3 +516,19 @@ def test_group_psm_sets_composite_spectrum_key(spark):
     assert by_file["run2.mgf"]["setSize"] == 1
     # the single-column form still collapses all three (old callers)
     assert group_psm_sets(df, better="higher").count() == 1
+
+
+def test_two_pass_driver_frames_are_local_relations(spark):
+    """The global two-pass FDR joins two driver-built frames (bucket
+    offsets, suffix minima) back in; both must be ``LocalRelation``s —
+    a list-backed frame shows as ``LogicalRDD`` and costs Python-worker
+    tasks on every read."""
+    df = spark.range(200).select(
+        F.col("id").cast("string").alias("id"),
+        (F.col("id") % 17).cast("double").alias("score"),
+        (F.col("id") % 5 == 0).alias("isDecoy"),
+    )
+    out = add_fdr_qvalue(df, "score", "isDecoy", num_range_partitions=4, lazy=True)
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert "LogicalRDD" not in plan
+    assert plan.count("LocalRelation") == 2

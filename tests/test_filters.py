@@ -15,6 +15,7 @@ from pride_spark.operators.filters import (
     result_file_filters,
     scan_id_validation,
     source_id_filter,
+    spectrum_validity_counts,
     spectrum_validity_filter,
 )
 
@@ -67,6 +68,8 @@ def test_spectrum_validity_filter(spark):
     )
     got = {r["id"] for r in spectrum_validity_filter(df).collect()}
     assert got == {"ok"}
+    # the CLI gates' one-job figures agree with the filter
+    assert spectrum_validity_counts(df) == (4, 1)
 
 
 def test_delta_mass_validation_buckets(spark):
