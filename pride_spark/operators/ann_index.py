@@ -66,8 +66,7 @@ from pride_spark.operators.similarity import (
     _l2_sql,
     _nearest_centroids_expr,
     _pair_cosine_sql,
-    l2_norm,
-    pair_cosine,
+    _vec_sql,
     pq_adc_from_luts,
     pq_encode_expr,
     pq_luts_expr,
@@ -130,7 +129,7 @@ def build_ivf_index(
         assigned = df.select(
             F.col(id_col).alias("nbr_id"),
             F.col(vec_col).alias("nbr_vec"),
-            l2_norm(F.col(vec_col)).alias("nbr_norm"),
+            F.expr(_l2_sql(_vec_sql(vec_col))).alias("nbr_norm"),
             bucket.alias("centroid_id"),
         )
     else:
@@ -147,7 +146,7 @@ def build_ivf_index(
         df.select(
             F.col(id_col).alias("nbr_id"),
             F.col(vec_col).alias("nbr_vec"),
-            l2_norm(F.col(vec_col)).alias("nbr_norm"),
+            F.expr(_l2_sql(_vec_sql(vec_col))).alias("nbr_norm"),
             nearest.alias("centroid_id"),
         ).write.mode("overwrite").partitionBy("centroid_id").parquet(
             f"{path}/vectors"
@@ -255,7 +254,7 @@ def search_ivf_index(
     probed = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("q_norm"),
+        F.expr(_l2_sql(_vec_sql(vec_col))).alias("q_norm"),
         F.explode(F.transform(F.slice(order, 1, n_probe), lambda s: s["cid"])).alias(
             "centroid_id"
         ),
@@ -291,11 +290,8 @@ def search_ivf_index(
     scored = pairs.select(
         "query_id",
         "nbr_id",
-        F.round(
-            pair_cosine(
-                F.col("q_vec"), F.col("nbr_vec"), F.col("q_norm"), F.col("nbr_norm")
-            ),
-            6,
+        F.expr(
+            f"round({_pair_cosine_sql('q_vec', 'nbr_vec', 'q_norm', 'nbr_norm')}, 6)"
         ).alias("cosine"),
     )
     if meta.get("assign_replicas", 1) > 1:

@@ -40,7 +40,7 @@ def hash_fraction(id_col: Column | str, seed: str = "split") -> Column:
     """Deterministic uniform-[0,1) value per id: the first 8 hex chars of
     ``md5(seed || '|' || id)`` scaled by 2⁻³².  Engine-reproducible (any
     engine with md5 derives the identical value — the same chunking trick
-    as ``dedup._chunk_hash``), so split membership can be checked
+    as ``dedup._chunk_hash_sql``), so split membership can be checked
     cross-system."""
     c = F.col(id_col) if isinstance(id_col, str) else id_col
     return (
@@ -321,7 +321,7 @@ def _tagged_signatures(
             carry={"dg": F.md5(F.col(text_col))},
         )
     sigs = minhash_df.filter("mh0 IS NOT NULL")
-    digs = F.expr(f"array({', '.join(_band_digests_sql(num_hashes, bands))})")
+    digs = F.expr(_band_digests_sql(num_hashes, bands))
     # the hash-family parameters ride the digest column as schema
     # metadata (survives a parquet round-trip), so a later flags run can
     # refuse signatures built under a different family instead of

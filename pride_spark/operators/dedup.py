@@ -16,7 +16,7 @@ MinHash+LSH pipeline applied to binned peak vectors.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -35,30 +35,23 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.join(w_min, id_col, "left_semi")
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Whitespace-token n-gram shingles as an array<string>.
+def word_shingles_sql(text_sql: str, n: int = 3) -> str:
+    """Whitespace-token n-gram shingles (``array<string>``) of the SQL
+    expression ``text_sql``, as SQL text parsed in one py4j call.
 
     ``sequence``+``slice`` keeps it JVM-side; empty/short docs yield the
     whole-document singleton so they still participate.
     """
-    words = F.split(F.trim(text), r"\s+")
-    k = F.greatest(F.size(words) - F.lit(n - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(1), k),
-        lambda i: F.array_join(F.slice(words, i, n), " "),
-    )
-
-
-def word_shingles_sql(text_sql: str, n: int = 3) -> str:
-    """SQL text of :func:`word_shingles` over a column rendered as
-    ``text_sql`` — parses to the identical expression in one py4j call
-    (r14 plan-construction optimization; equivalence pinned by
-    tools/plan_normdiff.py and the q13/q24 oracles)."""
     words = r"split(trim(" + text_sql + r"), '\\s+')"
     return (
         f"transform(sequence(1, greatest(size({words}) - {n - 1}, 1)), "
         f"i -> array_join(slice({words}, i, {n}), ' '))"
     )
+
+
+def word_shingles(text_col: str, n: int = 3) -> Column:
+    """:func:`word_shingles_sql` over the column named ``text_col``."""
+    return F.expr(word_shingles_sql(f"`{text_col}`", n))
 
 
 #: hash i = 8-hex-char (32-bit) chunk i%4 of md5(f"{i//4}|" + shingle).
@@ -69,26 +62,23 @@ def word_shingles_sql(text_sql: str, n: int = 3) -> str:
 #: near-dedup at scale.  Fixed-length lowercase hex compares like the
 #: number it encodes, in any engine (the DuckDB oracles mirror this
 #: SUBSTR(MD5(..)) derivation exactly).
-def _chunk_hash(sh: Column, i: int) -> Column:
-    return F.substring(
-        F.md5(F.concat(F.lit(f"{i // 4}|"), sh)), (i % 4) * 8 + 1, 8
+def _chunk_hash_sql(sh: str, i: int) -> str:
+    return f"substring(md5(concat('{i // 4}|', {sh})), {(i % 4) * 8 + 1}, 8)"
+
+
+def minhash_signature(text_col: str, num_hashes: int = 8, shingle_n: int = 3) -> Column:
+    """k independent 32-bit min-hashes over the shingles of the column
+    named ``text_col`` (chunked md5, see :func:`_chunk_hash_sql`); output
+    is ``array<string>`` of length ``num_hashes``."""
+    sh = word_shingles_sql(f"`{text_col}`", shingle_n)
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"array_min(transform({sh}, s -> {_chunk_hash_sql('s', i)}))"
+            for i in range(num_hashes)
+        )
+        + ")"
     )
-
-
-def minhash_signature(text: Column, num_hashes: int = 8, shingle_n: int = 3) -> Column:
-    """k independent 32-bit min-hashes over shingles (chunked md5, see
-    :func:`_chunk_hash`); output is ``array<string>`` of length
-    ``num_hashes``."""
-    sh = word_shingles(text, shingle_n)
-
-    def seeded(i: int):
-        # single-arg closure: a 2-arg lambda would receive (element, index)
-        def h(s: Column) -> Column:
-            return _chunk_hash(s, i)
-
-        return h
-
-    return F.array(*[F.array_min(F.transform(sh, seeded(i))) for i in range(num_hashes)])
 
 
 def shingle_rows(
@@ -160,7 +150,7 @@ def minhash_signatures_df(
     The scalable shape: shingle rows come from the codegen window form
     (:func:`shingle_rows`; no distinct — duplicates cannot change a min),
     each md5 digest is computed ONCE and split into four 32-bit chunk
-    hashes (:func:`_chunk_hash` — explicit two-step select so the digest
+    hashes (:func:`_chunk_hash_sql` — explicit two-step select so the digest
     is never recomputed per chunk), and the signature is a single ``min``
     aggregation that reuses the window's id-partitioning — no second
     exchange.  Output: (id, mh0..mh{k-1}).
@@ -201,41 +191,21 @@ def minhash_signatures_df(
     return ids.join(aggs, "id", "left")
 
 
-def _band_digests_sql(num_hashes: int, bands: int) -> list[str]:
-    """SQL text of the per-band bucket digests — see :func:`_band_digests`."""
+def _band_digests_sql(num_hashes: int, bands: int) -> str:
+    """SQL text of the per-band bucket digests (md5 of the signature band
+    slice) as one ``array<string>``, element ``b`` for band ``b``.  The
+    ONE definition of the banding key — shared by
+    :func:`lsh_candidate_pairs` (join key + first-collision array) and
+    :func:`lsh_bucket_stats`: the stats are only meaningful if they hash
+    the EXACT same banding the join uses (and the q24 DuckDB oracle
+    mirrors this expression)."""
     rows = num_hashes // bands
-    return [
+    return "array(" + ", ".join(
         "md5(concat_ws('|', "
         + ", ".join(f"mh{i}" for i in range(b * rows, (b + 1) * rows))
         + "))"
         for b in range(bands)
-    ]
-
-
-def _band_digests(num_hashes: int, bands: int) -> list[Column]:
-    """Per-band bucket digests (md5 of the signature band slice), one
-    Column per band.  The ONE definition of the banding key — shared by
-    :func:`lsh_candidate_pairs` (join key + first-collision array) and
-    :func:`lsh_bucket_stats`: the stats are only meaningful if they hash
-    the EXACT same banding the join uses (and the q24 DuckDB oracle
-    mirrors this expression).  Rendered as SQL text parsed JVM-side
-    (plan-construction cost, r13 technique — identical expressions)."""
-    return [F.expr(s) for s in _band_digests_sql(num_hashes, bands)]
-
-
-def _banded(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(id, band, bucket) rows from :func:`_band_digests`."""
-    return sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), d.alias("bucket"))
-                    for b, d in enumerate(_band_digests(num_hashes, bands))
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
+    ) + ")"
 
 
 def lsh_candidate_pairs(
@@ -296,8 +266,9 @@ def lsh_candidate_pairs(
     # their band digest would be the md5 of "" — a CONSTANT that sweeps
     # every null doc into one bucket per band — where the oracle's NULL
     # buckets never equi-join.
-    digs_sql = f"array({', '.join(_band_digests_sql(num_hashes, bands))})"
-    perid = sigs.filter("mh0 IS NOT NULL").selectExpr("id", f"{digs_sql} AS digs")
+    perid = sigs.filter("mh0 IS NOT NULL").selectExpr(
+        "id", f"{_band_digests_sql(num_hashes, bands)} AS digs"
+    )
     if max_bucket is not None:
         # cap + null-masked band rebuild (shared lsh_common primitives:
         # a capped band can never be the first agreement, so
@@ -350,7 +321,9 @@ def lsh_bucket_stats(
     the cap or auditing what a capped run skipped."""
     sigs = minhash_signatures_df(df, text_col, id_col, num_hashes=num_hashes, shingle_n=shingle_n)
     # same null-signature exclusion as the join path (see lsh_candidate_pairs)
-    banded = _banded(sigs.filter(F.col("mh0").isNotNull()), num_hashes, bands)
+    banded = sigs.filter("mh0 IS NOT NULL").selectExpr(
+        f"posexplode({_band_digests_sql(num_hashes, bands)}) AS (band, bucket)"
+    )
     sizes = banded.groupBy("band", "bucket").agg(F.count("*").alias("n"))
     row = sizes.agg(
         F.count("*").alias("buckets"),
@@ -361,28 +334,15 @@ def lsh_bucket_stats(
     return {k: (row[k] or 0) for k in ("buckets", "max_size", "dropped_rows", "dropped_buckets")}
 
 
-def ngram_jaccard(text_a: Column, text_b: Column, n: int = 3) -> Column:
-    """Exact Jaccard similarity of word-n-gram sets (verification step)."""
-    sa, sb = F.array_distinct(word_shingles(text_a, n)), F.array_distinct(word_shingles(text_b, n))
-    return jaccard_of_sets(sa, sb)
-
-
-def jaccard_of_sets(sa: Column, sb: Column) -> Column:
-    """Jaccard of two pre-deduplicated arrays (two empty sets → 0.0).
+def jaccard_of_sets_sql(sa: str, sb: str) -> str:
+    """Jaccard of two pre-deduplicated arrays (two empty sets → 0.0), as
+    SQL text over the SQL expressions ``sa``/``sb``.
 
     The union SIZE is computed arithmetically (|a| + |b| − |a∩b|, valid
     because the inputs are deduplicated) instead of materializing an
     ``array_union`` per pair — the verify join runs this once per
     candidate pair, and the union-array allocation measured ~8% of q48
     when this helper briefly replaced the clustering path's inline form."""
-    inter = F.size(F.array_intersect(sa, sb)).cast("double")
-    union = (F.size(sa) + F.size(sb)).cast("double") - inter
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-
-
-def jaccard_of_sets_sql(sa: str, sb: str) -> str:
-    """SQL text of :func:`jaccard_of_sets` over columns rendered as SQL —
-    identical parsed expression, one py4j call (r14)."""
     inter = f"CAST(size(array_intersect({sa}, {sb})) AS DOUBLE)"
     union = f"(CAST((size({sa}) + size({sb})) AS DOUBLE) - {inter})"
     return f"CASE WHEN {union} > 0 THEN {inter} / {union} ELSE 0.0D END"
@@ -460,39 +420,63 @@ def near_dedup_minhash(
     return eq.unionByName(neq).filter(F.col("jaccard") >= threshold)
 
 
-def simhash64(text: Column, shingle_n: int = 2) -> Column:
-    """63-bit SimHash over word shingles, built from xxhash64 bit votes.
+def _simhash_hash_sql(sh: str, variant: str) -> tuple[str, int]:
+    """(per-shingle hash SQL over ``sh``, bit count) of a SimHash variant.
 
-    For each bit position, sum ±1 votes across shingle hashes and take the
-    sign.  Pure higher-order-function expression (no UDF), computed in ONE
-    pass over the shingle array: the accumulator is the whole 63-element
-    vote vector (``zip_with`` inside ``aggregate``), instead of one
-    ``aggregate`` per bit — 63 separate folds made this ~60× slower at
+    ``"md5"``: the first 15 hex chars of md5 — bit-reproducible in any
+    engine with md5 (the DuckDB oracle for q35 recomputes it exactly);
+    60 bits keep the hash inside signed-long range on both engines.
+    Anything else: xxhash64, 63 bits — faster, but Spark-specific, so
+    cross-engine oracle parity is impractical (unit tests + rows-only
+    driver check)."""
+    if variant == "md5":
+        return f"CAST(conv(substring(md5({sh}), 1, 15), 16, 10) AS BIGINT)", 60
+    return f"xxhash64({sh})", 63
+
+
+def _simhash_fold(text_col: str, variant: str, shingle_n: int) -> Column:
+    """In-row SimHash over the word shingles of the column named
+    ``text_col``: for each bit position, sum ±1 votes across the distinct
+    shingle hashes and take the sign.
+
+    Pure higher-order-function expression (no UDF), computed in ONE pass
+    over the shingle array: the accumulator is the whole n-bit vote
+    vector (``zip_with`` inside ``aggregate``), instead of one
+    ``aggregate`` per bit — per-bit folds made this ~60× slower at
     sf0.1.  The final fold packs votes MSB-first via ``value*2 + bit``,
-    which stays inside signed-long range for 63 bits (ANSI mode rejects
-    the overflowing 64th).  Cross-engine oracle parity is impractical
-    (xxhash64 is Spark-specific): unit tests + rows-only driver check.
-    """
-    sh = F.array_distinct(word_shingles(text, shingle_n))
-    hashes = F.transform(sh, lambda s: F.xxhash64(s))
-    # NULL text → NULL hash (not the accidental all-zero fold the NULL
-    # votes would otherwise produce); matches simhash_df's left-join-back.
-    return F.when(text.isNotNull(), _simhash_votes(hashes, 63))
-
-
-def simhash_md5(text: Column, shingle_n: int = 2) -> Column:
-    """60-bit SimHash variant whose per-shingle hash is the first 15 hex
-    chars of md5 — bit-reproducible in any engine with md5 (the DuckDB
-    oracle for q35 recomputes it exactly), unlike the xxhash64 production
-    path above.  Same vote fold; 60 bits keep the hash inside signed-long
-    range on both engines.
-    """
-    sh = F.array_distinct(word_shingles(text, shingle_n))
-    hashes = F.transform(
-        sh, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+    which stays inside signed-long range for ≤63 bits (ANSI mode rejects
+    the overflowing 64th).  NULL text → NULL hash (not the accidental
+    all-zero fold the NULL votes would otherwise produce), matching
+    :func:`simhash_df`."""
+    t = f"`{text_col}`"
+    hash_sql, n_bits = _simhash_hash_sql("s", variant)
+    hashes = f"transform(array_distinct({word_shingles_sql(t, shingle_n)}), s -> {hash_sql})"
+    bits = ", ".join(
+        f"CAST((shiftrightunsigned(h, {b}) & 1) AS BIGINT)"
+        for b in range(n_bits - 1, -1, -1)  # MSB first
     )
-    # NULL text → NULL hash, matching simhash_df (see simhash64).
-    return F.when(text.isNotNull(), _simhash_votes(hashes, 60))
+    votes = (
+        f"aggregate({hashes}, array_repeat(CAST(0 AS BIGINT), {n_bits}), "
+        f"(acc, h) -> zip_with(acc, array({bits}), (a, x) -> a + x * 2 - 1))"
+    )
+    packed = (
+        f"aggregate({votes}, CAST(0 AS BIGINT), "
+        "(acc, v) -> acc * 2 + CASE WHEN v > 0 THEN 1 ELSE 0 END)"
+    )
+    return F.expr(f"CASE WHEN {t} IS NOT NULL THEN {packed} END")
+
+
+def simhash64(text_col: str, shingle_n: int = 2) -> Column:
+    """63-bit SimHash built from xxhash64 bit votes (see
+    :func:`_simhash_fold`)."""
+    return _simhash_fold(text_col, "xx64", shingle_n)
+
+
+def simhash_md5(text_col: str, shingle_n: int = 2) -> Column:
+    """60-bit SimHash whose per-shingle hash is md5-derived — the
+    oracle-able variant of :func:`simhash64` (see
+    :func:`_simhash_hash_sql`)."""
+    return _simhash_fold(text_col, "md5", shingle_n)
 
 
 def simhash_df(
@@ -520,14 +504,9 @@ def simhash_df(
     join with NULL simhash — matching the in-row fold variants, which
     emit NULL for null text.  Output: (id, simhash).
     """
-    if variant == "md5":
-        n_bits = 60
-        hasher = F.conv(F.substring(F.md5(F.col("sh")), 1, 15), 16, 10).cast("long")
-    else:
-        n_bits = 63
-        hasher = F.xxhash64(F.col("sh"))
-    exploded = shingle_rows(df, text_col, id_col, shingle_n, distinct=True).select(
-        "id", hasher.alias("h")
+    hash_sql, n_bits = _simhash_hash_sql("sh", variant)
+    exploded = shingle_rows(df, text_col, id_col, shingle_n, distinct=True).selectExpr(
+        "id", f"{hash_sql} AS h"
     )
     # The per-bit vote sums and the bit packing are rendered as SQL text
     # and parsed JVM-side (r13, the lit_vec technique): the Column-API
@@ -555,23 +534,3 @@ def simhash_df(
         F.col(id_col).alias("id"), F.lit(None).cast("long").alias("simhash")
     )
     return hashed.unionByName(nulls)
-
-
-def _simhash_votes(hashes: Column, n_bits: int) -> Column:
-    zeros = F.array_repeat(F.lit(0).cast("long"), n_bits)
-
-    def vote_step(acc: Column, h: Column) -> Column:
-        bits = F.array(
-            *[
-                F.shiftrightunsigned(h, b).bitwiseAND(F.lit(1)).cast("long")
-                for b in range(n_bits - 1, -1, -1)  # MSB first
-            ]
-        )
-        return F.zip_with(acc, bits, lambda a, bit: a + bit * 2 - 1)
-
-    votes = F.aggregate(hashes, zeros, vote_step)
-    return F.aggregate(
-        votes,
-        F.lit(0).cast("long"),
-        lambda acc, v: acc * 2 + F.when(v > 0, F.lit(1)).otherwise(F.lit(0)),
-    )

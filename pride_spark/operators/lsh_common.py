@@ -60,7 +60,7 @@ def array_band_digests(sig, num_hashes: int, bands: int):
     (r10 review).  The byte format is frozen by existing indexes —
     change it only with an index version bump.
 
-    Distinct from :func:`pride_spark.operators.dedup._band_digests`
+    Distinct from :func:`pride_spark.operators.dedup._band_digests_sql`
     (column-shaped signatures, the DuckDB-oracle-matching format) and
     the spectral path's ','-joined digest; all three formats are
     load-bearing for their own stored artifacts/oracles.

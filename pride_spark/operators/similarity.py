@@ -14,6 +14,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pride_spark.operators.partitioning import widen
 from pride_spark.session import local_frame
 
 
@@ -33,15 +34,6 @@ def _d(x) -> str:
     return f"{x!r}D"
 
 
-def dot(a: Column, b: Column) -> Column:
-    """JVM-side dot product of two numeric arrays."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def lit_vec(vals) -> Column:
     """``array<double>`` literal in ONE py4j call.
 
@@ -58,33 +50,13 @@ def lit_vec(vals) -> Column:
     return F.expr(_arr_sql(vals))
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    denom = l2_norm(a) * l2_norm(b)
-    return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
-
-
-def pair_cosine(q_vec: Column, nbr_vec: Column, q_norm: Column, nbr_norm: Column) -> Column:
-    """Cosine with pre-hoisted norms — bit-identical to :func:`cosine`
-    (same sqrt-of-sum fold, same division order) but the two norm folds run
-    once per ROW instead of once per PAIR, cutting the per-pair work from
-    three array folds to one."""
-    denom = q_norm * nbr_norm
-    return F.when(denom > 0, dot(q_vec, nbr_vec) / denom).otherwise(F.lit(0.0))
-
-
-# --- SQL-text twins of the scoring expressions (r14): the ANN plan
-# builders re-create these trees per run, and the Column API costs ~6-10
-# py4j round trips per operator — rendered as text they parse JVM-side
-# in one call, to IDENTICAL expressions (tools/plan_normdiff.py).
+# --- Scoring expressions, rendered as SQL text: the ANN plan builders
+# re-create these per run, and as text each parses JVM-side in ONE py4j
+# call (the Column API cost ~6-10 round trips per operator).  Arguments
+# are SQL fragments: column references or nested expressions.
 
 def _dot_cols_sql(a: str, b: str) -> str:
-    """SQL text of :func:`dot` over two column references."""
+    """Dot product of two numeric arrays: a left-to-right double fold."""
     return (
         f"aggregate(zip_with({a}, {b}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -93,7 +65,7 @@ def _dot_cols_sql(a: str, b: str) -> str:
 
 
 def _l2_sql(vs: str) -> str:
-    """SQL text of :func:`l2_norm` over a column reference."""
+    """L2 norm of a numeric array (sqrt of a left-to-right fold)."""
     return (
         f"sqrt(aggregate({vs}, 0.0D, "
         "(acc, v) -> acc + (CAST(v AS DOUBLE) * CAST(v AS DOUBLE))))"
@@ -101,7 +73,9 @@ def _l2_sql(vs: str) -> str:
 
 
 def _pair_cosine_sql(qv: str, nv: str, qn: str, nn: str) -> str:
-    """SQL text of :func:`pair_cosine` over column references."""
+    """Cosine with pre-hoisted norms ``qn``/``nn`` (zero norm → 0.0): the
+    two norm folds run once per ROW instead of once per PAIR, cutting the
+    per-pair work from three array folds to one."""
     denom = f"({qn} * {nn})"
     return (
         f"CASE WHEN {denom} > 0 THEN ({_dot_cols_sql(qv, nv)}) / {denom} "
@@ -109,9 +83,22 @@ def _pair_cosine_sql(qv: str, nv: str, qn: str, nn: str) -> str:
     )
 
 
-#: shared helper (promoted to operators/partitioning.py in r14; the alias
-#: keeps this module's historical import surface working)
-from .partitioning import widen as _widen  # noqa: E402
+def _arr_sql(vals) -> str:
+    """SQL text of an ``array<double>`` literal (see :func:`lit_vec`)."""
+    return "array(" + ",".join(_d(x) for x in vals) + ")"
+
+
+def _dot_sql(vec_sql: str, vals) -> str:
+    """:func:`_dot_cols_sql` against a literal vector, so a codebook of
+    hundreds of dots costs one py4j call instead of two
+    higher-order-function round trips per dot (measured ~11 ms each —
+    construction, not execution, dominated the ANN rows)."""
+    return _dot_cols_sql(vec_sql, _arr_sql(vals))
+
+
+def _vec_sql(name: str) -> str:
+    """Column NAME → backtick-quoted SQL fragment."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def brute_force_topk(
@@ -132,7 +119,7 @@ def brute_force_topk(
     hoisted per row.  Output: (query_id, neighbor_id, cosine, rank).
     """
     iq, vq = _vec_sql(id_col), _vec_sql(vec_col)
-    base = _widen(df).selectExpr(
+    base = widen(df).selectExpr(
         f"{iq} AS nbr_id", f"{vq} AS nbr_vec", f"{_l2_sql(vq)} AS __nn"
     )
     q = (probe if probe is not None else df).selectExpr(
@@ -162,11 +149,12 @@ def brute_force_topk(
     ).filter(F.col("rank") <= k)
 
 
-def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
+def hyperplane_bucket(vec_col: str, planes: list[list[float]]) -> Column:
     """Sign-bit LSH bucket id from fixed random hyperplanes (deterministic).
 
     ``planes`` is a small literal matrix (seeded offline); bucket id is the
-    integer formed by the sign bits of ``vec · plane_i``.
+    integer formed by the sign bits of ``vec · plane_i`` — one SQL-text
+    expression over the column named ``vec_col``.
     """
     if len(planes) > 63:
         # Spark's shiftleft masks the count mod 64 (Java << on long):
@@ -176,12 +164,36 @@ def hyperplane_bucket(vec: Column, planes: list[list[float]]) -> Column:
             f"at most 63 hyperplanes per table (got {len(planes)}); "
             "use multiple tables (OR-construction) instead"
         )
-    bucket = F.lit(0).cast("long")
+    vs = _vec_sql(vec_col)
+    bucket = "CAST(0 AS BIGINT)"
     for i, plane in enumerate(planes):
-        lit_plane = lit_vec(plane)
-        bit = F.when(dot(vec, lit_plane) >= 0, F.lit(1)).otherwise(F.lit(0)).cast("long")
-        bucket = bucket.bitwiseOR(F.shiftleft(bit, i))
-    return bucket
+        bit = f"CAST(CASE WHEN {_dot_sql(vs, plane)} >= 0 THEN 1 ELSE 0 END AS BIGINT)"
+        bucket = f"({bucket} | shiftleft({bit}, {i}))"
+    return F.expr(bucket)
+
+
+def _table_buckets(
+    vec_col: str, planes: list[list[float]] | list[list[list[float]]]
+) -> tuple[Column, int]:
+    """(exploded ``struct<t, b>`` per hash table, number of tables).
+
+    ``planes`` is either ONE hash table (a list of hyperplanes) or a list
+    of tables (OR-construction): with L tables of b planes, a pair whose
+    per-plane agreement probability is p is a candidate with probability
+    1-(1-p^b)^L — multiple small tables trade candidate volume for recall
+    far better than one deep table."""
+    tables: list[list[list[float]]] = (
+        planes if planes and isinstance(planes[0][0], (list, tuple)) else [planes]  # type: ignore[list-item]
+    )
+    bucket = F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(t).alias("t"), hyperplane_bucket(vec_col, tbl).alias("b"))
+                for t, tbl in enumerate(tables)
+            ]
+        )
+    )
+    return bucket, len(tables)
 
 
 def lsh_topk(
@@ -190,121 +202,29 @@ def lsh_topk(
     vec_col: str,
     planes: list[list[float]] | list[list[list[float]]],
     k: int = 3,
-    scorer: str = "gemm",
-) -> DataFrame:
-    """Approximate top-k: candidates restricted to same-bucket pairs.
-
-    Default production path: per-bucket GEMM scoring
-    (:func:`lsh_topk_gemm` — ~4.5x the fold path at sf0.1, O(n·L·k)
-    Python↔JVM traffic).  ``scorer="fold"`` selects the all-JVM
-    sequential-fold variant (:func:`lsh_topk_fold`) where bit-parity
-    with a left-to-right float summation matters; the two agree to 6 dp
-    (equivalence asserted in tests/test_dedup_similarity_text.py).
-    """
-    if scorer == "gemm":
-        return lsh_topk_gemm(df, id_col, vec_col, planes, k=k)
-    return lsh_topk_fold(df, id_col, vec_col, planes, k=k)
-
-
-def lsh_topk_fold(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    planes: list[list[float]] | list[list[list[float]]],
-    k: int = 3,
-) -> DataFrame:
-    """Approximate top-k: candidates restricted to same-bucket pairs,
-    scored pair-at-a-time with the JVM ``aggregate`` fold.
-
-    ``planes`` is either ONE hash table (a list of hyperplanes) or a list
-    of tables (OR-construction): with L tables of b planes, a pair whose
-    per-plane agreement probability is p is a candidate with probability
-    1-(1-p^b)^L — multiple small tables trade candidate volume for recall
-    far better than one deep table.  Shuffle is on the (table, bucket)
-    key (O(n·L)), the quadratic term only applies within buckets (expected
-    n/2^b each).  Verify against :func:`brute_force_topk`
-    (tests/test_dedup_similarity_text.py asserts recall@3).
-    """
-    tables: list[list[list[float]]] = (
-        planes if planes and isinstance(planes[0][0], (list, tuple)) else [planes]  # type: ignore[list-item]
-    )
-    bucket = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("t"),
-                    hyperplane_bucket(F.col(vec_col), tbl).alias("b"),
-                )
-                for t, tbl in enumerate(tables)
-            ]
-        )
-    )
-    b = df.select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(vec_col).alias("nbr_vec"),
-        l2_norm(F.col(vec_col)).alias("__nn"),
-        bucket.alias("bucket"),
-    )
-    q = df.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        l2_norm(F.col(vec_col)).alias("__qn"),
-        bucket.alias("bucket"),
-    )
-    pairs = q.join(b, ["bucket"]).filter(F.col("query_id") != F.col("nbr_id"))
-    scored = pairs.select(
-        "query_id",
-        "nbr_id",
-        F.round(
-            pair_cosine(F.col("q_vec"), F.col("nbr_vec"), F.col("__qn"), F.col("__nn")), 6
-        ).alias("cosine"),
-    )
-    if len(tables) > 1:
-        scored = scored.dropDuplicates(["query_id", "nbr_id"])
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("nbr_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def lsh_topk_gemm(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    planes: list[list[float]] | list[list[list[float]]],
-    k: int = 3,
     block_rows: int = 1024,
 ) -> DataFrame:
-    """Approximate top-k with per-bucket numpy GEMM scoring — the high-
-    throughput variant of :func:`lsh_topk` for wide candidate sets.
+    """Approximate top-k: candidates restricted to same-bucket pairs
+    (:func:`_table_buckets`), scored per bucket with numpy GEMM.
 
-    Same OR-construction bucketing (JVM-side sign-bit hashing), but each
-    (table, bucket) group is scored in one Arrow batch: normalize the
-    member matrix once, ``V @ V.T`` in float64 BLAS, and emit only the
-    per-bucket top-k per query.  Emitting per-bucket top-k is lossless
-    for the global top-k: if k candidates inside some shared bucket beat
-    x, those k are global candidates too, so x was never in the global
-    top-k.  Python↔JVM traffic is O(n·L·k) rows instead of O(candidate
-    pairs); the quadratic term runs inside BLAS at memory bandwidth.
+    Each (table, bucket) group is scored in one Arrow batch: normalize
+    the member matrix once, ``V @ V.T`` in float64 BLAS, and emit only
+    the per-bucket top-k per query.  Emitting per-bucket top-k is
+    lossless for the global top-k: if k candidates inside some shared
+    bucket beat x, those k are global candidates too, so x was never in
+    the global top-k.  Python↔JVM traffic is O(n·L·k) rows instead of
+    O(candidate pairs); the quadratic term runs inside BLAS at memory
+    bandwidth (~4.5x the pair-at-a-time fold at sf0.1).  Shuffle is on
+    the (table, bucket) key (O(n·L)).
 
-    Scores differ from the JVM fold path only by float summation order
-    (≲1e-15 relative); use :func:`lsh_topk` where bit-parity with the
-    sequential fold matters (the q49 oracle), this where throughput does.
-    ``block_rows`` bounds kernel memory to O(block_rows · bucket_size)
-    even on skewed buckets.
+    Scores differ from the left-to-right fold of
+    :func:`lsh_topk_fold` only by float summation order (≲1e-15
+    relative; the two agree to 6 dp, asserted in
+    tests/test_dedup_similarity_text.py together with recall@3 against
+    :func:`brute_force_topk`).  ``block_rows`` bounds kernel memory to
+    O(block_rows · bucket_size) even on skewed buckets.
     """
-    tables: list[list[list[float]]] = (
-        planes if planes and isinstance(planes[0][0], (list, tuple)) else [planes]  # type: ignore[list-item]
-    )
-    bucket = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("t"),
-                    hyperplane_bucket(F.col(vec_col), tbl).alias("b"),
-                )
-                for t, tbl in enumerate(tables)
-            ]
-        )
-    )
+    bucket, _ = _table_buckets(vec_col, planes)
     assigned = df.select(
         F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"), bucket.alias("bucket")
     ).select("vid", "vec", F.col("bucket.t").alias("t"), F.col("bucket.b").alias("b"))
@@ -378,6 +298,42 @@ def lsh_topk_gemm(
     return best.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
+def lsh_topk_fold(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    planes: list[list[float]] | list[list[list[float]]],
+    k: int = 3,
+) -> DataFrame:
+    """Reference scorer for :func:`lsh_topk`: the same candidates, scored
+    pair-at-a-time with the JVM left-to-right ``aggregate`` fold."""
+    bucket, n_tables = _table_buckets(vec_col, planes)
+    iq, vq = _vec_sql(id_col), _vec_sql(vec_col)
+    b = df.select(
+        F.expr(f"{iq} AS nbr_id"),
+        F.expr(f"{vq} AS nbr_vec"),
+        F.expr(f"{_l2_sql(vq)} AS __nn"),
+        bucket.alias("bucket"),
+    )
+    q = df.select(
+        F.expr(f"{iq} AS query_id"),
+        F.expr(f"{vq} AS q_vec"),
+        F.expr(f"{_l2_sql(vq)} AS __qn"),
+        bucket.alias("bucket"),
+    )
+    pairs = q.join(b, ["bucket"]).filter("query_id != nbr_id")
+    scored = pairs.selectExpr(
+        "query_id",
+        "nbr_id",
+        f"round({_pair_cosine_sql('q_vec', 'nbr_vec', '__qn', '__nn')}, 6)"
+        " AS cosine",
+    )
+    if n_tables > 1:
+        scored = scored.dropDuplicates(["query_id", "nbr_id"])
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("nbr_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def _kmeans_centroids(
     df: DataFrame,
     id_col: str,
@@ -427,34 +383,8 @@ def _kmeans_centroids(
     return [[round(float(v), 8) for v in c] for c in cents]
 
 
-def _arr_sql(vals) -> str:
-    """SQL text of an ``array<double>`` literal (see :func:`lit_vec`)."""
-    return "array(" + ",".join(_d(x) for x in vals) + ")"
-
-
-def _dot_sql(vec_sql: str, vals) -> str:
-    """SQL text of :func:`dot` against a literal vector — the EXACT same
-    ``aggregate(zip_with(...))`` left-to-right fold, rendered as one
-    string so a codebook of hundreds of dots costs one py4j call instead
-    of two higher-order-function round trips per dot (measured ~11 ms
-    each — construction, not execution, dominated the ANN rows)."""
-    return (
-        f"aggregate(zip_with({vec_sql}, {_arr_sql(vals)}, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "0.0D, (acc, v) -> acc + v)"
-    )
-
-
-def _vec_sql(vec: Column | str) -> str | None:
-    """Column NAME (str input) → backtick-quoted SQL fragment; Column
-    input → None (callers fall back to the Column-tree builder)."""
-    if isinstance(vec, str):
-        return "`" + vec.replace("`", "``") + "`"
-    return None
-
-
 def _nearest_centroids_expr(
-    vec: Column | str, cents: list[list[float]]
+    vec_col: str, cents: list[list[float]]
 ) -> tuple[Column, Column]:
     """(nearest-centroid id, centroid ids ordered nearest-first) as pure
     Column expressions over a driver-side centroid list — assignment and
@@ -465,37 +395,20 @@ def _nearest_centroids_expr(
     the degenerate ``||vec|| = 0`` row ties every key either way), while
     the centroid norms are Python-side constants — so each row pays
     ``n_centroids`` dot folds instead of ``n_centroids`` dots plus
-    ``2 · n_centroids`` norm folds.
-
-    ``vec`` as a str (column name) selects the one-py4j-call SQL-text
-    path (:func:`_dot_sql`); a Column builds the same tree op-by-op —
-    both parse to the IDENTICAL expression (equality asserted in
-    tests/test_dedup_similarity_text.py)."""
+    ``2 · n_centroids`` norm folds.  Rendered as SQL text over the
+    column named ``vec_col`` (one py4j call per expression)."""
     # the cast names the struct fields; aliases inside F.struct are not
     # reliably preserved through array_sort's type merge
     entry_t = "struct<neg:double,cid:int>"
     norms = [max(sum(x * x for x in c) ** 0.5, 1e-12) for c in cents]
-    vs = _vec_sql(vec)
-    if vs is not None:
-        entries = ",".join(
-            f"CAST(struct(-({_dot_sql(vs, c)}) / {_d(norms[ci])}, {ci}) "
-            f"AS {entry_t})"
-            for ci, c in enumerate(cents)
-        )
-        order_sql = f"array_sort(array({entries}))"
-        return F.expr(f"element_at({order_sql}, 1).cid"), F.expr(order_sql)
-    order = F.array_sort(
-        F.array(
-            *[
-                F.struct(
-                    -dot(vec, lit_vec(c)) / F.lit(norms[ci]),
-                    F.lit(ci),
-                ).cast(entry_t)
-                for ci, c in enumerate(cents)
-            ]
-        )
+    vs = _vec_sql(vec_col)
+    entries = ",".join(
+        f"CAST(struct(-({_dot_sql(vs, c)}) / {_d(norms[ci])}, {ci}) "
+        f"AS {entry_t})"
+        for ci, c in enumerate(cents)
     )
-    return F.element_at(order, 1)["cid"], order
+    order_sql = f"array_sort(array({entries}))"
+    return F.expr(f"element_at({order_sql}, 1).cid"), F.expr(order_sql)
 
 
 def ivf_topk(
@@ -566,7 +479,7 @@ def ivf_topk(
         else F.explode(F.transform(F.slice(order, 1, assign_replicas), lambda s: s["cid"]))
     )
     iq, vq = _vec_sql(id_col), _vec_sql(vec_col)
-    assigned = _widen(df).select(
+    assigned = widen(df).select(
         F.expr(f"{iq} AS nbr_id"),
         F.expr(f"{vq} AS nbr_vec"),
         F.expr(f"{_l2_sql(vq)} AS __nn"),
@@ -725,125 +638,62 @@ def pq_train(
     return _lloyd_subspace_books(x, m, k, iters)
 
 
-def pq_encode_expr(vec: Column | str, codebooks: list[list[list[float]]]) -> Column:
+def pq_encode_expr(vec_col: str, codebooks: list[list[list[float]]]) -> Column:
     """``array<int>`` of ``m`` code ids — per subspace, the L2-nearest
     codebook centroid.  Ranks by ``|c|^2 - 2 * dot(sub, c)`` (expanding
     ``|sub - c|^2`` and dropping the row-constant ``|sub|^2``, which
     cannot change the per-subspace argmin), so each row pays one dot fold
     per centroid instead of a full difference-norm fold.  Ties (exactly
     equal distances) break toward the LOWER code id in both engines via
-    the struct sort's second field.
-
-    ``vec`` as a str (column name) takes the one-py4j-call SQL-text path
-    — same expression, see :func:`_dot_sql`."""
+    the struct sort's second field.  SQL text over the column named
+    ``vec_col`` (see :func:`_dot_sql`)."""
     entry_t = "struct<d:double,code:int>"
-    vs = _vec_sql(vec)
-    if vs is not None:
-        codes_sql = []
-        for j, book in enumerate(codebooks):
-            sub = len(book[0])
-            s = f"slice({vs}, {j * sub + 1}, {sub})"
-            entries = ",".join(
-                f"CAST(struct({_d(round(sum(x * x for x in c), 10))} "
-                f"- 2.0D * {_dot_sql(s, c)}, {ci}) AS {entry_t})"
-                for ci, c in enumerate(book)
-            )
-            codes_sql.append(f"element_at(array_sort(array({entries})), 1).code")
-        return F.expr("array(" + ",".join(codes_sql) + ")")
-    codes = []
+    vs = _vec_sql(vec_col)
+    codes_sql = []
     for j, book in enumerate(codebooks):
         sub = len(book[0])
-        s = F.slice(vec, j * sub + 1, sub)
-        order = F.array_sort(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(round(sum(x * x for x in c), 10))
-                        - F.lit(2.0) * dot(s, lit_vec(c)),
-                        F.lit(ci),
-                    ).cast(entry_t)
-                    for ci, c in enumerate(book)
-                ]
-            )
+        s = f"slice({vs}, {j * sub + 1}, {sub})"
+        entries = ",".join(
+            f"CAST(struct({_d(round(sum(x * x for x in c), 10))} "
+            f"- 2.0D * {_dot_sql(s, c)}, {ci}) AS {entry_t})"
+            for ci, c in enumerate(book)
         )
-        codes.append(F.element_at(order, 1)["code"])
-    return F.array(*codes)
+        codes_sql.append(f"element_at(array_sort(array({entries})), 1).code")
+    return F.expr("array(" + ",".join(codes_sql) + ")")
 
 
-def pq_luts_expr(q_vec: Column | str, codebooks: list[list[list[float]]]) -> Column:
+def pq_luts_expr(q_col: str, codebooks: list[list[list[float]]]) -> Column:
     """Per-query ADC lookup tables: ``array<array<double>>`` of shape
     ``m x k`` where ``lut[j][c] = dot(q_sub_j, book_j[c])``.  This is the
     expensive half of ADC (``m x k`` dot folds) — compute it on the PROBE
     side before the candidate join so it runs once per query row;
-    per-pair work is then ``m`` array lookups (:func:`pq_adc_from_luts`).
-
-    ``q_vec`` as a str (column name) takes the one-py4j-call SQL-text
-    path — same expression, see :func:`_dot_sql`."""
-    vs = _vec_sql(q_vec)
-    if vs is not None:
-        parts = []
-        for j, book in enumerate(codebooks):
-            sub = len(book[0])
-            s = f"slice({vs}, {j * sub + 1}, {sub})"
-            parts.append("array(" + ",".join(_dot_sql(s, c) for c in book) + ")")
-        return F.expr("array(" + ",".join(parts) + ")")
-    luts = []
+    per-pair work is then ``m`` array lookups (:func:`pq_adc_from_luts`;
+    measured 8.3s → 2.9s on q43's sf0.1 fold against inline LUTs).  SQL
+    text over the column named ``q_col`` (see :func:`_dot_sql`)."""
+    vs = _vec_sql(q_col)
+    parts = []
     for j, book in enumerate(codebooks):
         sub = len(book[0])
-        s = F.slice(q_vec, j * sub + 1, sub)
-        luts.append(F.array(*[dot(s, lit_vec(c)) for c in book]))
-    return F.array(*luts)
+        s = f"slice({vs}, {j * sub + 1}, {sub})"
+        parts.append("array(" + ",".join(_dot_sql(s, c) for c in book) + ")")
+    return F.expr("array(" + ",".join(parts) + ")")
 
 
-def pq_adc_from_luts(
-    luts: Column | str, codes: Column | str, m: int | None = None
-) -> Column:
+def pq_adc_from_luts(luts_col: str, codes_col: str, m: int) -> Column:
     """ADC inner product from precomputed query LUTs: ``sum_j
     luts[j][codes[j]]`` — ``m`` lookups + adds per pair, no dot folds.
     Left-to-right addition starting from the first term — bit-identical
-    to the 0.0-init ``dot`` fold (IEEE: ``0.0 + x == x``).  Pass ``m``
-    (statically known from the codebooks) to unroll the fold into a
-    plain codegen addition chain instead of a per-row HOF evaluation —
-    the pair loop is the hot path.  With ``m`` and column NAMES the
-    chain renders as SQL text parsed in one py4j call (r14; identical
-    expression, tools/plan_normdiff.py)."""
-    ls, cs = _vec_sql(luts), _vec_sql(codes)
-    if m is None:
-        if ls is not None:
-            luts, codes = F.col(luts), F.col(codes)  # type: ignore[arg-type]
-        return F.aggregate(
-            F.zip_with(luts, codes, lambda lut, c: F.element_at(lut, c + F.lit(1))),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+    to a 0.0-init dot fold (IEEE: ``0.0 + x == x``).  ``m`` (statically
+    known from the codebooks) unrolls the sum into a plain codegen
+    addition chain instead of a per-row HOF evaluation — the pair loop
+    is the hot path."""
+    ls, cs = _vec_sql(luts_col), _vec_sql(codes_col)
+    return F.expr(
+        " + ".join(
+            f"element_at(element_at({ls}, {j + 1}), element_at({cs}, {j + 1}) + 1)"
+            for j in range(m)
         )
-    if ls is not None and cs is not None:
-        return F.expr(
-            " + ".join(
-                f"element_at(element_at({ls}, {j + 1}),"
-                f" element_at({cs}, {j + 1}) + 1)"
-                for j in range(m)
-            )
-        )
-    terms = [
-        F.element_at(F.element_at(luts, j + 1), F.element_at(codes, j + 1) + F.lit(1))
-        for j in range(m)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def pq_adc_expr(
-    q_vec: Column, codes: Column, codebooks: list[list[list[float]]]
-) -> Column:
-    """Asymmetric-distance inner product: ``sum_j dot(q_sub_j,
-    book_j[codes[j]])`` as one expression with the LUTs built inline —
-    the reference formulation for tests and one-off scoring.  In a join,
-    use :func:`pq_luts_expr` on the probe side + :func:`pq_adc_from_luts`
-    per pair instead, which moves the ``m x k`` dot folds out of the
-    pair loop (measured 8.3s → 2.9s on q43's sf0.1 fold)."""
-    return pq_adc_from_luts(pq_luts_expr(q_vec, codebooks), codes)
+    )
 
 
 def pq_topk(
@@ -890,7 +740,7 @@ def pq_topk(
             F.expr(f"{iq} AS nbr_id"),
             pq_encode_expr(vec_col, codebooks).alias("codes"),
         )
-    codes_df = _widen(codes_df)
+    codes_df = widen(codes_df)
     q = probe if probe is not None else df
     probed = q.select(
         F.expr(f"{iq} AS query_id"),

@@ -40,51 +40,15 @@ instead of once per method.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from pride_spark.operators.dedup import jaccard_of_sets, jaccard_of_sets_sql
+from pride_spark.operators.dedup import jaccard_of_sets_sql
 from pride_spark.operators.graph import connected_components
 from pride_spark.operators.lsh_common import cap_buckets
+from pride_spark.operators.similarity import _d
 from pride_spark.session import register_pinned
-
-
-def bin_peaks(
-    masses: Column | str,
-    intensities: Column | str,
-    *,
-    top_k: int = 50,
-    bin_width: float = 1.0005,
-) -> Column:
-    """Top-k-by-intensity peaks → sorted distinct integer m/z bins.
-
-    ``bin_width`` defaults to the averagine spacing (1.0005 Da) used by
-    spectral-archive tools so isotopic peaks land in adjacent bins.
-    Peaks are ROUNDED to the nearest bin center (not floored): replicate
-    spectra jitter around the true m/z, and a floor splits peaks sitting
-    near a bin edge into different bins, collapsing the pair's Jaccard.
-    """
-    m = F.col(masses) if isinstance(masses, str) else masses
-    i = F.col(intensities) if isinstance(intensities, str) else intensities
-    pairs = F.reverse(
-        F.array_sort(F.zip_with(i, m, lambda x, y: F.struct(x.alias("i"), y.alias("mz"))))
-    )
-    top = F.slice(pairs, 1, top_k)
-    return F.array_sort(
-        F.array_distinct(
-            F.transform(
-                top,
-                lambda p: F.floor(p["mz"] / F.lit(bin_width) + F.lit(0.5)).cast("long"),
-            )
-        )
-    )
-
-
-def _dlit(x: float) -> str:
-    """SQL double literal (``repr`` + D suffix — bit-identical parse to
-    ``F.lit(float)``; a bare ``2.0`` would parse as DECIMAL)."""
-    return f"{float(x)!r}D"
 
 
 def bin_peaks_sql(
@@ -94,10 +58,15 @@ def bin_peaks_sql(
     top_k: int = 50,
     bin_width: float = 1.0005,
 ) -> str:
-    """SQL text of :func:`bin_peaks` over columns rendered as SQL —
-    identical parsed expression, a handful of py4j calls instead of one
-    per operator (r14 plan-construction optimization; equivalence pinned
-    by tools/plan_normdiff.py and the q48 oracle)."""
+    """Top-k-by-intensity peaks → sorted distinct integer m/z bins, as
+    SQL text over the SQL expressions ``masses_sql``/``intensities_sql``.
+
+    ``bin_width`` defaults to the averagine spacing (1.0005 Da) used by
+    spectral-archive tools so isotopic peaks land in adjacent bins.
+    Peaks are ROUNDED to the nearest bin center (not floored): replicate
+    spectra jitter around the true m/z, and a floor splits peaks sitting
+    near a bin edge into different bins, collapsing the pair's Jaccard.
+    """
     pairs = (
         f"reverse(array_sort(zip_with({intensities_sql}, {masses_sql}, "
         "(x, y) -> named_struct('i', x, 'mz', y))))"
@@ -105,15 +74,8 @@ def bin_peaks_sql(
     return (
         "array_sort(array_distinct(transform("
         f"slice({pairs}, 1, {top_k}), "
-        f"p -> CAST(floor(p.mz / {_dlit(bin_width)} + {_dlit(0.5)}) AS BIGINT))))"
+        f"p -> CAST(floor(p.mz / {_d(bin_width)} + {_d(0.5)}) AS BIGINT))))"
     )
-
-
-#: exact Jaccard over distinct element arrays — shared with the dedup
-#: family (single definition; returns 0.0 on two empty sets where the
-#: old inline inter/(|a|+|b|-inter) form produced NULL via 0/0)
-_jaccard = jaccard_of_sets
-_jaccard_sql = jaccard_of_sets_sql
 
 
 # ---------------------------------------------------------------------------
@@ -164,7 +126,7 @@ def _sig_frame(binned: DataFrame, num_hashes: int, hash_fn: str) -> DataFrame:
     # identical parsed expressions — tools/plan_normdiff.py)
     binrows = binned.selectExpr("key", "explode(bins) AS b")
     if hash_fn == "md5":
-        # chunked md5 (dedup._chunk_hash): 4 independent 8-hex-char
+        # chunked md5 (dedup._chunk_hash_sql): 4 independent 8-hex-char
         # minhash values per digest, one md5 per (bin, seed-group)
         n_digests = (num_hashes + 3) // 4
         digests = binrows.selectExpr(
@@ -279,10 +241,10 @@ def _pbs_sql(precursor_window: float) -> str:
     so pairs straddling a block edge are still co-blocked.  Every
     candidate row carries the FULL array so the join can apply
     FIRST-COLLISION-WINS on the smallest shared block.  SQL text (r14)."""
-    w = _dlit(precursor_window)
+    w = _d(precursor_window)
     return (
         f"array_distinct(array(floor(pmz / {w}),"
-        f" floor(pmz / {w} + {_dlit(0.5)})))"
+        f" floor(pmz / {w} + {_d(0.5)})))"
     )
 
 
@@ -320,7 +282,7 @@ def _pairs_block(
     cand = left.join(right, ["pblock"]).filter(_FIRST_BLOCK_SQL)
     return (
         cand.filter("key_a < key_b")
-        .filter(f"{_jaccard_sql('bins_a', 'bins_b')} >= {_dlit(threshold)}")
+        .filter(f"{jaccard_of_sets_sql('bins_a', 'bins_b')} >= {_d(threshold)}")
         .select("key_a", "key_b")
     )
 
@@ -384,7 +346,7 @@ def _pairs_lsh(
     )
     return (
         cand.filter("key_a < key_b")
-        .filter(f"{_jaccard_sql('bins_a', 'bins_b')} >= {_dlit(threshold)}")
+        .filter(f"{jaccard_of_sets_sql('bins_a', 'bins_b')} >= {_d(threshold)}")
         .select("key_a", "key_b")
     )
 
@@ -445,7 +407,7 @@ def cluster_spectra(
     method: ``"xx64"`` (default) is Spark's xxhash64 — fastest, but
     engine-specific; ``"md5"`` derives each minhash value as an
     8-hex-char chunk of ``md5(f"{seed}|{bin}")`` (four values per digest,
-    same chunking as ``dedup._chunk_hash``) and each band digest as the
+    same chunking as ``dedup._chunk_hash_sql``) and each band digest as the
     md5 of the band slice — bit-reproducible in any engine with md5, so
     the PRODUCTION candidate path (banding, first-collision emission,
     Jaccard gate, connected components) gets a DuckDB oracle row
@@ -477,7 +439,7 @@ def cluster_spectra(
     # persisted for the same reason as cluster_spectra_multi: the binning
     # pass feeds BOTH the candidate subtree (materialized once into the CC
     # loop's base checkpoint) and the final singleton-fill join — without
-    # the persist, bin_peaks over the source runs twice.  The returned
+    # the persist, bin_peaks_sql over the source runs twice.  The returned
     # plan still reads this frame, so the operator cannot unpersist it;
     # long-lived drivers should wrap call+action in
     # ``session.pinned_scope()`` (registered below) or sweep with

@@ -938,7 +938,7 @@ _MINHASH_ORACLE = r"""
     )
     SELECT doc_id,
            -- hash i = 32-bit chunk i%4 of MD5((i//4) || '|' || shingle);
-           -- mirrors dedup._chunk_hash (one digest -> four min-hash values)
+           -- mirrors dedup._chunk_hash_sql (one digest -> four min-hash values)
            LIST_MIN(LIST_TRANSFORM(sh, x -> SUBSTR(MD5('0|' || x), 1, 8))) AS mh0,
            LIST_MIN(LIST_TRANSFORM(sh, x -> SUBSTR(MD5('0|' || x), 9, 8))) AS mh1,
            LIST_MIN(LIST_TRANSFORM(sh, x -> SUBSTR(MD5('0|' || x), 17, 8))) AS mh2,
@@ -969,7 +969,7 @@ def q23_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
                             i -> ARRAY_TO_STRING(LIST_SLICE(w, i, i + 2), ' ')) AS sh
       FROM t
     ), sig AS (
-      -- chunked md5 min-hashes mirroring dedup._chunk_hash: hash i is the
+      -- chunked md5 min-hashes mirroring dedup._chunk_hash_sql: hash i is the
       -- 8-hex-char chunk i%4 of MD5((i//4) || '|' || shingle)
       SELECT doc_id, text, sh,
              [LIST_MIN(LIST_TRANSFORM(sh, x -> SUBSTR(MD5('0|' || x), 1, 8))),
@@ -1492,20 +1492,17 @@ def q34_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # which Spark can only plan as a broadcast nested loop — O(n²)
     # comparisons, 20× slower at sf0.1 and fatal at 100 TB.
     emb = _tw(spark, sf_dir, "embeddings")  # r13: pair cosines are scan-fused
-    a = emb.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("va"),
-        similarity.l2_norm(F.col("embedding")).alias("__na"),
-        F.explode(F.sequence(F.col("vec_id") + 1, F.col("vec_id") + 8)).alias("id_b"),
+    norm = similarity._l2_sql("embedding")
+    a = emb.selectExpr(
+        "vec_id AS id_a",
+        "embedding AS va",
+        f"{norm} AS __na",
+        "explode(sequence(vec_id + 1, vec_id + 8)) AS id_b",
     )
-    b = emb.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("vb"),
-        similarity.l2_norm(F.col("embedding")).alias("__nb"),
-    )
+    b = emb.selectExpr("vec_id AS id_b", "embedding AS vb", f"{norm} AS __nb")
     pairs = a.join(b, "id_b")
-    cos = F.round(
-        similarity.pair_cosine(F.col("va"), F.col("vb"), F.col("__na"), F.col("__nb")), 6
+    cos = F.expr(
+        f"round({similarity._pair_cosine_sql('va', 'vb', '__na', '__nb')}, 6)"
     )
     return pairs.withColumn("cosine", cos).filter(F.col("cosine") > 0.2).select(
         "id_a", "id_b", "cosine"
@@ -2847,10 +2844,10 @@ def _lsh_oracle_sql() -> str:
 
 @register("q49_lsh_ann", _lsh_oracle_sql())
 def q49_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # default scorer is the per-bucket GEMM path (similarity.lsh_topk_gemm):
-    # one float64 BLAS matmul per (table, bucket) Arrow batch, only top-k
-    # rows cross the Python/JVM boundary — ~4.5x the all-JVM fold variant
-    # (lsh_topk_fold, kept for bit-parity and asserted equivalent in
+    # lsh_topk scores per bucket with GEMM: one float64 BLAS matmul per
+    # (table, bucket) Arrow batch, only top-k rows cross the Python/JVM
+    # boundary — ~4.5x the all-JVM fold (similarity.lsh_topk_fold, the
+    # test reference it is asserted equal to in
     # tests/test_dedup_similarity_text.py::test_lsh_gemm_matches_fold_path).
     emb = _t(spark, sf_dir, "embeddings")
     return similarity.lsh_topk(emb, "vec_id", "embedding", planes=_lsh_planes(), k=3)

@@ -26,12 +26,11 @@ batch run is the oracle for the streaming run.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pride_spark.operators.dedup import minhash_signature, word_shingles
+from pride_spark.operators.dedup import jaccard_of_sets_sql, minhash_signature, word_shingles
 from pride_spark.operators.lsh_common import array_band_digests
-from pride_spark.operators.dedup import jaccard_of_sets
 
 
 def dedup_stream_exact(
@@ -85,7 +84,7 @@ def corpus_band_index(
     :func:`flag_stream_corpus_dups` reads BOTH this format and the
     pre-r10 every-row format.
     """
-    sig = minhash_signature(F.col(text_col), num_hashes=num_hashes, shingle_n=shingle_n)
+    sig = minhash_signature(text_col, num_hashes=num_hashes, shingle_n=shingle_n)
     # the shared in-row banding key (lsh_common): BOTH sides of the
     # stream-static join must compute the identical digest format or the
     # equi-join silently matches nothing
@@ -95,7 +94,7 @@ def corpus_band_index(
         .select(
             F.col(id_col).alias("corpus_id"),
             digs.alias("digs_c"),
-            F.array_distinct(word_shingles(F.col(text_col), shingle_n)).alias("__sh"),
+            F.array_distinct(word_shingles(text_col, shingle_n)).alias("__sh"),
         )
         .select(
             "corpus_id", "digs_c", "__sh",
@@ -137,7 +136,7 @@ def flag_stream_corpus_dups(
     state store forever.  Verify is exact n-gram Jaccard against the
     index's carried shingle sets.
     """
-    sig = minhash_signature(F.col(text_col), num_hashes=num_hashes, shingle_n=shingle_n)
+    sig = minhash_signature(text_col, num_hashes=num_hashes, shingle_n=shingle_n)
     # the shared in-row banding key (lsh_common): BOTH sides of the
     # stream-static join must compute the identical digest format or the
     # equi-join silently matches nothing
@@ -146,7 +145,7 @@ def flag_stream_corpus_dups(
         docs.filter(F.col(text_col).isNotNull())
         .select(
             F.col(id_col).alias("id"),
-            F.array_distinct(word_shingles(F.col(text_col), shingle_n)).alias("sh_new"),
+            F.array_distinct(word_shingles(text_col, shingle_n)).alias("sh_new"),
             digs.alias("digs_n"),
         )
         .select(
@@ -178,7 +177,7 @@ def flag_stream_corpus_dups(
         .select(
             "id",
             F.col("corpus_id").alias("match_id"),
-            F.round(jaccard_of_sets(F.col("sh_new"), F.col("sh")), 6).alias("jaccard"),
+            F.expr(f"round({jaccard_of_sets_sql('sh_new', 'sh')}, 6) AS jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
     )

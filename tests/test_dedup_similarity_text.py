@@ -18,10 +18,10 @@ def test_exact_dedup(spark):
 
 def test_word_shingles(spark):
     df = spark.createDataFrame([("a b c d",)], "t string")
-    got = df.select(dedup.word_shingles(F.col("t"), 3).alias("s")).first()["s"]
+    got = df.select(dedup.word_shingles("t", 3).alias("s")).first()["s"]
     assert got == ["a b c", "b c d"]
     short = spark.createDataFrame([("a b",)], "t string")
-    assert short.select(dedup.word_shingles(F.col("t"), 3).alias("s")).first()["s"] == ["a b"]
+    assert short.select(dedup.word_shingles("t", 3).alias("s")).first()["s"] == ["a b"]
 
 
 def test_minhash_identical_docs_share_signature(spark):
@@ -53,7 +53,7 @@ def test_simhash_close_docs_close_hashes(spark):
     mutated = " ".join(f"w{i}" for i in range(99)) + " zz"
     other = " ".join(f"x{i}" for i in range(100))
     df = spark.createDataFrame([(1, doc), (2, mutated), (3, other)], "id long, t string")
-    h = {r["id"]: r["h"] for r in df.select("id", dedup.simhash64(F.col("t")).alias("h")).collect()}
+    h = {r["id"]: r["h"] for r in df.select("id", dedup.simhash64("t").alias("h")).collect()}
 
     def hamming(a, b):
         return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
@@ -210,9 +210,7 @@ def test_widen_shared_helper_and_parts_hint(spark):
     ``parts`` hint skips the build-time RDD probe and must produce the
     same plan decision."""
     from pride_spark.operators.partitioning import widen
-    from pride_spark.operators.similarity import _widen  # back-compat alias
 
-    assert _widen is widen
     df = spark.range(10).coalesce(1)
     want = spark.sparkContext.defaultParallelism
     probed = widen(df)
@@ -255,7 +253,7 @@ def test_simhash_md5_close_docs_close_hashes(spark):
     mutated = " ".join(f"w{i}" for i in range(99)) + " zz"
     other = " ".join(f"x{i}" for i in range(100))
     df = spark.createDataFrame([(1, doc), (2, mutated), (3, other)], "id long, t string")
-    h = {r["id"]: r["h"] for r in df.select("id", dedup.simhash_md5(F.col("t")).alias("h")).collect()}
+    h = {r["id"]: r["h"] for r in df.select("id", dedup.simhash_md5("t").alias("h")).collect()}
 
     def hamming(a, b):
         return bin((a ^ b) & 0xFFFFFFFFFFFFFFFF).count("1")
@@ -292,7 +290,7 @@ def test_simhash_df_matches_in_row_fold(spark):
     for variant, col_fn in [("md5", dedup.simhash_md5), ("xx64", dedup.simhash64)]:
         fold = {
             r["doc_id"]: r["h"]
-            for r in docs.select("doc_id", col_fn(F.col("text")).alias("h")).collect()
+            for r in docs.select("doc_id", col_fn("text").alias("h")).collect()
         }
         agg = {
             r["id"]: r["simhash"]
@@ -344,13 +342,13 @@ def test_lsh_gemm_matches_fold_path(spark):
     ]
     fold = {
         (r["query_id"], r["rank"]): (r["nbr_id"], r["cosine"])
-        for r in similarity.lsh_topk(
-            emb, "vec_id", "embedding", tables, k=3, scorer="fold"
+        for r in similarity.lsh_topk_fold(
+            emb, "vec_id", "embedding", tables, k=3
         ).collect()
     }
     gemm = {
         (r["query_id"], r["rank"]): (r["nbr_id"], r["cosine"])
-        for r in similarity.lsh_topk_gemm(
+        for r in similarity.lsh_topk(
             emb, "vec_id", "embedding", tables, k=3
         ).collect()
     }
@@ -371,7 +369,7 @@ def test_lsh_gemm_skewed_bucket_and_zero_vectors(spark):
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
     planes = [[[0.5, -0.1, 0.3]]]  # 1 table, 1 plane -> 2 buckets max
-    out = similarity.lsh_topk_gemm(
+    out = similarity.lsh_topk(
         df, "vec_id", "embedding", planes, k=2, block_rows=8
     ).collect()
     by_q = {}
@@ -473,7 +471,7 @@ def test_pq_adc_matches_numpy_and_seeded_codebooks_deterministic(spark):
     enc = (
         emb.orderBy("vec_id")
         .limit(2)
-        .select("vec_id", similarity.pq_encode_expr(F.col("embedding"), b1).alias("c"))
+        .select("vec_id", similarity.pq_encode_expr("embedding", b1).alias("c"))
         .collect()
     )
     assert list(enc[1]["c"]) == codes_ref
@@ -485,7 +483,11 @@ def test_pq_adc_matches_numpy_and_seeded_codebooks_deterministic(spark):
     row = spark.createDataFrame(
         [(list(map(float, q)), codes_ref)], "q array<double>, c array<int>"
     )
-    adc = row.select(similarity.pq_adc_expr(F.col("q"), F.col("c"), b1).alias("a")).first()["a"]
+    adc = (
+        row.select(similarity.pq_luts_expr("q", b1).alias("l"), "c")
+        .select(similarity.pq_adc_from_luts("l", "c", m=len(b1)).alias("a"))
+        .first()["a"]
+    )
     assert abs(adc - adc_ref) < 1e-9
 
 
@@ -516,7 +518,7 @@ def test_pq_topk_rerank_recall_and_precomputed_codes(spark):
     # same raw-ADC result as inline encode
     codes_df = emb.select(
         F.col("vec_id").alias("nbr_id"),
-        similarity.pq_encode_expr(F.col("embedding"), books).alias("codes"),
+        similarity.pq_encode_expr("embedding", books).alias("codes"),
     )
     raw_inline = {
         tuple(r)
@@ -686,12 +688,85 @@ def test_pq_train_order_by_id_matches_engine_free_replica(spark):
     assert spark_books == _pq_trained_books()
 
 
-def test_sql_text_path_equals_column_path(spark):
-    """The one-py4j-call SQL-text builders (str column-name input) must
-    produce byte-identical results to the legacy Column-tree builders —
-    same fold order, same literal parse (repr round-trip + correctly-
-    rounded double parse).  Covers lit_vec against denormal/extreme
-    values and all three centroid/codebook expression builders."""
+def _fold_dot(xs, ys) -> float:
+    """The SQL ``aggregate(zip_with(...))`` dot, replayed as an explicit
+    left-to-right loop over Python floats."""
+    acc = 0.0
+    for x, y in zip(xs, ys):
+        acc = acc + float(x) * float(y)
+    return acc
+
+
+def _spark_sorted(entries):
+    """Sort ``(double, id)`` pairs as ``array_sort`` orders the builders'
+    structs: Spark's double order (NaN greatest, -0.0 == 0.0), ties to
+    the lower id."""
+    import math
+
+    return sorted(
+        entries, key=lambda e: (math.isnan(e[0]), 0.0 if math.isnan(e[0]) else e[0], e[1])
+    )
+
+
+def _assert_exact(got, want):
+    """Element-wise exact equality of nested lists of doubles/ints: NaN
+    matches NaN, and a zero must carry the same sign."""
+    import math
+
+    if isinstance(want, (list, tuple)):
+        assert len(got) == len(want), (got, want)
+        for g, w in zip(got, want):
+            _assert_exact(g, w)
+    elif isinstance(want, float) and math.isnan(want):
+        assert math.isnan(got), (got, want)
+    else:
+        assert got == want and math.copysign(1, got) == math.copysign(1, want), (got, want)
+
+
+def _assert_builders_match_python(df, cents, books):
+    """``_nearest_centroids_expr``, ``pq_encode_expr`` and ``pq_luts_expr``
+    against a pure-Python replay of the same arithmetic.  The centroid
+    norms and codebook squared norms are the builders' own Python-side
+    constants (rendered as literals), so the replay computes them with
+    the builders' formulas."""
+    nearest, order = similarity._nearest_centroids_expr("embedding", cents)
+    rows = df.select(
+        "embedding",
+        nearest.alias("n"),
+        order.alias("o"),
+        similarity.pq_encode_expr("embedding", books).alias("c"),
+        similarity.pq_luts_expr("embedding", books).alias("l"),
+    ).collect()
+    norms = [max(sum(x * x for x in c) ** 0.5, 1e-12) for c in cents]
+    for r in rows:
+        v = list(r["embedding"])
+        want_o = _spark_sorted(
+            [(-_fold_dot(v, c) / norms[ci], ci) for ci, c in enumerate(cents)]
+        )
+        assert r["n"] == want_o[0][1]
+        _assert_exact([(e["neg"], e["cid"]) for e in r["o"]], want_o)
+        codes, luts = [], []
+        for j, book in enumerate(books):
+            sub = len(book[0])
+            s = v[j * sub : (j + 1) * sub]
+            codes.append(
+                _spark_sorted(
+                    [
+                        (round(sum(x * x for x in c), 10) - 2.0 * _fold_dot(s, c), ci)
+                        for ci, c in enumerate(book)
+                    ]
+                )[0][1]
+            )
+            luts.append([_fold_dot(s, c) for c in book])
+        assert list(r["c"]) == codes
+        _assert_exact([list(x) for x in r["l"]], luts)
+
+
+def test_sql_text_builders_match_python_reference(spark):
+    """The SQL-text centroid/codebook builders equal a pure-Python replay
+    EXACTLY: same left-to-right fold, same literal parse (repr round-trip
+    + correctly-rounded double parse).  Covers lit_vec against
+    denormal/extreme values."""
     import struct
 
     # lit_vec bit-exactness over extremes
@@ -708,32 +783,15 @@ def test_sql_text_path_equals_column_path(spark):
         [[((m * 7 + c * 3 + j) % 9 - 4) / 5.0 for j in range(4)] for c in range(3)]
         for m in range(2)
     ]
-
-    n_sql, o_sql = similarity._nearest_centroids_expr("embedding", cents)
-    n_col, o_col = similarity._nearest_centroids_expr(F.col("embedding"), cents)
-    a = df.select("vec_id", n_sql.alias("n"), o_sql.alias("o")).orderBy("vec_id").collect()
-    b = df.select("vec_id", n_col.alias("n"), o_col.alias("o")).orderBy("vec_id").collect()
-    assert a == b
-
-    e_sql = df.select("vec_id", similarity.pq_encode_expr("embedding", books).alias("c"))
-    e_col = df.select(
-        "vec_id", similarity.pq_encode_expr(F.col("embedding"), books).alias("c")
-    )
-    assert e_sql.orderBy("vec_id").collect() == e_col.orderBy("vec_id").collect()
-
-    l_sql = df.select("vec_id", similarity.pq_luts_expr("embedding", books).alias("l"))
-    l_col = df.select(
-        "vec_id", similarity.pq_luts_expr(F.col("embedding"), books).alias("l")
-    )
-    assert l_sql.orderBy("vec_id").collect() == l_col.orderBy("vec_id").collect()
+    _assert_builders_match_python(df, cents, books)
 
 
 def test_sql_text_non_finite_literals(spark):
     """r8 (ADVICE): repr renders NaN/Infinity as ``nan``/``inf`` which the
     SQL parser rejects — degenerate input vectors can put non-finite
     values into centroids/codebooks, so _d must fall back to the
-    string-cast forms and keep the SQL-text path crash-free AND equal to
-    the Column-tree path."""
+    string-cast forms and keep the SQL-text builders crash-free AND equal
+    to the Python replay (NaN sorts greatest)."""
     import math
 
     nan, inf = float("nan"), float("inf")
@@ -744,19 +802,9 @@ def test_sql_text_non_finite_literals(spark):
     rows = [(i, [float(i + j) for j in range(8)]) for i in range(10)]
     df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
     cents = [[nan] * 8, [1.0] * 8, [inf, 1.0, 1.0, 1.0, 1.0, 1.0, 1.0, -inf]]
-    n_sql, o_sql = similarity._nearest_centroids_expr("embedding", cents)
-    n_col, o_col = similarity._nearest_centroids_expr(F.col("embedding"), cents)
-    a = df.select("vec_id", n_sql.alias("n"), o_sql.alias("o")).orderBy("vec_id").collect()
-    b = df.select("vec_id", n_col.alias("n"), o_col.alias("o")).orderBy("vec_id").collect()
-    assert repr(a) == repr(b)  # repr: NaN == NaN field-wise
-
     books = [[[nan, 1.0, 2.0, 3.0], [0.0] * 4, [inf, 0.0, 0.0, 0.0]],
              [[1.0] * 4, [-inf, 2.0, 2.0, 2.0], [0.5] * 4]]
-    e_sql = df.select("vec_id", similarity.pq_encode_expr("embedding", books).alias("c"))
-    e_col = df.select(
-        "vec_id", similarity.pq_encode_expr(F.col("embedding"), books).alias("c")
-    )
-    assert e_sql.orderBy("vec_id").collect() == e_col.orderBy("vec_id").collect()
+    _assert_builders_match_python(df, cents, books)
 
 
 def test_ivf_topk_pretrained_quantizer_full_probe_exact(spark):
@@ -797,8 +845,8 @@ def test_lsh_gemm_string_ids(spark):
 
     rng = _random.Random(7)
     planes = [[rng.gauss(0, 1) for _ in range(64)] for _ in range(3)]  # one table
-    gemm = similarity.lsh_topk(emb, "sid", "embedding", planes, k=3, scorer="gemm")
-    fold = similarity.lsh_topk(emb, "sid", "embedding", planes, k=3, scorer="fold")
+    gemm = similarity.lsh_topk(emb, "sid", "embedding", planes, k=3)
+    fold = similarity.lsh_topk_fold(emb, "sid", "embedding", planes, k=3)
     g = {(r["query_id"], r["nbr_id"], r["rank"]) for r in gemm.collect()}
     f = {(r["query_id"], r["nbr_id"], r["rank"]) for r in fold.collect()}
     assert g == f and g
@@ -808,7 +856,7 @@ def test_hyperplane_bucket_rejects_over_63_planes(spark):
     from pride_spark.operators import similarity
 
     with pytest.raises(ValueError, match="63"):
-        similarity.hyperplane_bucket(F.col("v"), [[1.0, 0.0]] * 64)
+        similarity.hyperplane_bucket("v", [[1.0, 0.0]] * 64)
 
 
 def test_pq_index_vectors_partition_pruned(spark, tmp_path):
@@ -904,7 +952,7 @@ def test_shingle_rows_matches_word_shingles(spark):
         want = sorted(
             (r["id"], sh)
             for r in df.filter(F.col("t").isNotNull())
-            .select("id", dedup.word_shingles(F.col("t"), n).alias("shs"))
+            .select("id", dedup.word_shingles("t", n).alias("shs"))
             .collect()
             for sh in r["shs"]
         )

@@ -8,8 +8,9 @@ with a unified diff.  A SQL-text re-rendering of a Column-API builder
 (the r13/r14 plan-construction optimization) must come out IDENTICAL —
 this is the equivalence evidence the oracle gate then confirms on data.
 
-Usage:
+Usage (no query names: every registry query; exit 1 on any DIFFERENT):
     python tools/plan_normdiff.py --ref HEAD q13_dedup_exact q24_lsh_near_dup
+    python tools/plan_normdiff.py --ref HEAD --sf-dir /path/to/sf0.01
 """
 
 from __future__ import annotations
@@ -64,7 +65,7 @@ def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--ref", default="HEAD")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("queries", nargs="+")
+    ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
     ref_root = tempfile.mkdtemp(prefix=f"pn_{args.ref.replace('/', '_')}_")
@@ -73,7 +74,8 @@ def main() -> int:
     )
     subprocess.run(["tar", "-x", "-C", ref_root], input=tar.stdout, check=True)
 
-    _, session0 = _load_registry(REPO)
+    registry0, session0 = _load_registry(REPO)
+    names = args.queries or list(registry0.queries())
     spark = session0.get_spark(
         "plan-normdiff",
         extra_conf={"spark.ui.enabled": "false", "spark.ui.showConsoleProgress": "false"},
@@ -83,7 +85,7 @@ def main() -> int:
     def plans(root: str) -> dict[str, str]:
         registry, session = _load_registry(root)
         out = {}
-        for q in args.queries:
+        for q in names:
             df = registry.queries()[q](spark, args.sf_dir)
             out[q] = normalize(df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
@@ -94,7 +96,7 @@ def main() -> int:
     work = plans(REPO)
     ref = plans(ref_root)
     rc = 0
-    for q in args.queries:
+    for q in names:
         if work[q] == ref[q]:
             print(f"{q}: IDENTICAL")
         else:
