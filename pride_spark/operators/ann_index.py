@@ -264,8 +264,8 @@ def search_ivf_index(
     # un-persisted plan would re-execute the caller's whole query
     # pipeline per use — with a NONDETERMINISTIC source the collected
     # cids could even disagree with the joined rows and silently drop
-    # candidates (r10 review).  register_pinned: released by
-    # pinned_scope / release_cached_state.
+    # candidates (r10 review).  Released at the caller's pinned_scope
+    # exit or by release_cached_state.
     probed = register_pinned(probed.persist())
     # the probed-cid set is bounded by n_centroids — one tiny job turns it
     # into a STATIC partition filter the parquet scan prunes on (a join
@@ -348,7 +348,7 @@ def search_ivf_pq_index(
     (asserted in tests alongside the ``PartitionFilters`` pruning).
 
     Storage contract: same as :func:`search_ivf_index` — one probe frame
-    is pinned per call; wrap repeated searches in ``pinned_scope`` (or
+    is pinned per call; wrap each search+action in ``pinned_scope`` (or
     call ``release_cached_state`` between batches) so pins don't
     accumulate over a long session (r10 advice)."""
     import warnings

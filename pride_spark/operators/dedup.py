@@ -384,9 +384,9 @@ def near_dedup_minhash(
     # two ids + two 32-char digests) frame so the candidate subtree — the
     # dominant cost — executes once.  Size is bounded by the candidate
     # count, which the bucket cap bounds on adversarial corpora.  The
-    # returned plan reads it, so it stays pinned until driver GC — wrap
-    # call+action in ``session.pinned_scope()`` for deterministic
-    # cleanup in long-lived drivers.
+    # returned plan reads it, so it stays pinned until the caller's
+    # ``session.pinned_scope()`` exit (wrap call+action) or
+    # ``session.release_cached_state``.
     from pyspark.storagelevel import StorageLevel
 
     from pride_spark.session import register_pinned

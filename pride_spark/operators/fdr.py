@@ -27,7 +27,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pride_spark.session import checkpoint_handle, local_frame, register_pinned, track_cached
+from pride_spark.session import checkpoint, local_frame, register_pinned
 
 _KEY, _PID = "__fdr_key", "__fdr_pid"
 
@@ -69,15 +69,18 @@ def add_fdr_qvalue(
     .. note:: **The global two-pass path MATERIALIZES eagerly.**  Its
        two boundary collects (per-bucket totals + per-bucket minima) are
        inherent to the shape, and the returned frame is an eager
-       ``localCheckpoint`` so both intermediate caches can be released
+       ``session.checkpoint`` so both intermediate caches can be released
        immediately instead of pinning executor storage for the session's
        lifetime (cache hygiene beats lazy purity here; decision recorded
-       in ARCHITECTURE.md).  A plan-only caller — one that only wants to
-       compose/``explain`` without paying a full materialization yet —
-       can pass ``lazy=True``: the checkpoint is skipped and the plan
+       in ARCHITECTURE.md); the caller's ``session.pinned_scope`` exit
+       or ``session.release_cached_state`` frees the checkpoint.  A
+       plan-only caller — one that only wants to compose/``explain``
+       without paying a full materialization yet — can pass
+       ``lazy=True``: the checkpoint is skipped and the plan
        returned lazily, at the cost of the two intermediate caches
        staying pinned until the result is computed and
-       ``session.release_cached_state`` (or session end) frees them.
+       ``session.pinned_scope`` exit or ``session.release_cached_state``
+       frees them.
        The per-group and non-scalable paths are always lazy; ``lazy``
        has no effect there.
     """
@@ -252,24 +255,22 @@ def _global_two_pass(
     if lazy:
         # plan-only escape hatch (see add_fdr_qvalue docstring): no
         # checkpoint, no materialization; the two intermediate caches
-        # stay pinned (they're register_pinned, so release_cached_state
+        # stay pinned (the caller's pinned_scope or release_cached_state
         # frees them) because unpersisting here would make first use
         # recompute the whole two-pass pipeline cacheless.
         return out
     # materialize the result once so BOTH intermediate caches can be
     # released now — a bare persist here would pin executor storage for the
-    # session's lifetime; the checkpoint blocks are instead freed by the
-    # ContextCleaner when `out` is garbage collected.  eager=True does cost
-    # plan-only callers a full materialization, but any caller already paid
-    # the two boundary collects above (inherent to the two-pass shape), and
-    # eager=False would force unpersisting the inputs before the checkpoint
-    # materializes — recomputing the whole pipeline cacheless on first use
+    # session's lifetime; the checkpoint is registered like every other
+    # (session.checkpoint), so pinned_scope / release_cached_state free it.
+    # eager=True does cost plan-only callers a full materialization, but
+    # any caller already paid the two boundary collects above (inherent to
+    # the two-pass shape), and eager=False would force unpersisting the
+    # inputs before the checkpoint materializes — recomputing the whole
+    # pipeline cacheless on first use
     _t0 = time.time()
-    out = out.localCheckpoint(eager=True)
+    out = checkpoint(out, eager=True)
     _phase("qvalue_checkpoint", _t0)
-    # checkpoint RDDs live outside the SQL CacheManager: register the
-    # handle so release_cached_state can free it without _jsc
-    track_cached(checkpoint_handle(out))
     with_fdr.unpersist()
     part.unpersist()
     return out

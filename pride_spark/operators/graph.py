@@ -27,7 +27,9 @@ Scale notes:
   every round of every CC call in the executor storage pool and evict
   everyone else's cache (observed: q47 24s idle vs 131s at the tail of
   a stress sequence).  Only ``base`` and the final round stay pinned —
-  they feed the returned plan;
+  they feed the returned plan — and, like every checkpoint, they are
+  made by ``session.checkpoint``, so the caller's ``pinned_scope`` or
+  ``release_cached_state`` frees them;
 - convergence is a direct star-forest test (one grouped scalar pass
   per round, r13) — row data never reaches the driver, and no
   confirmation round is needed once the forest forms.
@@ -38,18 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-from ..session import checkpoint_handle as _checkpoint_rdd  # noqa: E402
-from ..session import track_cached  # noqa: E402
-
-
-def _unpersist_handle(rdd) -> None:
-    """Non-blocking unpersist of a tracked checkpoint handle; never raises
-    (hygiene must not fail the computation)."""
-    try:
-        rdd.unpersist(False)
-    except Exception:
-        pass
+from ..session import _rdd_handle, _unpin, checkpoint
 
 #: SQL-text rendering note (r14): the star steps and the convergence
 #: test run PER ROUND, so their Column-API plan construction (~0.2 s of
@@ -281,18 +272,18 @@ def connected_components(
         # and the rounds dedup the ≤ num_partitions residual copies per
         # node at small-star as always.  keep_singletons preserves
         # self-loop-only nodes for the node table below.
-        base = _local_contract(raw, keep_singletons=True).localCheckpoint(eager=False)
+        base = _local_contract(raw, keep_singletons=True)
     elif edges_unique:
         # caller-declared distinct pairs (see docstring): the base dedup
         # shuffle is pure overhead — q48's banded first-collision pair
         # lists hit exactly this path (struct nodes skip pre-contraction)
-        base = raw.localCheckpoint(eager=False)
+        base = raw
     else:
-        base = raw.distinct().localCheckpoint(eager=False)  # feeds every round
-    track_cached(_checkpoint_rdd(base))  # pinned past return: session sweep frees it
+        base = raw.distinct()
+    base = checkpoint(base)  # feeds every round; pinned past return
     auto = skew_safe == "auto"
     cur = base.filter(F.col("u") != F.col("v"))
-    prev_ckpt = None
+    prev = None
 
     # Star-forest convergence test (r13 optimization round): an edge
     # list whose edges all point strictly DOWN (v < u) is a star forest
@@ -368,13 +359,12 @@ def connected_components(
             "u != v AS real",
             "v >= u AS __up",
         ).select("e.node", "e.s", "real", "__up")
-        nodes_deg = ex0.groupBy("node").agg(
+        nodes_deg = checkpoint(ex0.groupBy("node").agg(
             F.expr("count(1) AS __deg"),
             F.expr("sum(CASE WHEN s = 0 AND real THEN 1 ELSE 0 END) AS cu"),
             F.expr("max(s = 1 AND real) AS has_v"),
             F.expr("max(real AND __up) AS up"),
-        ).localCheckpoint(eager=False)
-        track_cached(_checkpoint_rdd(nodes_deg))
+        ))
         row0 = nodes_deg.agg(  # materializes base + nodes_deg
             F.expr("max(__deg) AS maxd"),
             F.expr("max(cu) AS max_cu"),
@@ -391,11 +381,11 @@ def connected_components(
         mode = bool(skew_safe)
         converged = pre_contract and _is_forest(_forest_row(cur, False))
 
-    # Checkpoint hygiene tracks each round's checkpoint RDD by DIRECT
-    # handle (the LogicalRDD's rdd — see _checkpoint_rdd), so concurrent
-    # driver threads persisting their own RDDs are never touched.  Only
-    # the immediately superseded round is freed; ``base`` and the final
-    # round (both feeding the returned plan) stay pinned.
+    # Checkpoint hygiene frees each superseded round by its DIRECT RDD
+    # handle (session._rdd_handle), so concurrent driver threads
+    # persisting their own RDDs are never touched.  Only the immediately
+    # superseded round is freed; ``base`` and the final round (both
+    # feeding the returned plan) stay pinned.
     prev_desc = spark.sparkContext.getLocalProperty("spark.job.description")
     # ``converged`` above probed only the PRE-CONTRACTED base: the local
     # union-find emits min-oriented spanning stars, so a base whose
@@ -417,9 +407,7 @@ def connected_components(
         sym = cur.select("u", "v").union(
             cur.selectExpr("v AS u", "u AS v")
         ).selectExpr("u AS a", "v AS b")
-        cur = _small_star(
-            _large_star(sym, mode, probing), mode, probing
-        ).localCheckpoint(eager=False)
+        cur = checkpoint(_small_star(_large_star(sym, mode, probing), mode, probing))
         # Star-forest test — one job that also materializes this
         # round's lazy checkpoint.  While auto mode is probing, the
         # rows carry ``__deg`` (large-star partition sizes, computed for
@@ -430,13 +418,9 @@ def connected_components(
         # free it instead of waiting for a driver GC.  MUST happen after
         # the aggregate above: cur's checkpoint data exists only from
         # that materialization on, and prev's is unrecoverable.
-        if prev_ckpt is not None:
-            _unpersist_handle(prev_ckpt)
-        prev_ckpt = _checkpoint_rdd(cur)
-        # the loop frees superseded rounds itself; the FINAL round's
-        # checkpoint outlives the return (the plan reads it) — keep it
-        # in the session sweep registry (re-unpersist is a no-op)
-        track_cached(prev_ckpt)
+        if prev is not None:
+            _unpin(_rdd_handle(prev))
+        prev = cur
         if probing and (row["maxd"] or 0) > skew_threshold:
             mode = True
         converged = _is_forest(row)

@@ -34,7 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pride_spark.session import local_frame
+from pride_spark.session import checkpoint, local_frame
 
 GROUP_SCHEMA = StructType(
     [
@@ -199,7 +199,7 @@ def _occams_razor_distributed(
     absorption typically shrinks the table by orders of magnitude).
     """
     spark = grouped.sparkSession
-    grouped = grouped.localCheckpoint(eager=False)  # feeds 4 branches; cut lineage
+    grouped = checkpoint(grouped)  # feeds 4 branches; cut lineage
     ex = grouped.select("groupId", F.explode("peptides").alias("p"))
     dfreq = ex.groupBy("p").agg(F.count("*").alias("df"))
     rarest = (

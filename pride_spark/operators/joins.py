@@ -128,8 +128,9 @@ def global_row_index(
     factor 50: first-run 7.7 s pinned vs 4.0 s unpinned, warm runs
     equal — r11 A/B).  The bucket expression is deterministic, so the
     pin is a pure performance choice, never a correctness requirement;
-    long-lived ``pin=True`` callers release it with ``pinned_scope`` /
-    ``release_cached_state``.
+    ``pin=True`` callers release it with a ``pinned_scope`` around the
+    call (the frame recomputes from lineage afterwards) or with
+    ``release_cached_state``.  No checkpoint is made here.
 
     Falls back to the single-partition global window only when the leading
     order column is not numeric/temporal (order-preserving bucket keys need
@@ -616,8 +617,8 @@ def range_join(
         # NULL payload values cannot re-admit a matched row.  The id is
         # nondeterministic across re-evaluations, and the matched and
         # left_anti branches below both read this subtree — persist so
-        # __pid is computed exactly once (register_pinned frees it at
-        # the caller's pinned_scope exit).
+        # __pid is computed exactly once (the caller's pinned_scope exit
+        # or release_cached_state frees it).
         pt = register_pinned(
             pt.withColumn("__pid", F.monotonically_increasing_id()).persist()
         )

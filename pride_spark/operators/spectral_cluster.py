@@ -442,8 +442,8 @@ def cluster_spectra(
     # the persist, bin_peaks_sql over the source runs twice.  The returned
     # plan still reads this frame, so the operator cannot unpersist it;
     # long-lived drivers should wrap call+action in
-    # ``session.pinned_scope()`` (registered below) or sweep with
-    # ``session.release_cached_state``.
+    # ``session.pinned_scope()``, which frees this frame and the CC
+    # checkpoints alike, or sweep with ``session.release_cached_state``.
     base = _binned_frame(
         spectra, key_col, masses_col, intensities_col, precursor_col, top_k,
         bin_width,

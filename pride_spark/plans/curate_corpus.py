@@ -186,14 +186,12 @@ def curate_corpus(
 
     import contextlib
 
-    from pride_spark.session import tracking_scope
+    from pride_spark.session import pinned_scope
 
-    # tracking_scope (not pinned_scope): the near-dup stage's CC round
-    # checkpoints register with track_cached only — a pinned_scope would
-    # free the pair cache but leak the checkpoint RDDs.  Safe here
-    # because with output_dir the caller gets a read-back frame, never
-    # the live (checkpoint-dependent) plan.
-    scope = tracking_scope() if output_dir is not None else contextlib.nullcontext()
+    # the scope frees the pair cache AND the CC checkpoints; safe because
+    # with output_dir the caller gets a read-back frame, never the live
+    # (checkpoint-dependent) plan
+    scope = pinned_scope() if output_dir is not None else contextlib.nullcontext()
     with scope:
         drops = near_dup_drop_ids(deduped, cfg)
         curated = deduped.join(drops, cfg.id_col, "left_anti")

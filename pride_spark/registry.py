@@ -40,8 +40,7 @@ from pride_spark.operators.partitioning import widen as _widen
 from pride_spark.sinks.mgf import mgf_record
 from pride_spark.operators.joins import contains_first_match, positional_zip_join, semi_join_members
 from pride_spark.operators.rollup import distinguishable_categories, protein_rollup
-from pride_spark import session as _session
-from pride_spark.session import register_pinned, tune
+from pride_spark.session import checkpoint, register_pinned, tune
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1084,10 +1083,9 @@ def q26_positional_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the physical plan can reuse.  An earlier plain Window.orderBy here was
     # a single-task sort of the full events table hiding behind the
     # operator's whitelist entry.
-    indexed = global_row_index(
-        ev.select("event_id", "value", "ts"), ("ts", "event_id"), "__pos"
-    ).localCheckpoint(eager=False)
-    _session.track_cached(_session.checkpoint_handle(indexed))
+    indexed = checkpoint(
+        global_row_index(ev.select("event_id", "value", "ts"), ("ts", "event_id"), "__pos")
+    )
     cluster_map = indexed.select(
         F.col("__pos").cast("int").alias("spectrumIndex"),
         (F.col("event_id") % 50).cast("bigint").alias("clusterId"),

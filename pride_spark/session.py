@@ -131,108 +131,47 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic cleanup for operator-pinned intermediates.
+# Storage pins: intermediates an operator pins in executor storage because
+# the RETURNED lazy plan still reads them (near-dup verify's candidate
+# pairs, spectral clustering's binned frame, the CC rounds' and the
+# two-pass FDR's checkpoints).  Only the caller knows when its action has
+# completed; the ContextCleaner frees pins on driver GC eventually, but a
+# long-lived driver accumulates them meanwhile (measured: 131s vs 26s on
+# the same CC query at the tail of a stress sequence).  Four names:
 #
-# Several operators persist an intermediate that the RETURNED lazy plan
-# still reads (near-dup verify scans its candidate pairs twice; spectral
-# clustering's binned frame feeds both the edge subtree and the final
-# singleton fill).  Spark's lazy model means the operator itself cannot
-# unpersist — only the caller knows when its action has completed.  The
-# ContextCleaner frees these on driver GC eventually, but a long-lived
-# driver (query server, notebook) accumulates pins meanwhile (measured:
-# 131s vs 26s on the same CC query at the tail of a stress sequence).
-#
-# ``pinned_scope`` makes the cleanup explicit and precise: operators
-# register every deliberate persist; frames registered inside an active
-# scope are unpersisted (non-blocking) at scope exit.  Registration is
-# per-thread, so concurrent driver threads' scopes never free each
-# other's state — the race that a global before/after persistent-RDD
-# diff would have.  Outside any scope, behavior is unchanged
-# (ContextCleaner / release_cached_state semantics).
+# - :func:`register_pinned` records a pin (persisted frame or checkpoint);
+# - :func:`checkpoint` is the package's only ``localCheckpoint``;
+# - :func:`pinned_scope` frees every pin registered inside it at exit;
+# - :func:`release_cached_state` frees every pin in the session.
 # ---------------------------------------------------------------------------
 
 _scopes = threading.local()
-_track_scopes = threading.local()
 
-
-@contextlib.contextmanager
-def _scope_on(local: threading.local):
-    """The shared scope mechanics behind :func:`tracking_scope` and
-    :func:`pinned_scope` (previously two byte-identical copies — r10
-    review): push a fresh handle list onto the thread-local stack, pop
-    at exit, non-blocking unpersist of everything registered, exceptions
-    swallowed (cleanup must never mask the block's own error)."""
-    stack = getattr(local, "stack", None)
-    if stack is None:
-        stack = local.stack = []
-    handles: list = []
-    stack.append(handles)
-    try:
-        yield
-    finally:
-        stack.pop()
-        for h in handles:
-            try:
-                h.unpersist(False)
-            except Exception:
-                pass
-
-
-@contextlib.contextmanager
-def tracking_scope():
-    """Release EVERYTHING this package registers via :func:`track_cached`
-    inside the block — persisted frames AND checkpoint handles — at exit.
-
-    Stronger than :func:`pinned_scope`: checkpoint RDDs have truncated
-    lineage, so a plan depending on one is NOT recomputable after the
-    scope exits.  Use only when nothing returned from the block is
-    executed again afterwards (e.g. results were written to files inside
-    the block, and callers get a read-back frame).  Scopes nest; each
-    frees only its own registrations."""
-    with _scope_on(_track_scopes):
-        yield
-
-# Session-global registry of every deliberate pin (persisted DataFrames
-# AND localCheckpoint RDD handles — the latter live OUTSIDE the SQL
-# CacheManager, so ``spark.catalog.clearCache()`` cannot see them).
-# :func:`release_cached_state` sweeps and clears it, which is what lets
-# the sweep work from TRACKED HANDLES instead of the private
-# ``_jsc.getPersistentRDDs`` session map (round-5 verdict item).
-# Bounded: past the cap the oldest entries are dropped — their cleanup
-# falls back to the ContextCleaner on driver GC, the pre-tracking
-# behavior, so the cap can never leak more than before.
+# Session-global sweep list of checkpoint RDD handles, which live OUTSIDE
+# the SQL CacheManager (persisted frames need no entry: clearCache drops
+# them all).  Tracking handles lets :func:`release_cached_state` skip the
+# private ``_jsc.getPersistentRDDs`` map.  Bounded: past the cap the
+# oldest entries fall back to the ContextCleaner, like an untracked pin.
 _tracked_lock = threading.Lock()
 _tracked: list = []
 _TRACK_CAP = 4096
 
 
-def track_cached(handle):
-    """Register any handle with ``unpersist`` (a persisted DataFrame, a
-    checkpoint's java RDD) for the session-wide
-    :func:`release_cached_state` sweep.  Returns ``handle``.
-
-    If a :func:`tracking_scope` is active on this thread, the handle is
-    additionally recorded there for release at scope exit."""
-    if handle is None:
-        return handle
-    with _tracked_lock:
-        _tracked.append(handle)
-        if len(_tracked) > _TRACK_CAP:
-            del _tracked[: len(_tracked) - _TRACK_CAP]
-    stack = getattr(_track_scopes, "stack", None)
-    if stack:
-        stack[-1].append(handle)
-    return handle
+def _unpin(handle) -> None:
+    """Non-blocking unpersist that never raises (cleanup must neither fail
+    the computation nor mask its error); a freed handle is a no-op."""
+    try:
+        handle.unpersist(False)
+    except Exception:
+        pass
 
 
-def checkpoint_handle(df):
-    """Java handle of the persisted RDD backing a ``localCheckpoint``-ed
-    DataFrame — the ``LogicalRDD`` plan node's ``rdd`` field.  Tracking
-    the checkpoint DIRECTLY (instead of diffing the global
-    persistent-RDD map before/after, which misattributes a concurrent
-    thread's freshly persisted RDD) makes cleanup safe in multi-threaded
-    drivers.  Returns None when the private plan accessor fails (version
-    drift) — callers then skip tracking rather than guess."""
+def _rdd_handle(df: DataFrame):
+    """Java handle of the RDD behind a checkpointed DataFrame (the
+    ``LogicalRDD`` node's ``rdd``).  Freeing by DIRECT handle never touches
+    a concurrent driver thread's RDDs, unlike a before/after diff of the
+    persistent-RDD map.  None if the private accessor fails (version
+    drift): the pin then goes untracked rather than guessed."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() != "LogicalRDD":
@@ -242,34 +181,58 @@ def checkpoint_handle(df):
         return None
 
 
-def register_pinned(frame):
-    """Record a deliberately persisted intermediate (DataFrame, or any
-    handle with ``unpersist``) against the innermost active
-    :func:`pinned_scope` on this thread.  Returns ``frame`` so call
-    sites can wrap the ``persist()`` expression.  Every registration is
-    ALSO tracked session-globally for :func:`release_cached_state`."""
-    track_cached(frame)
+def register_pinned(handle):
+    """Record a pin — a persisted DataFrame, or a checkpoint RDD handle
+    from :func:`checkpoint` — against the innermost :func:`pinned_scope`
+    on this thread; checkpoint handles also join the session sweep list.
+    Returns ``handle`` so call sites can wrap the ``persist()``."""
+    if handle is None:
+        return handle
+    if not isinstance(handle, DataFrame):
+        with _tracked_lock:
+            _tracked.append(handle)
+            if len(_tracked) > _TRACK_CAP:
+                del _tracked[: len(_tracked) - _TRACK_CAP]
     stack = getattr(_scopes, "stack", None)
     if stack:
-        stack[-1].append(frame)
-    return frame
+        stack[-1].append(handle)
+    return handle
+
+
+def checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df.localCheckpoint(eager)``, registered via :func:`register_pinned`
+    so :func:`pinned_scope` and :func:`release_cached_state` can free it.
+    Every checkpoint in the package goes through here."""
+    out = df.localCheckpoint(eager=eager)
+    register_pinned(_rdd_handle(out))
+    return out
 
 
 @contextlib.contextmanager
 def pinned_scope():
-    """Unpersist every operator-pinned intermediate registered on this
-    thread within the block, once the block exits::
+    """Free every pin registered on this thread within the block —
+    persisted frames AND checkpoints — once the block exits::
 
         with pinned_scope():
             out = cluster_spectra(spectra)
             result = out.collect()   # action completes inside the scope
-        # binned/pairs intermediates are now unpersisted
+        # the binned frame and the CC checkpoints are now freed
 
-    Scopes nest; each frees only its own registrations.  Run the
-    consuming ACTION inside the scope — the returned plan may read the
-    pinned frames, and after exit they recompute from lineage."""
-    with _scope_on(_scopes):
+    Run the consuming ACTION inside the scope: a plan over a checkpoint
+    made in the block cannot recompute after exit (its lineage is cut).
+    Registration is per-thread, so concurrent driver threads never free
+    each other's pins.  Scopes nest; each frees only its own."""
+    stack = getattr(_scopes, "stack", None)
+    if stack is None:
+        stack = _scopes.stack = []
+    handles: list = []
+    stack.append(handles)
+    try:
         yield
+    finally:
+        stack.pop()
+        for h in handles:
+            _unpin(h)
 
 
 def release_cached_state(spark: SparkSession) -> None:
@@ -286,13 +249,13 @@ def release_cached_state(spark: SparkSession) -> None:
     at the tail of a stress sequence, BENCH r3/r4).
 
     Implementation: ``clearCache()`` drops every SQL-cached relation
-    (all ``persist()``-ed DataFrames), then the session-global
-    :func:`track_cached` registry is swept for the pins the CacheManager
-    cannot see — localCheckpoint RDD handles (CC rounds, two-pass row
-    numbering).  Every deliberate pin in this package registers itself,
-    so no private ``_jsc.getPersistentRDDs`` session-map accessor is
-    needed (it was version-fragile and raced concurrent driver threads).
-    Double-unpersist of an already-freed handle is a harmless no-op.
+    (all ``persist()``-ed DataFrames), then the session-global sweep
+    list is freed: the pins the CacheManager cannot see, checkpoint RDD
+    handles (CC rounds, two-pass FDR, row numbering, Occam's-razor
+    groups).  Every checkpoint goes through :func:`checkpoint`, which
+    registers it, so no private ``_jsc.getPersistentRDDs`` session-map
+    accessor is needed (it was version-fragile and raced concurrent
+    driver threads).
 
     .. warning:: Call this only at a QUIESCENT point — no query in
        flight on ANY driver thread.  The sweep is attribution-safe (it
@@ -311,10 +274,7 @@ def release_cached_state(spark: SparkSession) -> None:
         items = _tracked[:]
         _tracked.clear()
     for h in items:
-        try:
-            h.unpersist(False)
-        except Exception:
-            pass
+        _unpin(h)
 
 
 def tune(spark: SparkSession) -> SparkSession:

@@ -257,8 +257,8 @@ def test_cluster_spectra_multi_matches_per_method_runs(spark):
 
 
 def test_pinned_scope_frees_operator_intermediates(spark):
-    """Operators register their deliberate persists; pinned_scope
-    unpersists them at exit (the long-lived-driver leak fix), and the
+    """Operators register their persists and checkpoints; pinned_scope
+    frees them all at exit (the long-lived-driver leak fix), and the
     result computed inside the scope is correct."""
     from pride_spark.session import pinned_scope
 
@@ -271,23 +271,18 @@ def test_pinned_scope_frees_operator_intermediates(spark):
         "usi string, precursorMz double, masses array<double>, intensities array<double>",
     )
 
-    def n_persisted():
-        try:
-            return sc._jsc.getPersistentRDDs().size()
-        except Exception:
-            return None
+    def persisted_ids():
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
 
-    before = n_persisted()
+    before = persisted_ids()
     with pinned_scope():
         out = cluster_spectra(spectra, "usi", method="block")
         assert out.count() == 30
-        inside = n_persisted()
-    after = n_persisted()
-    if before is not None:
-        assert inside > before  # binned frame pinned during the scope
-        # the operator's registered pin is gone; CC's own plan-feeding
-        # checkpoints are governed by its internal hygiene, not the scope
-        assert after < inside
+        inside = persisted_ids()
+    # binned frame and CC checkpoints pinned during the scope ...
+    assert inside - before
+    # ... and no RDD created inside the scope survives it
+    assert persisted_ids() - before == set()
 
 
 def test_rep_collapse_labels_identical_on_duplicated_corpus(spark):

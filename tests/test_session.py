@@ -9,7 +9,9 @@ import warnings
 import pytest
 
 from pride_spark import session as S
-from pride_spark.operators.inference import GROUP_SCHEMA
+from pride_spark.operators.fdr import add_fdr_qvalue
+from pride_spark.operators.graph import connected_components
+from pride_spark.operators.inference import GROUP_SCHEMA, occams_razor
 
 
 class _FakeConf:
@@ -55,20 +57,70 @@ def test_tune_is_silent_when_static_conf_matches(spark):
     )
 
 
+def _package_lines(*needles, skip_session=True):
+    """``file:line`` of every package source line containing a needle."""
+    pkg = pathlib.Path(S.__file__).parent
+    return [
+        f"{p.relative_to(pkg)}:{i}"
+        for p in sorted(pkg.rglob("*.py"))
+        if not (skip_session and p == pkg / "session.py")
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if any(n in line for n in needles)
+    ]
+
+
 def test_create_dataframe_only_in_session_module():
     """A list-backed ``createDataFrame`` plans a Python RDD whose every
     read runs Python-worker tasks; driver-built frames go through
     :func:`session.local_frame` instead, and only it may call
     ``createDataFrame``."""
-    pkg = pathlib.Path(S.__file__).parent
-    offenders = [
-        f"{p.relative_to(pkg)}:{i}"
-        for p in sorted(pkg.rglob("*.py"))
-        if p != pkg / "session.py"
-        for i, line in enumerate(p.read_text().splitlines(), 1)
-        if "createDataFrame(" in line
-    ]
-    assert offenders == []
+    assert _package_lines("createDataFrame(") == []
+
+
+def test_every_checkpoint_goes_through_session_checkpoint():
+    """:func:`session.checkpoint` registers each checkpoint for
+    ``pinned_scope`` and ``release_cached_state``; a direct
+    ``localCheckpoint`` would escape both.  The helpers it replaced
+    stay gone."""
+    assert _package_lines("localCheckpoint(") == []
+    assert _package_lines(
+        "track_cached", "tracking_scope", "checkpoint_handle", skip_session=False
+    ) == []
+
+
+_RELEASE_CASES = {
+    "connected_components": lambda spark: connected_components(
+        spark.createDataFrame([(i, i + 1) for i in range(0, 40, 2)] + [(1, 2)], "src long, dst long")
+    ),
+    "add_fdr_qvalue_two_pass": lambda spark: add_fdr_qvalue(
+        spark.createDataFrame(
+            [(i, float(i % 17), i % 3 == 0) for i in range(200)],
+            "id long, score double, isDecoy boolean",
+        ),
+        "score", "isDecoy", num_range_partitions=4,
+    ),
+    "occams_razor_distributed": lambda spark: occams_razor(
+        spark.createDataFrame(
+            [("pep1", ["P1", "P2"]), ("pep2", ["P1", "P2", "P3"]), ("pep3", ["P5"])],
+            "peptideSequence string, proteinAccessions array<string>",
+        ),
+        max_groups=0,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_RELEASE_CASES))
+def test_release_cached_state_frees_operator_checkpoints(spark, case):
+    """Every operator checkpoint is on the session sweep list: after
+    ``release_cached_state`` no RDD the call persisted is left."""
+
+    def persisted_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    before = persisted_ids()
+    assert _RELEASE_CASES[case](spark).collect()
+    S.release_cached_state(spark)
+    assert persisted_ids() - before == set()
 
 
 _LOCAL_FRAME_CASES = {
