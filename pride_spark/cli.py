@@ -15,6 +15,7 @@ Usage::
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import sys
@@ -250,43 +251,50 @@ def _layout_assay(args) -> str:
     return hashlib.sha1(uuid.uuid4().bytes).hexdigest()
 
 
-def cmd_generate_index_files(args) -> int:
+@contextlib.contextmanager
+def _written_index_outputs(spark, args):
+    """Run the §3.1 composition and write its tables (archive, summary,
+    protein evidence and, on the merged multi-file path, PSM-set
+    provenance) under ``args.output_dir``; yields the output frames.
+
+    Every table (and any later stage reading the archive) derives from
+    one upstream frame — persist it so the parse + FDR + J5 subtree
+    executes once per app, not once per sink.  On the merged path the
+    common ancestor is the PRE-drop ``_merged_archive`` frame: persisting
+    it serves BOTH the post-drop archive and the provenance projection
+    from the cache (Spark's CacheManager substitutes the cached
+    subplan).  Unpersisted when the block exits."""
     from pride_spark.sources.jsonlines import write_jsonlines
 
-    spark = _spark("generate-index-files")
     out = _index_outputs(spark, args)
-    # every output table (summary, proteins, psm_set_provenance, the
-    # layout export's re-writes) derives from one upstream frame — cache
-    # it so the parse + FDR + J5 subtree executes once per app, not once
-    # per sink.  On the merged multi-file path the common ancestor is the
-    # PRE-drop "_merged_archive" frame: persisting it serves BOTH the
-    # post-drop archive and the provenance projection from the cache
-    # (Spark's CacheManager substitutes the cached subplan)
-    base = out.get("_merged_archive", out["archive_spectra"]).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    archive = out["archive_spectra"]
-    write_jsonlines(archive, f"{args.output_dir}/archive_spectra")
-    write_jsonlines(out["summary_spectra"], f"{args.output_dir}/summary_spectra")
-    write_jsonlines(out["protein_evidence"], f"{args.output_dir}/protein_evidence")
-    if "psm_set_provenance" in out:
-        write_jsonlines(
-            out["psm_set_provenance"], f"{args.output_dir}/psm_set_provenance"
-        )
-    if getattr(args, "reference_layout", False):
-        from pride_spark.sinks.layout import export_reference_layout
+    base = out.get("_merged_archive", out["archive_spectra"]).persist()
+    try:
+        for name in (
+            "archive_spectra", "summary_spectra", "protein_evidence", "psm_set_provenance"
+        ):
+            if name in out:
+                write_jsonlines(out[name], f"{args.output_dir}/{name}")
+        yield out
+    finally:
+        base.unpersist()
 
-        written = export_reference_layout(
-            args.output_dir,
-            args.project,
-            _layout_assay(args),
-            archive_spectra=archive,
-            summary_spectra=out["summary_spectra"],
-            protein_evidence=out["protein_evidence"],
-            scratch_dir=getattr(args, "layout_scratch", None),
-        )
-        print(f"reference layout: {len(written)} files under {args.output_dir}/{args.project}")
-    base.unpersist()
+
+def cmd_generate_index_files(args) -> int:
+    spark = _spark("generate-index-files")
+    with _written_index_outputs(spark, args) as out:
+        if getattr(args, "reference_layout", False):
+            from pride_spark.sinks.layout import export_reference_layout
+
+            written = export_reference_layout(
+                args.output_dir,
+                args.project,
+                _layout_assay(args),
+                archive_spectra=out["archive_spectra"],
+                summary_spectra=out["summary_spectra"],
+                protein_evidence=out["protein_evidence"],
+                scratch_dir=getattr(args, "layout_scratch", None),
+            )
+            print(f"reference layout: {len(written)} files under {args.output_dir}/{args.project}")
     print(f"wrote archive/summary/protein tables under {args.output_dir}")
     return 0
 
@@ -354,58 +362,45 @@ def cmd_run_pipeline(args) -> int:
     from pride_spark.sources.jsonlines import read_archive_spectra, write_jsonlines
 
     spark = _spark("run-pipeline")
-    # §3.1 generate_json_index_files
-    out = _index_outputs(spark, args)
-    # archive feeds four downstream stages — materialize once.  Persist
-    # the PRE-drop merged frame when present so psm_set_provenance hits
-    # the cache too (r9 advice); the post-drop archive is a Project on
-    # top that Spark serves from the same cached subplan.
-    base = out.get("_merged_archive", out["archive_spectra"]).persist()
-    archive = out["archive_spectra"]
-    write_jsonlines(archive, f"{args.output_dir}/archive_spectra")
-    write_jsonlines(out["summary_spectra"], f"{args.output_dir}/summary_spectra")
-    write_jsonlines(out["protein_evidence"], f"{args.output_dir}/protein_evidence")
-    if "psm_set_provenance" in out:
-        write_jsonlines(
-            out["psm_set_provenance"], f"{args.output_dir}/psm_set_provenance"
+    # §3.1 generate_json_index_files; the persisted archive feeds four
+    # downstream stages
+    with _written_index_outputs(spark, args) as out:
+        archive = out["archive_spectra"]
+
+        # json_check_validator (F12) — same abort-the-pipeline contract
+        total, valid = spectrum_validity_counts(archive)
+        if valid != total:
+            print(f"ABORT: {total - valid}/{total} archive spectra invalid", file=sys.stderr)
+            return 1
+
+        # convert_to_mgf (K5) — usi-ordered: the export feeds MaraCluster,
+        # whose spectrumIndex assign_clusters zips back by the same order
+        write_mgf(archive, f"{args.output_dir}/export.mgf", order_by="usi")
+
+        # clustering + final_inference_after_clustering (§3.2) — reads the T1
+        # artifact written above: inference's input contract is the archive
+        # JSON schema, not the wider in-memory frame
+        inf = _inference_outputs(
+            spark,
+            read_archive_spectra(spark, f"{args.output_dir}/archive_spectra"),
+            args.clusters_tsv,
         )
+        write_jsonlines(inf["cluster_best"], f"{args.output_dir}/cluster_best")
+        write_jsonlines(inf["winner_spectra"], f"{args.output_dir}/winner_spectra")
+        write_jsonlines(inf["protein_evidence"], f"{args.output_dir}/protein_evidence_final")
+        if getattr(args, "reference_layout", False):
+            from pride_spark.sinks.layout import export_reference_layout
 
-    # json_check_validator (F12) — same abort-the-pipeline contract
-    total, valid = spectrum_validity_counts(archive)
-    if valid != total:
-        print(f"ABORT: {total - valid}/{total} archive spectra invalid", file=sys.stderr)
-        base.unpersist()
-        return 1
-
-    # convert_to_mgf (K5) — usi-ordered: the export feeds MaraCluster,
-    # whose spectrumIndex assign_clusters zips back by the same order
-    write_mgf(archive, f"{args.output_dir}/export.mgf", order_by="usi")
-
-    # clustering + final_inference_after_clustering (§3.2) — reads the T1
-    # artifact written above: inference's input contract is the archive
-    # JSON schema, not the wider in-memory frame
-    inf = _inference_outputs(
-        spark,
-        read_archive_spectra(spark, f"{args.output_dir}/archive_spectra"),
-        args.clusters_tsv,
-    )
-    write_jsonlines(inf["cluster_best"], f"{args.output_dir}/cluster_best")
-    write_jsonlines(inf["winner_spectra"], f"{args.output_dir}/winner_spectra")
-    write_jsonlines(inf["protein_evidence"], f"{args.output_dir}/protein_evidence_final")
-    if getattr(args, "reference_layout", False):
-        from pride_spark.sinks.layout import export_reference_layout
-
-        written = export_reference_layout(
-            args.output_dir,
-            args.project,
-            _layout_assay(args),
-            archive_spectra=archive,
-            summary_spectra=out["summary_spectra"],
-            protein_evidence=inf["protein_evidence"],
-            scratch_dir=getattr(args, "layout_scratch", None),
-        )
-        print(f"reference layout: {len(written)} files under {args.output_dir}/{args.project}")
-    base.unpersist()
+            written = export_reference_layout(
+                args.output_dir,
+                args.project,
+                _layout_assay(args),
+                archive_spectra=archive,
+                summary_spectra=out["summary_spectra"],
+                protein_evidence=inf["protein_evidence"],
+                scratch_dir=getattr(args, "layout_scratch", None),
+            )
+            print(f"reference layout: {len(written)} files under {args.output_dir}/{args.project}")
     print(f"pipeline complete: {valid} spectra indexed, outputs under {args.output_dir}")
     return 0
 
@@ -423,8 +418,6 @@ def cmd_run_reanalysis(args) -> int:
     mzXML, PKL) is also globbed — the reference is mzML-only.
     """
     import glob as _glob
-
-    from pride_spark.sources.jsonlines import write_jsonlines
 
     folder = args.reanalysis_folder.rstrip("/")
     result_files = sorted(_glob.glob(f"{folder}/*.mztab")) + sorted(
@@ -458,15 +451,12 @@ def cmd_run_reanalysis(args) -> int:
         obo = sorted(_glob.glob(f"{folder}/*.obo"))
         args.efo_terms = obo[0] if obo else None
     spark = _spark("run-reanalysis")
-    out = _index_outputs(spark, args)
-    write_jsonlines(out["archive_spectra"], f"{args.output_dir}/archive_spectra")
-    write_jsonlines(out["summary_spectra"], f"{args.output_dir}/summary_spectra")
-    write_jsonlines(out["protein_evidence"], f"{args.output_dir}/protein_evidence")
-    print(
-        f"reanalysis {args.reanalysis_accession} of {args.project}: "
-        f"{len(result_files)} id files, {len(spectra_files)} spectra files "
-        f"-> {args.output_dir}"
-    )
+    with _written_index_outputs(spark, args):
+        print(
+            f"reanalysis {args.reanalysis_accession} of {args.project}: "
+            f"{len(result_files)} id files, {len(spectra_files)} spectra files "
+            f"-> {args.output_dir}"
+        )
     return 0
 
 
@@ -574,6 +564,40 @@ def build_parser() -> argparse.ArgumentParser:
             "running local mode (default: driver-local temp)",
         )
 
+    def _add_index_flags(p, reanalysis=False):
+        # run-reanalysis globs its SDRF files from the folder, so it has no
+        # --sample-files, and its --efo-terms falls back to a bundled *.obo
+        p.add_argument("--qvalue-threshold", type=float, default=0.01)
+        p.add_argument("--peptide-length", type=int, default=7)
+        p.add_argument("--min-psms", type=int, default=1000)
+        p.add_argument("--score-better", choices=("higher", "lower"), default="higher")
+        p.add_argument("--no-gates", action="store_true", help="skip the F11 validity gate")
+        if not reanalysis:
+            p.add_argument(
+                "--sample-files", nargs="+",
+                help="SDRF file(s); characteristics become per-file sampleProperties (S12/J6)",
+            )
+        p.add_argument(
+            "--efo-terms",
+            help="EFO ontology dump (.obo or accession/name .tsv) to resolve SDRF "
+            "characteristic names against (J10)"
+            + ("; defaults to a *.obo bundled in the reanalysis folder" if reanalysis else ""),
+        )
+        p.add_argument(
+            "--psm-sets", choices=("auto", "on", "off"), default="auto",
+            help="group identical (spectrum, peptidoform, charge) identifications "
+            "from different result files into PSM sets before FDR (PIA "
+            "createPSMSets, PIAModelerService.java:111-114); auto = on iff "
+            "multiple result files",
+        )
+        p.add_argument(
+            "--consider-modifications", action="store_true",
+            help="key PSM sets on the peptidoform instead of the plain "
+            "sequence (PIA considerModifications; the reference's merged "
+            "path runs false, PIAModelerService.java:124). Only meaningful "
+            "with --psm-sets",
+        )
+
     g = sub.add_parser("get-result-files", help="project result-file manifest (S1/S2+K4)")
     g.add_argument("--project", required=True)
     g.add_argument("--output", required=True)
@@ -593,34 +617,7 @@ def build_parser() -> argparse.ArgumentParser:
     g.add_argument("--result-files", nargs="+", required=True)
     g.add_argument("--spectra-files", nargs="+", required=True)
     g.add_argument("--output-dir", required=True)
-    g.add_argument("--qvalue-threshold", type=float, default=0.01)
-    g.add_argument("--peptide-length", type=int, default=7)
-    g.add_argument("--min-psms", type=int, default=1000)
-    g.add_argument("--score-better", choices=("higher", "lower"), default="higher")
-    g.add_argument("--no-gates", action="store_true", help="skip the F11 validity gate")
-    g.add_argument(
-        "--sample-files", nargs="+",
-        help="SDRF file(s); characteristics become per-file sampleProperties (S12/J6)",
-    )
-    g.add_argument(
-        "--efo-terms",
-        help="EFO ontology dump (.obo or accession/name .tsv) to resolve SDRF "
-        "characteristic names against (J10)",
-    )
-    g.add_argument(
-        "--psm-sets", choices=("auto", "on", "off"), default="auto",
-        help="group identical (spectrum, peptidoform, charge) identifications "
-        "from different result files into PSM sets before FDR (PIA "
-        "createPSMSets, PIAModelerService.java:111-114); auto = on iff "
-        "multiple result files",
-    )
-    g.add_argument(
-        "--consider-modifications", action="store_true",
-        help="key PSM sets on the peptidoform instead of the plain "
-        "sequence (PIA considerModifications; the reference's merged "
-        "path runs false, PIAModelerService.java:124). Only meaningful "
-        "with --psm-sets",
-    )
+    _add_index_flags(g)
     _add_layout_flags(g)
     g.set_defaults(fn=cmd_generate_index_files)
 
@@ -638,34 +635,7 @@ def build_parser() -> argparse.ArgumentParser:
     g.add_argument("--spectra-files", nargs="+", required=True)
     g.add_argument("--output-dir", required=True)
     g.add_argument("--clusters-tsv", help="MaraCluster TSV; omit for native clustering")
-    g.add_argument("--qvalue-threshold", type=float, default=0.01)
-    g.add_argument("--peptide-length", type=int, default=7)
-    g.add_argument("--min-psms", type=int, default=1000)
-    g.add_argument("--score-better", choices=("higher", "lower"), default="higher")
-    g.add_argument("--no-gates", action="store_true", help="skip the F11 validity gate")
-    g.add_argument(
-        "--sample-files", nargs="+",
-        help="SDRF file(s); characteristics become per-file sampleProperties (S12/J6)",
-    )
-    g.add_argument(
-        "--efo-terms",
-        help="EFO ontology dump (.obo or accession/name .tsv) to resolve SDRF "
-        "characteristic names against (J10)",
-    )
-    g.add_argument(
-        "--psm-sets", choices=("auto", "on", "off"), default="auto",
-        help="group identical (spectrum, peptidoform, charge) identifications "
-        "from different result files into PSM sets before FDR (PIA "
-        "createPSMSets, PIAModelerService.java:111-114); auto = on iff "
-        "multiple result files",
-    )
-    g.add_argument(
-        "--consider-modifications", action="store_true",
-        help="key PSM sets on the peptidoform instead of the plain "
-        "sequence (PIA considerModifications; the reference's merged "
-        "path runs false, PIAModelerService.java:124). Only meaningful "
-        "with --psm-sets",
-    )
+    _add_index_flags(g)
     _add_layout_flags(g)
     g.set_defaults(fn=cmd_run_pipeline)
 
@@ -678,31 +648,7 @@ def build_parser() -> argparse.ArgumentParser:
     g.add_argument("--reanalysis-accession", required=True)
     g.add_argument("--reanalysis-folder", required=True)
     g.add_argument("--output-dir", required=True)
-    g.add_argument("--qvalue-threshold", type=float, default=0.01)
-    g.add_argument("--peptide-length", type=int, default=7)
-    g.add_argument("--min-psms", type=int, default=1000)
-    g.add_argument("--score-better", choices=("higher", "lower"), default="higher")
-    g.add_argument("--no-gates", action="store_true", help="skip the F11 validity gate")
-    g.add_argument(
-        "--efo-terms",
-        help="EFO ontology dump (.obo or accession/name .tsv) to resolve SDRF "
-        "characteristic names against (J10); defaults to a *.obo bundled in "
-        "the reanalysis folder",
-    )
-    g.add_argument(
-        "--psm-sets", choices=("auto", "on", "off"), default="auto",
-        help="group identical (spectrum, peptidoform, charge) identifications "
-        "from different result files into PSM sets before FDR (PIA "
-        "createPSMSets, PIAModelerService.java:111-114); auto = on iff "
-        "multiple result files",
-    )
-    g.add_argument(
-        "--consider-modifications", action="store_true",
-        help="key PSM sets on the peptidoform instead of the plain "
-        "sequence (PIA considerModifications; the reference's merged "
-        "path runs false, PIAModelerService.java:124). Only meaningful "
-        "with --psm-sets",
-    )
+    _add_index_flags(g, reanalysis=True)
     g.set_defaults(fn=cmd_run_reanalysis)
 
     g = sub.add_parser("generate-mgf-files", help="MGF export of archive spectra (K5)")

@@ -56,6 +56,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import tempfile
+import time
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -189,17 +194,79 @@ def _resolve_n_probe(n_probe, meta) -> int:
     return n_probe
 
 
-def _load_meta(path: str) -> dict:
-    p = path.removeprefix("file:")
-    # serve-touch: every search loads meta first, so bumping the dir
-    # mtime here marks the index as actively served for ANY caller
-    # (batch search, streaming foreachBatch serving, another process) —
-    # the registry's tmp GC only reaps published dirs idle for 24 h
-    # measured from this timestamp (registry._gc_tmp_siblings)
+def _gc_tmp_siblings(tmp: str, prefix: str, keep: str) -> None:
+    """GC stale build artifacts under ``tmp``, called only when a NEW
+    fingerprint is about to be built: ``.build-*`` orphans after one
+    hour (a builder that crashed between build and rename), but
+    PUBLISHED sibling dirs only after 24 h WITHOUT a serve — every
+    serve touches the dir mtime (:func:`_touch_served`), so a
+    long-lived session (streaming ANN serving, a gate run on another
+    sf dir) that is actively reading an index built hours ago never
+    has it rmtree'd out from under in-flight parquet reads."""
+    for entry in os.listdir(tmp):
+        if entry == keep or not entry.startswith(prefix):
+            continue
+        full = os.path.join(tmp, entry)
+        limit = 3600 if ".build-" in entry else 86400
+        try:
+            if time.time() - os.path.getmtime(full) < limit:
+                continue
+        except OSError:
+            continue
+        shutil.rmtree(full, ignore_errors=True)
+
+
+def _touch_served(path: str) -> None:
+    """Bump a served artifact dir's mtime so the 24 h GC window in
+    :func:`_gc_tmp_siblings` is measured from the LAST SERVE, not the
+    build."""
     try:
-        os.utime(p, None)
+        os.utime(path, None)
     except OSError:
         pass
+
+
+def _publish_build(build: str, path: str) -> None:
+    """Atomically publish ``build`` as ``path`` via ``os.rename``.
+
+    A losing ``rename`` is only benign when a CONCURRENT builder already
+    published ``path`` — any other OSError (permissions, cross-device
+    tmp, a non-local default FS so the build never landed on local disk)
+    would previously be swallowed here and surface much later as a
+    confusing parquet-read failure on a nonexistent path.
+    Verify the published dir actually exists before discarding the
+    build; re-raise the original error otherwise."""
+    try:
+        os.rename(build, path)
+    except OSError:
+        if not os.path.isdir(path):
+            raise  # nothing was published — the rename failure is real
+        shutil.rmtree(build, ignore_errors=True)  # concurrent builder won
+
+
+def build_once(prefix: str, key: str, build: Callable[[str], None]) -> str:
+    """The artifact dir ``{tmp}/{prefix}{key}`` (``key``: a content
+    fingerprint of the inputs), built on first use.  ``build(build_dir)``
+    writes a ``.build-<uuid>`` sibling that one atomic rename publishes,
+    so a path is published iff it is a directory; a ``build`` that
+    raises publishes nothing.  Every call serve-touches the path."""
+    tmp = tempfile.gettempdir()
+    path = os.path.join(tmp, prefix + key)
+    if not os.path.isdir(path):
+        _gc_tmp_siblings(tmp, prefix, prefix + key)
+        build_dir = f"{path}.build-{uuid.uuid4().hex}"
+        build(build_dir)
+        _publish_build(build_dir, path)
+    _touch_served(path)
+    return path
+
+
+def _load_meta(path: str) -> dict:
+    p = path.removeprefix("file:")
+    # every search loads meta first, so serve-touching here marks the
+    # index as actively served for ANY caller (batch search, streaming
+    # foreachBatch serving, another process)
+    _touch_served(p)
     with open(os.path.join(p, "meta.json")) as fh:
         return json.load(fh)
 

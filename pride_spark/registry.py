@@ -17,7 +17,6 @@ Numeric-parity rules (so value hashes match DuckDB bit-for-bit):
 from __future__ import annotations
 
 import os as _os
-import time as _time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -2057,106 +2056,10 @@ def _table_fingerprint(sf_dir: str, table: str) -> str:
     return h.hexdigest()[:12]
 
 
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Fingerprint of the embeddings corpus — the cache key for
-    everything q43 builds once per corpus: the persistent IVF-PQ index
-    AND the in-process training artifacts (centroids, codebooks)."""
-    return _table_fingerprint(sf_dir, "embeddings")
-
-
-def _gc_tmp_siblings(tmp: str, prefix: str, keep: str) -> None:
-    """GC stale build artifacts under ``tmp``, called only when a NEW
-    fingerprint is about to be built: ``.build-*`` orphans after one
-    hour (a builder that crashed between build and rename), but
-    PUBLISHED sibling dirs only after 24 h WITHOUT a serve — every
-    serve touches the dir mtime (:func:`_touch_served`), so a
-    long-lived session (streaming ANN serving, a gate run on another
-    sf dir) that is actively reading an index built hours ago never
-    has it rmtree'd out from under in-flight parquet reads."""
-    import shutil
-
-    for entry in _os.listdir(tmp):
-        if entry == keep or not entry.startswith(prefix):
-            continue
-        full = _os.path.join(tmp, entry)
-        limit = 3600 if ".build-" in entry else 86400
-        try:
-            if _time.time() - _os.path.getmtime(full) < limit:
-                continue
-        except OSError:
-            continue
-        shutil.rmtree(full, ignore_errors=True)
-
-
-def _touch_served(path: str) -> None:
-    """Bump a served artifact dir's mtime so the 24 h GC window in
-    :func:`_gc_tmp_siblings` is measured from the LAST SERVE, not the
-    build."""
-    try:
-        _os.utime(path, None)
-    except OSError:
-        pass
-
-
-def _publish_build(build: str, path: str) -> None:
-    """Atomically publish ``build`` as ``path`` via ``os.rename``.
-
-    A losing ``rename`` is only benign when a CONCURRENT builder already
-    published ``path`` — any other OSError (permissions, cross-device
-    tmp, a non-local default FS so the build never landed on local disk)
-    would previously be swallowed here and surface much later as a
-    confusing parquet-read failure on a nonexistent path (r11 advice).
-    Verify the published dir actually exists before discarding the
-    build; re-raise the original error otherwise."""
-    import shutil
-
-    try:
-        _os.rename(build, path)
-    except OSError:
-        if not _os.path.isdir(path):
-            raise  # nothing was published — the rename failure is real
-        shutil.rmtree(build, ignore_errors=True)  # concurrent builder won
-
-
-def _ivfpq_index_path(spark: SparkSession, sf_dir: str, books) -> str:
-    """Build-once path for q43's persistent IVF-PQ index: keyed by a
-    CONTENT fingerprint of the corpus (file names + sizes + mtimes of
-    embeddings.parquet), so regenerating the corpus at the same path
-    gets a fresh index instead of silently reusing a stale one.  The
-    build lands in a process-unique sibling dir and is published with
-    one atomic ``os.rename`` — two concurrent builders cannot
-    interleave writes into the served directory; the rename loser
-    discards its copy and serves the winner's."""
-    import tempfile
-    import uuid
-
-    from pride_spark.operators import ann_index
-
-    tmp = tempfile.gettempdir()
-    path = _os.path.join(tmp, f"pride_spark_ivfpq_v2_{_corpus_fingerprint(sf_dir)}")
-    if not _os.path.exists(_os.path.join(path, "meta.json")):
-        # GC before building: (a) '*.build-<uuid>' siblings leaked by a
-        # builder that crashed between build and rename (1 h age guard —
-        # a CONCURRENT builder's in-progress dir must survive until its
-        # atomic rename); (b) old fingerprint dirs orphaned when the
-        # corpus was regenerated (mtime_ns is part of the key, so stale
-        # dirs are never served again) — these only after 24 h without a
-        # serve, see _gc_tmp_siblings.
-        _gc_tmp_siblings(tmp, "pride_spark_ivfpq_v2_", _os.path.basename(path))
-        build_dir = path + f".build-{uuid.uuid4().hex}"
-        emb = _t(spark, sf_dir, "embeddings")
-        ann_index.build_ivf_index(
-            emb, build_dir, "vec_id", "embedding", n_centroids=8, pq_codebooks=books
-        )
-        _publish_build(build_dir, path)
-    _touch_served(path)
-    return path
-
-
-#: per-corpus-fingerprint memo of q43's BUILD-stage artifacts (IVF
-#: centroids, seeded + trained codebooks, persistent index path).
-#: Holds only the most recent corpus so a long-lived session that walks
-#: many sf dirs doesn't accumulate centroid tables.
+#: per-corpus-fingerprint memo of what q43's BUILD stage trains in
+#: Spark (IVF centroids, seeded + trained codebooks).  Holds only the
+#: most recent corpus so a long-lived session that walks many sf dirs
+#: doesn't accumulate centroid tables.
 _Q43_BUILD_CACHE: dict[str, dict] = {}
 
 
@@ -2172,59 +2075,64 @@ def q43_build_artifacts(spark: SparkSession, sf_dir: str) -> dict:
     functions of the corpus, so memoizing them changes no result.
 
     The PQ CODES tables are materialized here too (one parquet per
-    codebook family, atomic-rename published like the index): encoding
-    is a full-corpus scan, and a served PQ index never re-encodes its
-    corpus per query batch — the searches read the 16-32× narrower
-    codes table instead (``pq_topk(codes_df=...)``), which at 100 TB is
-    the difference between scanning compressed codes and scanning the
-    float vectors every search."""
+    codebook family, published by ``ann_index.build_once`` like the
+    index): encoding is a full-corpus scan, and a served PQ index never
+    re-encodes its corpus per query batch — the searches read the
+    16-32× narrower codes table instead (``pq_topk(codes_df=...)``),
+    which at 100 TB is the difference between scanning compressed codes
+    and scanning the float vectors every search."""
+    import functools
     import hashlib
-    import tempfile
-    import uuid
 
-    fp = _corpus_fingerprint(sf_dir)
-    cached = _Q43_BUILD_CACHE.get(fp)
-    if cached is None:
-        emb = _t(spark, sf_dir, "embeddings")
+    from pride_spark.operators.ann_index import build_ivf_index, build_once
+
+    fp = _table_fingerprint(sf_dir, "embeddings")
+    # read only if something is trained or built: a warm call is path checks
+    emb = functools.cache(lambda: _t(spark, sf_dir, "embeddings"))
+    trained = _Q43_BUILD_CACHE.get(fp)
+    if trained is None:
         books = similarity.pq_codebooks_seeded(m=_PQ_M, k=_PQ_K, dim=_PQ_DIM)
         books_t = similarity.pq_train(
             spark.read.parquet(f"{_PQ_TRAIN_DIR}/embeddings.parquet"),
             "vec_id", "embedding", m=_PQ_M, k=_PQ_K, order_by_id=True,
         )
-        # codes dir keyed by corpus fingerprint + BOTH codebook digests
-        # (trained books depend on the train fixture, not the corpus)
-        bh = hashlib.md5(repr((books, books_t)).encode()).hexdigest()[:8]
-        tmp = tempfile.gettempdir()
-        codes_dir = _os.path.join(tmp, f"pride_spark_pqcodes_v1_{fp}_{bh}")
-        if not _os.path.isdir(_os.path.join(codes_dir, "trained")):
-            # GC stale fingerprints/builds — same serve-aware age policy
-            # as _ivfpq_index_path (see _gc_tmp_siblings)
-            _gc_tmp_siblings(tmp, "pride_spark_pqcodes_v1_", _os.path.basename(codes_dir))
-            build = codes_dir + f".build-{uuid.uuid4().hex}"
-            for fam, bks in (("seeded", books), ("trained", books_t)):
-                emb.select(
-                    F.col("vec_id").alias("nbr_id"),
-                    similarity.pq_encode_expr("embedding", bks).alias("codes"),
-                ).write.mode("overwrite").parquet(_os.path.join(build, fam))
-            _publish_build(build, codes_dir)
-        cached = {
+        trained = {
             "ivf_centroids": similarity._kmeans_centroids(
-                emb, "vec_id", "embedding", 8, 2
+                emb(), "vec_id", "embedding", 8, 2
             ),
             "books_seeded": books,
             "books_trained": books_t,
-            "index_path": _ivfpq_index_path(spark, sf_dir, books),
-            "codes_seeded_path": _os.path.join(codes_dir, "seeded"),
-            "codes_trained_path": _os.path.join(codes_dir, "trained"),
+            # codes keyed by corpus fingerprint + BOTH codebook digests
+            # (trained books depend on the train fixture, not the corpus)
+            "codes_key": f"{fp}_"
+            + hashlib.md5(repr((books, books_t)).encode()).hexdigest()[:8],
         }
         _Q43_BUILD_CACHE.clear()
-        _Q43_BUILD_CACHE[fp] = cached
-    # serve-touch on EVERY access (memo hits included): the 24 h GC
-    # window is measured from the last serve, so another process's GC
-    # can't reap a dir this session is actively reading
-    _touch_served(_os.path.dirname(cached["codes_seeded_path"]))
-    _touch_served(cached["index_path"])
-    return cached
+        _Q43_BUILD_CACHE[fp] = trained
+
+    def encode_codes(build_dir: str) -> None:
+        for fam in ("seeded", "trained"):
+            emb().select(
+                F.col("vec_id").alias("nbr_id"),
+                similarity.pq_encode_expr(
+                    "embedding", trained[f"books_{fam}"]
+                ).alias("codes"),
+            ).write.mode("overwrite").parquet(_os.path.join(build_dir, fam))
+
+    codes_dir = build_once("pride_spark_pqcodes_v1_", trained["codes_key"], encode_codes)
+    index_path = build_once(
+        "pride_spark_ivfpq_v2_", fp,
+        lambda build_dir: build_ivf_index(
+            emb(), build_dir, "vec_id", "embedding", n_centroids=8,
+            pq_codebooks=trained["books_seeded"],
+        ),
+    )
+    return {
+        **trained,
+        "index_path": index_path,
+        "codes_seeded_path": _os.path.join(codes_dir, "seeded"),
+        "codes_trained_path": _os.path.join(codes_dir, "trained"),
+    }
 
 
 @register("q43_ivf_ann", _pq_oracle_sql)  # lazy: resolved on oracle_sql()
@@ -2314,28 +2222,22 @@ def q45_sets_path(spark: SparkSession, sf_dir: str) -> str:
     reanalysis groups its PSM sets once and then runs MANY set-level FDR
     chains over them, so the timed q45 row should measure the FDR
     chains, not re-derive the 600k-row set grouping per run.  Keyed by a
-    content fingerprint of lineitem, published with one atomic rename
-    (two concurrent builders cannot interleave; loser serves the
-    winner's), GC'd by the same serve-aware policy as q43's artifacts."""
-    import tempfile
-    import uuid
-
+    content fingerprint of lineitem and published by
+    ``ann_index.build_once`` like q43's artifacts."""
+    from pride_spark.operators.ann_index import build_once
     from pride_spark.operators.fdr import group_psm_sets
 
-    tmp = tempfile.gettempdir()
-    fp = _table_fingerprint(sf_dir, "lineitem")
-    path = _os.path.join(tmp, f"pride_spark_q45sets_v1_{fp}")
-    if not _os.path.isdir(path):
-        _gc_tmp_siblings(tmp, "pride_spark_q45sets_v1_", _os.path.basename(path))
-        build = path + f".build-{uuid.uuid4().hex}"
-        group_psm_sets(
+    return build_once(
+        "pride_spark_q45sets_v1_",
+        _table_fingerprint(sf_dir, "lineitem"),
+        lambda build_dir: group_psm_sets(
             _q45_psms(spark, sf_dir),
             spectrum_key_col="spectrumKey",
             consider_modifications=False,
-        ).write.mode("overwrite").parquet(build)
-        _publish_build(build, path)
-    _touch_served(path)
-    return path
+        ).write.mode("overwrite").parquet(build_dir),
+    )
+
+
 @register(
     "q45_combined_fdr",
     """
@@ -2737,7 +2639,7 @@ def _q48_spectra(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q48_collapse_flag(spark: SparkSession, sf_dir: str) -> bool:
     from pride_spark.operators.spectral_cluster import _binned_frame, _has_duplicates
 
-    fp = _corpus_fingerprint(sf_dir)
+    fp = _table_fingerprint(sf_dir, "embeddings")
     if fp not in _Q48_COLLAPSE_FLAG:
         base = _binned_frame(
             _q48_spectra(spark, sf_dir), "usi", "masses", "intensities",

@@ -195,10 +195,12 @@ def test_run_reanalysis_folder_glob(spark, tmp_path):
     accession — published usi carries the REANALYSIS accession while
     spectraUsi keeps the original project's
     (PrideAnalysisAssayService.java:563-571) — and SDRF characteristics
-    land in sampleProperties (J6)."""
+    land in sampleProperties (J6).  Two result files group PSM sets, and
+    their provenance table is written as in generate-index-files."""
     folder = tmp_path / "reanalysis"
     folder.mkdir()
     (folder / "a.mzid").write_text(_mzid())
+    (folder / "b.mzid").write_text(_mzid())
     (folder / "run1.mgf").write_text(_mgf())
     # SDRF names the RAW acquisition file (the realistic case) — the join
     # must match it to the run1.mgf archive rows via the extension-
@@ -246,6 +248,9 @@ def test_run_reanalysis_folder_glob(spark, tmp_path):
     # summary + protein outputs exist with rows
     assert _read_jsonl(outdir / "summary_spectra")
     assert _read_jsonl(outdir / "protein_evidence")
+    prov = _read_jsonl(outdir / "psm_set_provenance")
+    assert {r["usi"] for r in prov} == {r["usi"] for r in archive}
+    assert all(r["setSize"] == 2 for r in prov)
 
 
 def test_run_reanalysis_missing_inputs(tmp_path):

@@ -88,6 +88,20 @@ def test_every_checkpoint_goes_through_session_checkpoint():
     ) == []
 
 
+def test_build_once_protocol_only_in_ann_index():
+    """Temp-dir artifacts (fingerprint key, sibling GC, ``.build-`` dir,
+    atomic rename, serve-touch) go through ``ann_index.build_once``; no
+    other module spells out a copy of that protocol, and the query
+    registry does no file publishing of its own."""
+    assert {
+        line.split(":")[0] for line in _package_lines(".build-", skip_session=False)
+    } == {"operators/ann_index.py"}
+    assert [
+        line for line in _package_lines("os.rename(", "shutil", "tempfile", skip_session=False)
+        if line.startswith("registry.py:")
+    ] == []
+
+
 _RELEASE_CASES = {
     "connected_components": lambda spark: connected_components(
         spark.createDataFrame([(i, i + 1) for i in range(0, 40, 2)] + [(1, 2)], "src long, dst long")

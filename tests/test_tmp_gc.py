@@ -1,6 +1,7 @@
-"""Age- and serve-aware GC of q43's tmp artifact dirs (r7 verdict task 9
-+ r8 ADVICE): a mis-glob or mis-aged sweep here deletes a served index
-mid-session, so the policy is pinned by test:
+"""The build-once artifact lifecycle (``ann_index.build_once``) and its
+age- and serve-aware GC of tmp artifact dirs: a mis-glob or mis-aged
+sweep here deletes a served index mid-session, so the policy is pinned
+by test:
 
 - ``.build-*`` orphans: reaped after 1 h (crashed-builder leak class);
 - published fingerprint dirs: reaped only after 24 h WITHOUT a serve
@@ -13,7 +14,14 @@ from __future__ import annotations
 import os
 import time
 
-from pride_spark.registry import _gc_tmp_siblings, _touch_served
+import pytest
+
+from pride_spark.operators.ann_index import (
+    _gc_tmp_siblings,
+    _publish_build,
+    _touch_served,
+    build_once,
+)
 
 PFX = "pride_spark_ivfpq_v2_"
 
@@ -96,10 +104,6 @@ def test_publish_build_reraises_when_nothing_published(tmp_path):
     never landed locally) a nonexistent path was served and surfaced
     later as a baffling parquet-read error.  Now: rename-loser only
     when the published dir actually exists; re-raise otherwise."""
-    import pytest
-
-    from pride_spark.registry import _publish_build
-
     # real failure: the build dir does not exist, target not published
     missing_build = str(tmp_path / "nope.build-abc")
     target = str(tmp_path / "published")
@@ -123,3 +127,40 @@ def test_publish_build_reraises_when_nothing_published(tmp_path):
     t2 = str(tmp_path / "t2")
     _publish_build(str(build2), t2)
     assert os.path.isdir(t2) and not build2.exists()
+
+
+def test_build_once_failure_rebuilds_and_hit_skips_build(tmp_path, monkeypatch):
+    """A ``build`` that raises publishes nothing, the next call builds
+    again and publishes, and a hit never calls ``build``."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    path = tmp_path / f"{PFX}key1"
+    calls = []
+
+    def write(build_dir, text):
+        calls.append(build_dir)
+        os.makedirs(build_dir)
+        with open(os.path.join(build_dir, "part-0000"), "w") as fh:
+            fh.write(text)
+
+    def failing(build_dir):
+        write(build_dir, "partial")
+        raise RuntimeError("build died")
+
+    with pytest.raises(RuntimeError):
+        build_once(PFX, "key1", failing)
+    assert not path.exists(), "a failed build must publish nothing"
+
+    assert build_once(PFX, "key1", lambda d: write(d, "done")) == str(path)
+    assert (path / "part-0000").read_text() == "done"
+    assert len(calls) == 2 and calls[0] != calls[1]  # fresh .build- dir
+
+    old = time.time() - 7_200
+    os.utime(path, (old, old))
+
+    def never(build_dir):
+        raise AssertionError("a hit must not build")
+
+    assert build_once(PFX, "key1", never) == str(path)
+    assert time.time() - os.path.getmtime(path) < 60, "a hit serve-touches"
