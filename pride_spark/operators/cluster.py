@@ -26,14 +26,6 @@ from pyspark.sql import functions as F
 from pride_spark.functions.strings import make_isobaric
 
 
-def cluster_members(psms: DataFrame, cluster_col: str = "clusterId") -> DataFrame:
-    """A11 — per-cluster member counts (the groupBy the ehcache emulated)."""
-    return psms.groupBy(cluster_col).agg(
-        F.count("*").alias("numMembers"),
-        F.collect_list("usi").alias("usis"),
-    )
-
-
 def isobaric_pure_clusters(psms: DataFrame, cluster_col: str = "clusterId") -> DataFrame:
     """A12a — clusterIds whose members share one isobaric sequence."""
     return (

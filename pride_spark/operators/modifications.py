@@ -65,8 +65,6 @@ def regroup_modifications_flat(
     df: DataFrame,
     key_cols: list[str],
     mods_col: str = "modifications",
-    *,
-    row_unique_keys: bool = False,
 ) -> DataFrame:
     """X3 for consumers that want one ROW per (psm, accession) instead of a
     regrouped in-row array: explode → hash-aggregate.
@@ -79,29 +77,10 @@ def regroup_modifications_flat(
     (no shuffle); use this when the output is the flattened relation (the
     shuffle replaces the explode's implicit one downstream).
 
-    ``row_unique_keys=True`` (r13 optimization): the caller GUARANTEES
-    ``key_cols`` identify input rows — every key group's modifications
-    live in one row's array, so cross-row merging can never occur (the
-    usual case: a PSM id keys its own mods array).  The regroup then runs
-    entirely IN-ROW (``regroup_modifications`` + posexplode_outer):
-    identical output under the guarantee (same first-name, same sorted
-    distinct positions; asserted in tests/test_modifications_ws.py and
-    oracle-proven on q39), but ZERO shuffle — the groupBy's exchange and
-    its ObjectHashAggregate (collect_list forces the object path, which
-    sort-falls-back past 128 groups/task) disappear outright; measured
-    3.3 → 2.5 s on q39 at sf0.1 and strictly better at scale (the
-    exchange grows with data, the in-row HOFs are a constant per row).
+    Rows that share a key are merged: the groupBy runs over the key, not
+    over input rows, so a key repeated across rows yields one row per
+    (key, accession) with the union of their positions.
     """
-    if row_unique_keys:
-        r = df.select(
-            *key_cols,
-            F.posexplode_outer(regroup_modifications(F.col(mods_col))).alias(
-                "__ord", "m"
-            ),
-        )
-        return r.filter(F.col("m").isNotNull()).select(
-            *key_cols, "m.accession", "m.name", "m.positions"
-        )
     flat = (
         # posexplode_OUTER, not posexplode: plain explode makes Catalyst
         # insert a `size(mods) > 0` pre-filter that re-evaluates the whole

@@ -45,22 +45,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"))
 
 
-def _in_set(words: list[str]):
-    """Single-arg lambda factory — PySpark gives 2-arg lambdas an index param."""
-
-    def pred(t: Column) -> Column:
-        return t.isin(*words)
-
-    return pred
-
-
-def stopword_ratio(text: Column, stopwords: list[str]) -> Column:
-    """Fraction of tokens that are in the stopword list."""
-    toks = tokens(F.lower(text))
-    hits = F.size(F.filter(toks, _in_set(stopwords)))
-    return F.when(F.size(toks) > 0, hits.cast("double") / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def detect_language(text: Column, profiles: dict[str, list[str]] | None = None) -> Column:
     """Heuristic language ID: argmax of per-language stopword hit count.
 

@@ -1682,8 +1682,8 @@ def q38_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q39_mod_regroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pride_spark.operators.modifications import regroup_modifications_flat
 
-    # r13: the in-row regroup (zero-shuffle since the row_unique_keys
-    # rewrite) fuses into the scan stage — widen or it runs on one core
+    # the per-row mods-array construction fuses into the scan stage —
+    # widen or it runs on one core
     li = _tw(spark, sf_dir, "lineitem")
     acc = F.concat(F.lit("UNIMOD:"), F.col("l_partkey") % 2)
     name = F.concat(F.lit("MOD"), F.col("l_partkey") % 2)
@@ -1703,13 +1703,9 @@ def q39_mod_regroup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws("-", "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey").alias("psmId"),
         mods.alias("modifications"),
     )
-    # flat variant with row_unique_keys (r13): psmId embeds the lineitem
-    # primary key (orderkey, linenumber), so every key group's mods live
-    # in one row — the regroup runs in-row and the groupBy exchange +
-    # ObjectHashAggregate vanish (plans/r13/q39_*_after.txt: 1 Exchange →
-    # 0).  Output identical (oracle-proven; operator equivalence asserted
-    # in tests/test_modifications_ws.py).
-    out = regroup_modifications_flat(raw, ["psmId"], row_unique_keys=True)
+    # psmId is not a row key: perfbench's generated lineitem repeats one,
+    # and the groupBy merges the repeated rows as the oracle's GROUP BY does
+    out = regroup_modifications_flat(raw, ["psmId"])
     # stringified for the driver's pandas canonicalizer (no ndarray cells)
     return out.withColumn(
         "positions", F.array_join(F.col("positions").cast("array<string>"), ",")

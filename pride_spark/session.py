@@ -8,9 +8,15 @@ to a 1000-executor cluster without code changes.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
+import hashlib
 import os
+import shutil
+import subprocess
 import threading
+from collections.abc import Mapping
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -88,7 +94,28 @@ def get_spark(
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    from pyspark import SparkContext
+
+    cds = None
+    if SparkContext._gateway is None:  # this call launches the driver JVM
+        cds = cds_launch(extra_conf or {}, os.environ, os.getpid())
+    if cds is None:
+        spark = builder.getOrCreate()
+    else:
+        for k, v in cds.conf.items():
+            builder = builder.config(k, v)
+        saved = {k: os.environ.get(k) for k in cds.env}
+        os.environ.update(cds.env)
+        try:
+            spark = builder.getOrCreate()
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    del os.environ[k]
+                else:
+                    os.environ[k] = v
+        if cds.part is not None:
+            atexit.register(_publish_archive, spark.sparkContext._gateway.proc, cds)
     # getOrCreate RETURNS A PRE-EXISTING SESSION with builder configs
     # silently ignored (r10 review): a borrowed session with a non-UTC
     # timezone would shift every TIMESTAMP_NTZ cast and every window
@@ -103,6 +130,135 @@ def get_spark(
         except Exception:  # static conf (e.g. spark.ui.enabled) on a
             pass  # pre-existing session cannot change — keep going
     return spark
+
+
+# ---------------------------------------------------------------------------
+# JVM start: class-data sharing (AppCDS).  A new driver JVM maps the parsed,
+# verified metadata of the ~20k classes Spark loads at start from an
+# archive instead of loading them from the jars: session start measured
+# 4.8-6.6 s -> 2.4-3.6 s on 4 cores (perfbench registry, 10 runs a side).
+# JDK 17 has no -XX:+AutoCreateSharedArchive, so the first launch dumps the
+# archive at JVM exit into a private ``.part`` file, and
+# :func:`_publish_archive` renames it into place only after a clean
+# exit.  The JVM validates an archive against its own build
+# and classpath and runs without it on a mismatch: a stale archive can
+# lose the gain but never change a result.  Delete the cache dir to reset.
+# ---------------------------------------------------------------------------
+
+#: Seconds the exit hook waits for the driver JVM to finish its dump.
+_DUMP_WAIT_S = 120
+
+
+class CdsLaunch(NamedTuple):
+    conf: dict[str, str]  # session conf of the launch
+    env: dict[str, str]  # environment of the launch
+    archive: str  # <cache>/<key>.jsa
+    part: str | None  # the dump target when the archive is absent
+
+
+def _cds_key(java: str, spark_home: str) -> str:
+    """Hash of what the archive's classes come from: the ``java`` binary,
+    the Spark install and its jar listing (name, size, mtime)."""
+    h = hashlib.sha256(f"{os.path.realpath(java)}\0{os.path.realpath(spark_home)}".encode())
+    jars = os.path.join(spark_home, "jars")
+    for name in sorted(os.listdir(jars)):
+        st = os.stat(os.path.join(jars, name))
+        h.update(f"\0{name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:16]
+
+
+def cds_launch(conf: Mapping[str, str], environ: Mapping[str, str], pid: int) -> CdsLaunch | None:
+    """The class-data-sharing part of a new driver JVM's launch, or None
+    when it must not apply.  ``conf`` is the caller's session conf; the
+    returned conf and env are set on top of it for the launch only.
+
+    JDK 17 aborts a dump when a non-empty directory is on the classpath,
+    and Spark puts its conf dir first.  A conf dir that is absent or holds
+    only ``*.template`` files (which Spark never reads) is swapped for an
+    empty dir: the same configuration.  A conf dir with any other file, an
+    extra classpath entry, or an unwritable cache gets no CDS flag at all.
+    """
+    from pyspark.find_spark_home import _find_spark_home
+
+    submit_args = environ.get("PYSPARK_SUBMIT_ARGS", "")
+    if (
+        conf.get("spark.driver.extraClassPath")
+        or any(s in submit_args for s in ("class-path", "extraClassPath"))
+        # classpath entries the launcher adds, or a JVM this call won't launch
+        or any(environ.get(v) for v in (
+            "SPARK_DIST_CLASSPATH", "HADOOP_CONF_DIR", "YARN_CONF_DIR", "PYSPARK_GATEWAY_PORT"
+        ))
+    ):
+        return None
+    spark_home = environ.get("SPARK_HOME") or _find_spark_home()
+    conf_dir = environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    java = (
+        os.path.join(environ["JAVA_HOME"], "bin", "java")
+        if environ.get("JAVA_HOME")
+        else shutil.which("java", path=environ.get("PATH"))
+    )
+    cache = os.path.join(
+        environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache"),
+        "pride_spark",
+        "cds",
+    )
+    if not java or any(c.isspace() for c in cache):  # options split on spaces
+        return None
+    empty = os.path.join(cache, "conf")
+    try:
+        if os.path.isdir(conf_dir) and any(
+            not n.endswith(".template") for n in os.listdir(conf_dir)
+        ):
+            return None
+        os.makedirs(empty, exist_ok=True)
+        if not os.access(cache, os.W_OK):
+            return None
+        key = _cds_key(java, spark_home)
+    except OSError:
+        return None
+    archive = os.path.join(cache, f"{key}.jsa")
+    part = None if os.path.isfile(archive) else f"{archive}.{pid}.part"
+    flag = f"-XX:SharedArchiveFile={archive}" if part is None else f"-XX:ArchiveClassesAtExit={part}"
+    # caller options go after ours, so a caller's flag wins
+    opts = f"{flag} -Xlog:cds*=off {conf.get('spark.driver.defaultJavaOptions', '')}"
+    return CdsLaunch(
+        {"spark.driver.defaultJavaOptions": opts.strip()},
+        {"SPARK_CONF_DIR": empty},
+        archive,
+        part,
+    )
+
+
+def _publish_archive(proc, cds: CdsLaunch) -> None:
+    """Exit hook of a dumping launch: stop the session, close the
+    gateway's stdin (the JVM exits on EOF and dumps), wait for the JVM,
+    and publish the dump only if it exited cleanly.  Archives of other
+    keys and dumps orphaned by dead processes are removed on publish; this
+    launch's ``.part`` file never outlives the hook."""
+    from pyspark import SparkContext
+
+    try:
+        sc = SparkContext._active_spark_context
+        if sc is not None:
+            with contextlib.suppress(Exception):
+                sc.stop()
+        with contextlib.suppress(OSError):
+            proc.stdin.close()
+        if proc.wait(timeout=_DUMP_WAIT_S) == 0 and os.path.isfile(cds.part):
+            os.replace(cds.part, cds.archive)
+            cache, mine = os.path.split(cds.archive)
+            for name in os.listdir(cache):
+                stale = name.endswith(".jsa") and name != mine
+                orphan = name.endswith(".part") and not os.path.exists(
+                    f"/proc/{name.split('.')[-2]}"
+                )
+                if stale or orphan:
+                    os.remove(os.path.join(cache, name))
+    except (OSError, subprocess.TimeoutExpired):
+        pass
+    finally:
+        with contextlib.suppress(OSError):
+            os.remove(cds.part)
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:

@@ -1,8 +1,8 @@
-"""File-type dispatch (SURVEY §2.1 S4/S5) — extension and CV-term routing.
+"""File-type dispatch (SURVEY §2.1 S4/S5) — extension routing and sniff.
 
 Reference: ``/root/reference/src/.../utility/SubmissionPipelineUtils.java``
-``:106-128`` (by name, including compressed-name logic), ``:130-147`` (by
-CV accession), ``:403-421`` (PRIDE-XML content sniff).  Everything here is
+``:106-128`` (by name, including compressed-name logic), ``:403-421``
+(PRIDE-XML content sniff).  Everything here is
 a pure Column expression usable both as a projection over a file-manifest
 DataFrame and driver-side on a single name.
 """
@@ -26,15 +26,6 @@ _EXT_TYPES = {
     "ms2": "MS2",
 }
 
-#: spectra-file CV accession → type (SubmissionPipelineUtils.java:130-147)
-_CV_TYPES = {
-    "MS:1000584": "MZML",
-    "MS:1001062": "MGF",
-    "MS:1000566": "MZXML",
-    "MS:1002996": "APL",
-    "MS:1000565": "PKL",
-}
-
 
 def strip_compression(name: Column | str) -> Column:
     """Remove a trailing ``.gz``/``.zip`` so the real extension is visible."""
@@ -54,15 +45,6 @@ def file_type_by_name(name: Column | str) -> Column:
     out: Column = F.lit(None).cast("string")
     for e, t in reversed(_EXT_TYPES.items()):
         out = F.when(ext == e, F.lit(t)).otherwise(out)
-    return out
-
-
-def file_type_by_cv(accession: Column | str) -> Column:
-    """S5 — dispatch on the spectra-file format CV accession."""
-    c = F.col(accession) if isinstance(accession, str) else accession
-    out: Column = F.lit(None).cast("string")
-    for acc, t in reversed(_CV_TYPES.items()):
-        out = F.when(c == acc, F.lit(t)).otherwise(out)
     return out
 
 

@@ -30,14 +30,6 @@ def read_archive_spectra(spark: SparkSession, path: str | list[str]) -> DataFram
     return read_jsonlines(spark, path, schemas.BINARY_ARCHIVE_SPECTRUM)
 
 
-def read_summary_spectra(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    return read_jsonlines(spark, path, schemas.SUMMARY_ARCHIVE_SPECTRUM)
-
-
-def read_protein_evidence(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    return read_jsonlines(spark, path, schemas.ARCHIVE_PROTEIN_EVIDENCE)
-
-
 def point_lookup(table: DataFrame, usis: DataFrame | list[str], usi_col: str = "usi") -> DataFrame:
     """S10 — the reference's seek-by-offset read is a join on ``usi``.
 

@@ -39,13 +39,6 @@ def _header(block, key: str):
     return F.regexp_extract(block, rf"(?m)^{key}=([^\r\n]*)", 1)
 
 
-def _header_num(block, key: str):
-    """Numeric header field; absent key → NULL (ANSI-safe cast)."""
-    return F.nullif(
-        F.regexp_extract(_header(block, key), r"([0-9.eE+-]+)", 1), F.lit("")
-    ).cast("double")
-
-
 def read_mgf(spark: SparkSession, paths: str | list[str]) -> DataFrame:
     """Read one or many MGF files into the canonical spectra DataFrame."""
     raw = (

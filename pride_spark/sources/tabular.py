@@ -1,6 +1,6 @@
-"""Tabular sources: MaraCluster TSV, SDRF sample tables, work-queue CSV.
+"""Tabular sources: MaraCluster TSV and SDRF sample tables.
 
-SURVEY §2.1 S11–S13.
+SURVEY §2.1 S11–S12.
 """
 
 from __future__ import annotations
@@ -87,15 +87,3 @@ def read_sdrf(spark: SparkSession, path: str | list[str]) -> DataFrame:
         F.col(file_col).alias("dataFile"),
         F.stack(F.lit(len(chars)), *pairs).alias("name", "value"),
     ).filter(F.col("value").isNotNull())
-
-
-def read_work_queue(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    """S13 — submissions work-queue CSV with ftp→https URL rewrite.
-
-    Ref: ``submissions.nf:94-98`` (`splitCsv` + replace). The rewrite is a
-    single ``regexp_replace`` projection.
-    """
-    df = spark.read.csv(path, sep=",", header=True)
-    for c in df.columns:
-        df = df.withColumn(c, F.regexp_replace(F.col(c), r"^ftp://", "https://"))
-    return df

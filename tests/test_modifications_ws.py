@@ -63,13 +63,28 @@ def test_regroup_flat_agrees_with_in_row(spark):
     flat = regroup_modifications_flat(df, ["psmId"]).collect()
     key = lambda r: (r["psmId"], r["accession"])
     assert sorted(map(tuple, in_row)) == sorted(map(tuple, flat))
-    # r13: the zero-shuffle row_unique_keys path must agree exactly when
-    # the caller's guarantee holds (psmId is unique per row in _psms) —
-    # incl. empty mods arrays and null-accession entries
-    inrow_flat = regroup_modifications_flat(
-        df, ["psmId"], row_unique_keys=True
-    ).collect()
-    assert sorted(map(tuple, inrow_flat)) == sorted(map(tuple, flat))
+
+
+def test_regroup_flat_merges_rows_with_a_repeated_key(spark):
+    """A key repeated across rows gives ONE row per (key, accession), with
+    the union of the rows' positions, as a SQL ``GROUP BY`` does; not one
+    row per input row."""
+    from pride_spark.operators.modifications import regroup_modifications_flat
+
+    df = spark.createDataFrame(
+        [
+            ("psm1", [(3, "UNIMOD:21", "Phospho"), (1, "UNIMOD:35", "Oxidation")]),
+            ("psm1", [(5, "UNIMOD:21", "Phospho"), (3, "UNIMOD:21", "Phospho")]),
+            ("psm2", [(2, "UNIMOD:21", "Phospho")]),
+        ],
+        f"psmId string, modifications {RAW_MOD_TYPE}",
+    )
+    got = sorted(map(tuple, regroup_modifications_flat(df, ["psmId"]).collect()))
+    assert got == [
+        ("psm1", "UNIMOD:21", "Phospho", [3, 5]),
+        ("psm1", "UNIMOD:35", "Oxidation", [1]),
+        ("psm2", "UNIMOD:21", "Phospho", [2]),
+    ]
 
 
 def test_protein_coordinate_mapping(spark):

@@ -1,8 +1,10 @@
 """Session factory guards: static conf that cannot be applied at
-runtime must be loudly diagnosed on borrowed sessions."""
+runtime must be loudly diagnosed on borrowed sessions; a new driver JVM
+starts from a class-data-sharing archive."""
 
 from __future__ import annotations
 
+import os
 import pathlib
 import warnings
 
@@ -100,6 +102,139 @@ def test_build_once_protocol_only_in_ann_index():
         line for line in _package_lines("os.rename(", "shutil", "tempfile", skip_session=False)
         if line.startswith("registry.py:")
     ] == []
+
+
+def test_jvm_launch_flags_only_in_session_module():
+    """JVM launch flags and the conf-dir swap of the class-data-sharing
+    launch live in ``get_spark`` alone; no other module sets them."""
+    assert _package_lines("JavaOptions", "SPARK_CONF_DIR") == []
+
+
+# --- JVM start: class-data sharing -------------------------------------------
+
+
+@pytest.fixture
+def cds_env(tmp_path):
+    """A fake Spark install (one jar, a template-only conf dir), a fake
+    JDK and a private cache: the inputs ``cds_launch`` reads."""
+    home = tmp_path / "spark"
+    (home / "jars").mkdir(parents=True)
+    (home / "jars" / "spark-core.jar").write_bytes(b"jar")
+    (home / "conf").mkdir()
+    (home / "conf" / "spark-defaults.conf.template").write_text("spark.x 1\n")
+    (tmp_path / "jdk" / "bin").mkdir(parents=True)
+    (tmp_path / "jdk" / "bin" / "java").write_text("")
+    return {
+        "SPARK_HOME": str(home),
+        "JAVA_HOME": str(tmp_path / "jdk"),
+        "XDG_CACHE_HOME": str(tmp_path / "cache"),
+    }
+
+
+def test_cds_absent_archive_dumps_to_a_part_file(cds_env):
+    env = dict(cds_env)
+    got = S.cds_launch({}, env, 4242)
+    cache = pathlib.Path(cds_env["XDG_CACHE_HOME"]) / "pride_spark" / "cds"
+    assert got.archive.startswith(str(cache)) and got.archive.endswith(".jsa")
+    assert got.part == f"{got.archive}.4242.part"
+    assert got.conf == {
+        "spark.driver.defaultJavaOptions": f"-XX:ArchiveClassesAtExit={got.part} -Xlog:cds*=off"
+    }
+    # the template-only conf dir is swapped for an empty one under the cache
+    assert got.env == {"SPARK_CONF_DIR": str(cache / "conf")}
+    assert list((cache / "conf").iterdir()) == []
+    assert env == cds_env  # the caller's environment is not touched
+
+
+def test_cds_present_archive_is_mapped(cds_env):
+    archive = S.cds_launch({}, cds_env, 1).archive
+    pathlib.Path(archive).write_bytes(b"")
+    got = S.cds_launch({}, cds_env, 1)
+    assert got.part is None
+    assert got.conf["spark.driver.defaultJavaOptions"] == (
+        f"-XX:SharedArchiveFile={archive} -Xlog:cds*=off"
+    )
+
+
+def test_cds_key_follows_the_jar_listing(cds_env):
+    before = S.cds_launch({}, cds_env, 1).archive
+    (pathlib.Path(cds_env["SPARK_HOME"]) / "jars" / "extra.jar").write_bytes(b"x")
+    assert S.cds_launch({}, cds_env, 1).archive != before
+
+
+def test_cds_keeps_caller_java_options(cds_env):
+    conf = {
+        "spark.driver.extraJavaOptions": "-Dcaller.extra=1",
+        "spark.driver.defaultJavaOptions": "-Dcaller.default=1",
+    }
+    got = S.cds_launch(conf, cds_env, 1)
+    # extraJavaOptions (perfbench's) is appended by Spark after these
+    assert "spark.driver.extraJavaOptions" not in got.conf
+    opts = got.conf["spark.driver.defaultJavaOptions"].split()
+    assert opts[0].startswith("-XX:ArchiveClassesAtExit=")
+    assert opts[-1] == "-Dcaller.default=1"
+
+
+@pytest.mark.parametrize("case", ["live_defaults_conf", "extra_class_path", "dist_classpath"])
+def test_cds_off_when_classpath_has_more_than_jars(cds_env, case):
+    """A conf dir Spark reads, or any extra classpath entry, would put a
+    non-empty directory on the classpath, which aborts a JDK 17 dump: no
+    CDS flag, and SPARK_CONF_DIR stays as it is."""
+    env, conf = dict(cds_env), {}
+    if case == "live_defaults_conf":
+        (pathlib.Path(env["SPARK_HOME"]) / "conf" / "spark-defaults.conf").write_text("")
+    elif case == "extra_class_path":
+        conf["spark.driver.extraClassPath"] = "extra-classes"
+    else:
+        env["SPARK_DIST_CLASSPATH"] = "hadoop-jars/*"
+    assert S.cds_launch(conf, env, 1) is None
+
+
+def test_cds_off_when_cache_not_writable(cds_env):
+    pathlib.Path(cds_env["XDG_CACHE_HOME"]).write_text("")  # a file, not a dir
+    assert S.cds_launch({}, cds_env, 1) is None
+
+
+_CDS_CHILD = """
+import sys
+from pride_spark.session import get_spark
+spark = get_spark("cds-test", master="local[1]", shuffle_partitions=1)
+assert spark.range(3).count() == 3
+with open(f"/proc/{spark.sparkContext._gateway.proc.pid}/maps") as fh:
+    maps = fh.read()
+print("MAPS", sorted({l.split()[-1] for l in maps.splitlines() if l.endswith(".jsa")}))
+"""
+
+
+def test_cds_archive_published_on_clean_exit_then_mapped(tmp_path):
+    """First launch dumps and publishes ``<key>.jsa`` after its JVM exits;
+    the second launch's JVM maps it.  Neither prints a CDS log line."""
+    import subprocess
+    import sys
+
+    root = pathlib.Path(S.__file__).parent.parent
+    env = {
+        **os.environ,
+        "XDG_CACHE_HOME": str(tmp_path),
+        "PYTHONPATH": os.pathsep.join(filter(None, [str(root), os.environ.get("PYTHONPATH")])),
+        "SPARK_DRIVER_MEMORY": "512m",
+    }
+    env.pop("SPARK_CONF_DIR", None)
+    cache = tmp_path / "pride_spark" / "cds"
+    runs = []
+    for _ in range(2):
+        out = subprocess.run(
+            [sys.executable, "-c", _CDS_CHILD], env=env, cwd=tmp_path,
+            capture_output=True, text=True, timeout=300,
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        runs.append(out.stdout)
+        assert not [p for p in cache.iterdir() if p.name.endswith(".part")]
+    archives = sorted(str(p) for p in cache.glob("*.jsa"))
+    assert len(archives) == 1
+    assert archives[0] not in runs[0] and archives[0] in runs[1]
+    for stdout in runs:
+        assert "[cds" not in stdout and "[warning]" not in stdout
 
 
 _RELEASE_CASES = {
