@@ -18,7 +18,6 @@ Layout
   MaraCluster, MGF (SURVEY §2.1–§2.2)
 - ``pride_spark.plans``      — end-to-end pipeline compositions (the CLI
   commands of the reference: generate-index-files, perform-inference, ...)
-- ``pride_spark.streaming``  — Structured Streaming surface over events
 """
 
 __version__ = "0.1.0"

@@ -171,9 +171,9 @@ def build_ivf_index(
 
 def _resolve_n_probe(n_probe, meta) -> int:
     """None -> full probe; "auto" -> ceil(sqrt(n_centroids)), the
-    classical IVF heuristic (resolved HERE so both search siblings and
-    the streaming sink accept it — r12 review: the auto branch lived
-    only in the PQ search, so search_ivf_index("auto") crashed with an
+    classical IVF heuristic (resolved HERE so both search siblings
+    accept it — r12 review: the auto branch lived only in the PQ
+    search, so search_ivf_index("auto") crashed with an
     opaque str-vs-int TypeError); explicit values validated at the API
     boundary (n_probe=0 silently became a FULL probe — the opposite
     extreme — and negatives failed deep inside F.slice; r10 review)."""
@@ -200,9 +200,9 @@ def _gc_tmp_siblings(tmp: str, prefix: str, keep: str) -> None:
     hour (a builder that crashed between build and rename), but
     PUBLISHED sibling dirs only after 24 h WITHOUT a serve — every
     serve touches the dir mtime (:func:`_touch_served`), so a
-    long-lived session (streaming ANN serving, a gate run on another
-    sf dir) that is actively reading an index built hours ago never
-    has it rmtree'd out from under in-flight parquet reads."""
+    long-lived session (a gate run on another sf dir) that is actively
+    reading an index built hours ago never has it rmtree'd out from
+    under in-flight parquet reads."""
     for entry in os.listdir(tmp):
         if entry == keep or not entry.startswith(prefix):
             continue
@@ -264,8 +264,7 @@ def build_once(prefix: str, key: str, build: Callable[[str], None]) -> str:
 def _load_meta(path: str) -> dict:
     p = path.removeprefix("file:")
     # every search loads meta first, so serve-touching here marks the
-    # index as actively served for ANY caller (batch search, streaming
-    # foreachBatch serving, another process)
+    # index as actively served for ANY caller (this process or another)
     _touch_served(p)
     with open(os.path.join(p, "meta.json")) as fh:
         return json.load(fh)

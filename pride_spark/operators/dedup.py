@@ -54,33 +54,6 @@ def word_shingles(text_col: str, n: int = 3) -> Column:
     return F.expr(word_shingles_sql(f"`{text_col}`", n))
 
 
-#: hash i = 8-hex-char (32-bit) chunk i%4 of md5(f"{i//4}|" + shingle).
-#: One md5 yields FOUR independent 32-bit min-hash values: md5 output bits
-#: are uniform and independent, and 32 bits is ample for a min-hash value
-#: domain, so this quarters the md5 invocations AND the signature width vs
-#: one full digest per hash — md5 is the dominant map-side cost of
-#: near-dedup at scale.  Fixed-length lowercase hex compares like the
-#: number it encodes, in any engine (the DuckDB oracles mirror this
-#: SUBSTR(MD5(..)) derivation exactly).
-def _chunk_hash_sql(sh: str, i: int) -> str:
-    return f"substring(md5(concat('{i // 4}|', {sh})), {(i % 4) * 8 + 1}, 8)"
-
-
-def minhash_signature(text_col: str, num_hashes: int = 8, shingle_n: int = 3) -> Column:
-    """k independent 32-bit min-hashes over the shingles of the column
-    named ``text_col`` (chunked md5, see :func:`_chunk_hash_sql`); output
-    is ``array<string>`` of length ``num_hashes``."""
-    sh = word_shingles_sql(f"`{text_col}`", shingle_n)
-    return F.expr(
-        "array("
-        + ", ".join(
-            f"array_min(transform({sh}, s -> {_chunk_hash_sql('s', i)}))"
-            for i in range(num_hashes)
-        )
-        + ")"
-    )
-
-
 def shingle_rows(
     df: DataFrame,
     text_col: str,
@@ -136,6 +109,14 @@ def shingle_rows(
     return sh.distinct() if distinct else sh
 
 
+# Chunked md5: hash i = 8-hex-char (32-bit) chunk i%4 of md5(f"{i//4}|" + shingle).
+# One md5 yields FOUR independent 32-bit min-hash values: md5 output bits
+# are uniform and independent, and 32 bits is ample for a min-hash value
+# domain, so this quarters the md5 invocations AND the signature width vs
+# one full digest per hash — md5 is the dominant map-side cost of
+# near-dedup at scale.  Fixed-length lowercase hex compares like the
+# number it encodes, in any engine (the DuckDB oracles mirror this
+# SUBSTR(MD5(..)) derivation exactly).
 def minhash_signatures_df(
     df: DataFrame,
     text_col: str,
@@ -150,8 +131,8 @@ def minhash_signatures_df(
     The scalable shape: shingle rows come from the codegen window form
     (:func:`shingle_rows`; no distinct — duplicates cannot change a min),
     each md5 digest is computed ONCE and split into four 32-bit chunk
-    hashes (:func:`_chunk_hash_sql` — explicit two-step select so the digest
-    is never recomputed per chunk), and the signature is a single ``min``
+    hashes (explicit two-step select so the digest is never recomputed
+    per chunk), and the signature is a single ``min``
     aggregation that reuses the window's id-partitioning — no second
     exchange.  Output: (id, mh0..mh{k-1}).
 
@@ -159,7 +140,7 @@ def minhash_signatures_df(
     frame (e.g. a text digest) and attached to the output by name.  They
     ride the id frame of the null-preservation join that already exists,
     so consumers needing (signature, digest) per id — incremental dedup's
-    sides, the streaming corpus index — pay ZERO additional joins.
+    sides — pay ZERO additional joins.
     """
     n_digests = (num_hashes + 3) // 4
     sh = shingle_rows(df, text_col, id_col, shingle_n)

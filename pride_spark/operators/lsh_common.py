@@ -46,44 +46,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def array_band_digests(sig, num_hashes: int, bands: int):
-    """Band digests over an ARRAY-typed minhash signature column:
-    ``array(md5(concat_ws('|', band-slice)))`` — the in-row banding key
-    the streaming dedup path uses (stream-side rows can't take the
-    batch explode/groupBy shape).
-
-    ONE definition shared by :func:`streaming.dedup.corpus_band_index`
-    (which persists these digests in the on-disk corpus index) and
-    :func:`streaming.dedup.flag_stream_corpus_dups` (which computes the
-    probe side per arriving doc): the two sides equi-join on this key,
-    so any drift between private copies would silently match nothing
-    (r10 review).  The byte format is frozen by existing indexes —
-    change it only with an index version bump.
-
-    Distinct from :func:`pride_spark.operators.dedup._band_digests_sql`
-    (column-shaped signatures, the DuckDB-oracle-matching format) and
-    the spectral path's ','-joined digest; all three formats are
-    load-bearing for their own stored artifacts/oracles.
-    """
-    from pyspark.sql import functions as F
-
-    rows_per_band = num_hashes // bands
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.element_at(sig, i + 1)
-                        for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                    ],
-                )
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def cap_buckets(
     frame: DataFrame, keys: Sequence[str], max_bucket: int | None
 ) -> DataFrame:

@@ -126,7 +126,7 @@ def _sig_frame(binned: DataFrame, num_hashes: int, hash_fn: str) -> DataFrame:
     # identical parsed expressions — tools/plan_normdiff.py)
     binrows = binned.selectExpr("key", "explode(bins) AS b")
     if hash_fn == "md5":
-        # chunked md5 (dedup._chunk_hash_sql): 4 independent 8-hex-char
+        # chunked md5 (as in dedup.minhash_signatures_df): 4 independent 8-hex-char
         # minhash values per digest, one md5 per (bin, seed-group)
         n_digests = (num_hashes + 3) // 4
         digests = binrows.selectExpr(
@@ -407,7 +407,7 @@ def cluster_spectra(
     method: ``"xx64"`` (default) is Spark's xxhash64 — fastest, but
     engine-specific; ``"md5"`` derives each minhash value as an
     8-hex-char chunk of ``md5(f"{seed}|{bin}")`` (four values per digest,
-    same chunking as ``dedup._chunk_hash_sql``) and each band digest as the
+    same chunking as ``dedup.minhash_signatures_df``) and each band digest as the
     md5 of the band slice — bit-reproducible in any engine with md5, so
     the PRODUCTION candidate path (banding, first-collision emission,
     Jaccard gate, connected components) gets a DuckDB oracle row

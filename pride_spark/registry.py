@@ -719,11 +719,11 @@ def q18_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Tumbling time window (batch shape of the streaming surface, SURVEY §2.12)
+# Tumbling time window (F.window over the events table)
 # + hypertable rollup (operators.timeseries.hypertable_rollup — the brief's
 # named multi-resolution time-bucket operator; q50/q13 fold pattern under
-# the 50-entry driver cap).  kind='window_hour' keeps the streaming-
-# compatible F.window path; kind='ht_*' rows come from the CASCADING
+# the 50-entry driver cap).  kind='window_hour' is the F.window path;
+# kind='ht_*' rows come from the CASCADING
 # re-aggregation (hour from raw — the only full-data shuffle — day from
 # hours, week from days, month from DAYS — not weeks: an ISO week can
 # straddle a month boundary, so the cascade draws each level from the
@@ -936,7 +936,7 @@ _MINHASH_ORACLE = r"""
     )
     SELECT doc_id,
            -- hash i = 32-bit chunk i%4 of MD5((i//4) || '|' || shingle);
-           -- mirrors dedup._chunk_hash_sql (one digest -> four min-hash values)
+           -- mirrors dedup.minhash_signatures_df (one digest -> four min-hash values)
            LIST_MIN(LIST_TRANSFORM(sh, x -> SUBSTR(MD5('0|' || x), 1, 8))) AS mh0,
            LIST_MIN(LIST_TRANSFORM(sh, x -> SUBSTR(MD5('0|' || x), 9, 8))) AS mh1,
            LIST_MIN(LIST_TRANSFORM(sh, x -> SUBSTR(MD5('0|' || x), 17, 8))) AS mh2,
@@ -967,7 +967,7 @@ def q23_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
                             i -> ARRAY_TO_STRING(LIST_SLICE(w, i, i + 2), ' ')) AS sh
       FROM t
     ), sig AS (
-      -- chunked md5 min-hashes mirroring dedup._chunk_hash_sql: hash i is the
+      -- chunked md5 min-hashes mirroring dedup.minhash_signatures_df: hash i is the
       -- 8-hex-char chunk i%4 of MD5((i//4) || '|' || shingle)
       SELECT doc_id, text, sh,
              [LIST_MIN(LIST_TRANSFORM(sh, x -> SUBSTR(MD5('0|' || x), 1, 8))),
@@ -1550,8 +1550,8 @@ def q35_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sliding (hopping) window aggregation — streaming surface, batch-checked
-# (pride_spark.streaming.events.sliding_counts; SURVEY §2.12 extension).
+# Sliding (hopping) window aggregation
+# (pride_spark.operators.events.sliding_counts).
 # ---------------------------------------------------------------------------
 @register(
     "q36_sliding_window",
@@ -1571,16 +1571,14 @@ def q35_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q36_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pride_spark.streaming.events import sliding_counts
+    from pride_spark.operators.events import sliding_counts
 
-    return sliding_counts(
-        _events(spark, sf_dir), window="1 hour", slide="30 minutes", streaming=False
-    )
+    return sliding_counts(_events(spark, sf_dir), window="1 hour", slide="30 minutes")
 
 
 # ---------------------------------------------------------------------------
-# Session windows (gap-based) — streaming surface, batch-checked
-# (pride_spark.streaming.events.session_counts).  Oracle: gaps-and-islands.
+# Session windows (gap-based)
+# (pride_spark.operators.events.session_counts).  Oracle: gaps-and-islands.
 # ---------------------------------------------------------------------------
 @register(
     "q37_session_window",
@@ -1611,9 +1609,9 @@ def q36_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q37_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pride_spark.streaming.events import session_counts
+    from pride_spark.operators.events import session_counts
 
-    return session_counts(_events(spark, sf_dir), gap="30 minutes", streaming=False)
+    return session_counts(_events(spark, sf_dir), gap="30 minutes")
 
 
 # ---------------------------------------------------------------------------
@@ -2842,10 +2840,9 @@ def q50_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Temporal joins over events, one union-shaped gate row (the q50 fold
 # pattern, keeping the 50-entry driver cap):
 #
-# - kind='range'       — stream-stream time-range join (SURVEY §2.12
-#   extension; pride_spark.streaming.joins.correlate_event_pairs).  Same
-#   body serves readStream (watermark-bounded state) and this batch oracle
-#   (equi-key sort-merge join + range post-filter).
+# - kind='range'       — per-user time-range join
+#   (pride_spark.operators.events.correlate_event_pairs): equi-key
+#   sort-merge join + range post-filter.
 # - kind='asof_back'   — operators.joins.asof_join backward with ``by``
 #   keys AND ``tolerance`` (pandas merge_asof semantics); DuckDB's native
 #   ASOF LEFT JOIN (>= , backward-inclusive) is the oracle, tolerance as a
@@ -2910,7 +2907,7 @@ def q50_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q52_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pride_spark.operators.joins import asof_join
-    from pride_spark.streaming.joins import correlate_event_pairs
+    from pride_spark.operators.events import correlate_event_pairs
 
     ev = _events(spark, sf_dir)
     # epoch micros regardless of whether ts surfaced as TIMESTAMP (legacy
@@ -2926,7 +2923,7 @@ def q52_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out_cols = ["kind", "user_id", "trigger_id", "outcome_id", "latency_us"]
 
-    rng = correlate_event_pairs(ev, ev, streaming=False).select(
+    rng = correlate_event_pairs(ev, ev).select(
         F.lit("range").alias("kind"), "user_id", "trigger_id", "outcome_id", "latency_us"
     )
 

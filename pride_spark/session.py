@@ -96,9 +96,8 @@ def get_spark(
         builder = builder.config(k, v)
     from pyspark import SparkContext
 
-    cds = None
-    if SparkContext._gateway is None:  # this call launches the driver JVM
-        cds = cds_launch(extra_conf or {}, os.environ, os.getpid())
+    launch = SparkContext._gateway is None  # this call launches the driver JVM
+    cds = cds_launch(extra_conf or {}, os.environ, os.getpid()) if launch else None
     if cds is None:
         spark = builder.getOrCreate()
     else:
@@ -114,8 +113,9 @@ def get_spark(
                     del os.environ[k]
                 else:
                     os.environ[k] = v
-        if cds.part is not None:
-            atexit.register(_publish_archive, spark.sparkContext._gateway.proc, cds)
+    proc = spark.sparkContext._gateway.proc if launch else None
+    if proc is not None:  # None: spark-submit started the JVM, not this call
+        atexit.register(_stop_driver_jvm, proc, cds)
     # getOrCreate RETURNS A PRE-EXISTING SESSION with builder configs
     # silently ignored (r10 review): a borrowed session with a non-UTC
     # timezone would shift every TIMESTAMP_NTZ cast and every window
@@ -139,13 +139,14 @@ def get_spark(
 # 4.8-6.6 s -> 2.4-3.6 s on 4 cores (perfbench registry, 10 runs a side).
 # JDK 17 has no -XX:+AutoCreateSharedArchive, so the first launch dumps the
 # archive at JVM exit into a private ``.part`` file, and
-# :func:`_publish_archive` renames it into place only after a clean
+# :func:`_stop_driver_jvm` renames it into place only after a clean
 # exit.  The JVM validates an archive against its own build
 # and classpath and runs without it on a mismatch: a stale archive can
 # lose the gain but never change a result.  Delete the cache dir to reset.
 # ---------------------------------------------------------------------------
 
-#: Seconds the exit hook waits for the driver JVM to finish its dump.
+#: Seconds the exit hook waits for the driver JVM to exit (a dumping JVM
+#: writes its archive first).
 _DUMP_WAIT_S = 120
 
 
@@ -229,14 +230,16 @@ def cds_launch(conf: Mapping[str, str], environ: Mapping[str, str], pid: int) ->
     )
 
 
-def _publish_archive(proc, cds: CdsLaunch) -> None:
-    """Exit hook of a dumping launch: stop the session, close the
-    gateway's stdin (the JVM exits on EOF and dumps), wait for the JVM,
-    and publish the dump only if it exited cleanly.  Archives of other
+def _stop_driver_jvm(proc, cds: CdsLaunch | None) -> None:
+    """Exit hook of every driver JVM launch: stop the session, close the
+    gateway's stdin (the JVM exits on EOF, dumping first when ``cds.part``
+    is set) and wait for the JVM, so it never outlives this process.  A
+    dump is published only if the JVM exited cleanly.  Archives of other
     keys and dumps orphaned by dead processes are removed on publish; this
     launch's ``.part`` file never outlives the hook."""
     from pyspark import SparkContext
 
+    part = cds.part if cds is not None else None
     try:
         sc = SparkContext._active_spark_context
         if sc is not None:
@@ -244,8 +247,8 @@ def _publish_archive(proc, cds: CdsLaunch) -> None:
                 sc.stop()
         with contextlib.suppress(OSError):
             proc.stdin.close()
-        if proc.wait(timeout=_DUMP_WAIT_S) == 0 and os.path.isfile(cds.part):
-            os.replace(cds.part, cds.archive)
+        if proc.wait(timeout=_DUMP_WAIT_S) == 0 and part and os.path.isfile(part):
+            os.replace(part, cds.archive)
             cache, mine = os.path.split(cds.archive)
             for name in os.listdir(cache):
                 stale = name.endswith(".jsa") and name != mine
@@ -257,8 +260,9 @@ def _publish_archive(proc, cds: CdsLaunch) -> None:
     except (OSError, subprocess.TimeoutExpired):
         pass
     finally:
-        with contextlib.suppress(OSError):
-            os.remove(cds.part)
+        if part:
+            with contextlib.suppress(OSError):
+                os.remove(part)
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:

@@ -33,11 +33,6 @@ def strip_compression(name: Column | str) -> Column:
     return F.regexp_replace(c, r"(?i)\.(gz|zip)$", "")
 
 
-def is_compressed(name: Column | str) -> Column:
-    c = F.col(name) if isinstance(name, str) else name
-    return F.lower(c).rlike(r"\.(gz|zip)$")
-
-
 def file_type_by_name(name: Column | str) -> Column:
     """S5 — ``when`` chain over the lower-cased decompressed extension."""
     base = strip_compression(name)

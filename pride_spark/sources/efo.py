@@ -93,16 +93,3 @@ def enrich_with_efo(characteristics: DataFrame, efo_terms: DataFrame) -> DataFra
     )
 
 
-def read_sdrf_enriched(
-    spark: SparkSession,
-    sdrf_path: str | list[str],
-    efo_path: str | list[str],
-    *,
-    efo_format: str = "obo",
-) -> DataFrame:
-    """S12 + J10 composed: melted SDRF characteristics with EFO
-    accessions attached.  ``efo_format`` is ``"obo"`` or ``"tsv"``."""
-    from pride_spark.sources.tabular import read_sdrf
-
-    reader = read_efo_obo if efo_format == "obo" else read_efo_tsv
-    return enrich_with_efo(read_sdrf(spark, sdrf_path), reader(spark, efo_path))

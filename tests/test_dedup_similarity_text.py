@@ -891,30 +891,6 @@ def test_pq_index_vectors_partition_pruned(spark, tmp_path):
     assert bs == vs  # full probe + oversized rerank = exact
 
 
-def test_stream_ann_sink_on_plain_ivf_index(spark, tmp_path):
-    """r9 review: the default sink must serve a PLAIN IVF index by
-    dispatching on the index meta instead of crashing the stream with
-    'built without pq_codebooks'.  Defaults are rerank=None +
-    n_probe='auto' since r12; the batch comparison uses the SAME knobs
-    so CONTENTS (not just counts) must match (r12 advice — the old
-    full-probe `want` only agreed by row count)."""
-    from pride_spark.operators.ann_index import build_ivf_index, search_ivf_index
-    from pride_spark.streaming.similarity import make_ann_batch_sink
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    path = str(tmp_path / "plainidx")
-    build_ivf_index(emb, path, n_centroids=8)
-    sink = make_ann_batch_sink(path, str(tmp_path / "out"))
-    sink(emb.filter("vec_id < 6"), 0)
-    got = spark.read.parquet(str(tmp_path / "out"))
-    want = search_ivf_index(
-        spark, path, emb.filter("vec_id < 6"), k=3, n_probe="auto"
-    )
-    gs = {(r["query_id"], r["nbr_id"], r["rank"]) for r in got.collect()}
-    ws = {(r["query_id"], r["nbr_id"], r["rank"]) for r in want.collect()}
-    assert gs == ws and len(gs) > 0
-
-
 def test_token_count_empty_text_is_zero(spark):
     """r10 review: split('') yields [''] in Spark — tokens() filters the
     empty element so empty/whitespace-only docs count 0 tokens, not 1."""

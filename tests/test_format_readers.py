@@ -5,7 +5,7 @@ from __future__ import annotations
 import textwrap
 
 from pride_spark.sources.mzid import read_mzid_psms, read_mzid_spectra_data
-from pride_spark.sources.mztab import read_mztab_ms_runs, read_mztab_psms
+from pride_spark.sources.mztab import read_mztab_psms
 
 MZTAB = (
     "MTD\tmzTab-version\t1.0.0\n"
@@ -81,9 +81,6 @@ def test_mztab_psms(spark, tmp_path):
     assert rows["1"]["retentionTime"] == 55.2 and rows["1"]["precursorCharge"] == 2
     assert rows["2"]["score"] is None and rows["2"]["retentionTime"] is None
     assert rows["2"]["sourceId"] == "index=7" and rows["2"]["msRun"] == 2
-
-    runs = {r["msRun"]: r["location"] for r in read_mztab_ms_runs(spark, str(p)).collect()}
-    assert runs == {1: "file:///data/run1.mzML", 2: "file:///data/run2.mgf"}
 
 
 def test_mzid_psms_and_spectra_data(spark, tmp_path):
@@ -688,10 +685,10 @@ def test_mzxml_iterparse_memory_bounded(tmp_path):
     assert peak < base + file_bytes / 4, (peak, base, file_bytes)
 
 
-def test_mztab_proteins_and_peptides(spark, tmp_path):
-    """PRT/PEP pass-through fidelity (PIAModelerService.java:162-189
-    consumes full mzTab, author protein/peptide rows included)."""
-    from pride_spark.sources.mztab import read_mztab_peptides, read_mztab_proteins
+def test_mztab_proteins(spark, tmp_path):
+    """PRT pass-through fidelity (PIAModelerService.java:162-189 consumes
+    full mzTab, author protein rows included)."""
+    from pride_spark.sources.mztab import read_mztab_proteins
 
     p = tmp_path / "a.mztab"
     p.write_text(MZTAB)
@@ -708,17 +705,6 @@ def test_mztab_proteins_and_peptides(spark, tmp_path):
     dec = prots["DECOY_Q99999"]
     assert dec["isDecoy"] is True and dec["taxid"] is None
     assert dec["bestSearchEngineScore"] is None and dec["ambiguityMembers"] == []
-
-    peps = {r["peptideSequence"]: r for r in read_mztab_peptides(spark, str(p)).collect()}
-    assert set(peps) == {"PEPTIDEK", "LNGVK"}
-    pk = peps["PEPTIDEK"]
-    assert pk["proteinAccession"] == "P12345" and pk["unique"] is True
-    assert pk["bestSearchEngineScore"] == 0.001 and pk["retentionTime"] == 55.2
-    assert pk["precursorCharge"] == 2 and pk["massToCharge"] == 445.12
-    assert pk["msRun"] == 1 and pk["sourceId"] == "scan=42"
-    lv = peps["LNGVK"]
-    assert lv["unique"] is False and lv["retentionTime"] is None
-    assert lv["msRun"] == 2 and lv["sourceId"] == "index=7"
 
 
 def test_apl_reader_mgf_parity(spark, tmp_path):

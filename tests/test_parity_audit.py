@@ -1,4 +1,5 @@
-"""PARITY_AUDIT.md stays honest: every engine site it cites must exist.
+"""PARITY_AUDIT.md and COVERAGE.md stay honest: every engine site they
+cite must exist.
 
 Parses the audit for `pride_spark`-relative ``*.py`` citations (with
 optional ``:line`` anchors) and asserts the file exists and is long
@@ -29,6 +30,31 @@ def test_cited_engine_sites_exist():
             n_lines = p.read_text().count("\n") + 1
             assert int(line) <= n_lines, (
                 f"PARITY_AUDIT cites {rel}:{line} but file has {n_lines} lines"
+            )
+
+
+COVERAGE = REPO / "COVERAGE.md"
+# `pride_spark/x/y.py`, `x/y.py` (package-relative), `tests/test_x.py`,
+# `test_x.py` and `test_x.py::test_name`
+PKG_CITE = re.compile(r"(?<![\w/])(?:pride_spark/)?((?:functions|operators|plans|sinks|sources|streaming)/\w+\.py)")
+TEST_CITE = re.compile(r"(?<![\w/])(?:tests/)?(test_\w+\.py)(?:::(test_\w+))?")
+
+
+def test_coverage_cites_existing_code_and_tests():
+    """COVERAGE.md stays honest: every package file, test file and test
+    function it names exists."""
+    text = COVERAGE.read_text()
+    files = set(PKG_CITE.findall(text))
+    tests = TEST_CITE.findall(text)
+    assert len(files) >= 30 and len(tests) >= 30, "coverage unexpectedly sparse — regex drift?"
+    for rel in sorted(files):
+        assert (REPO / "pride_spark" / rel).exists(), f"COVERAGE cites missing file {rel}"
+    for fname, func in tests:
+        path = REPO / "tests" / fname
+        assert path.exists(), f"COVERAGE cites missing test file {fname}"
+        if func:
+            assert re.search(rf"^def {func}\(", path.read_text(), re.M), (
+                f"COVERAGE cites missing test {fname}::{func}"
             )
 
 

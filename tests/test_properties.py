@@ -109,7 +109,7 @@ def test_minhash_signatures_match_python_reference(spark, docs):
         words = re.split(r"\s+", " ".join(w).strip())
         kk = max(len(words) - n + 1, 1)
         shingles = {" ".join(words[i : i + n]) for i in range(kk)}
-        # chunked md5 (dedup._chunk_hash_sql): hash i = 8-hex-char chunk i%4
+        # chunked md5 (dedup.minhash_signatures_df): hash i = 8-hex-char chunk i%4
         # of md5(f"{i//4}|" + shingle)
         want = tuple(
             min(

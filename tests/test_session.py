@@ -195,20 +195,39 @@ def test_cds_off_when_cache_not_writable(cds_env):
     assert S.cds_launch({}, cds_env, 1) is None
 
 
+def test_get_spark_tunes_borrowed_session(spark):
+    """getOrCreate returns pre-existing sessions with builder configs
+    silently ignored — get_spark must re-apply the runtime defaults so a
+    borrowed session's timezone/AQE matches the oracle."""
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    got = S.get_spark("borrowed")
+    assert got is spark  # same session: the borrowed-session path
+    assert got.conf.get("spark.sql.session.timeZone") == "UTC"
+    for k, v in S.RUNTIME_CONF.items():
+        assert got.conf.get(k) == v
+    # STATIC_CONF lands at creation (conftest builds via get_spark): the
+    # codegen-class cache must be big enough for a many-query session
+    for k, v in S.STATIC_CONF.items():
+        assert got.conf.get(k) == v
+
+
 _CDS_CHILD = """
 import sys
 from pride_spark.session import get_spark
 spark = get_spark("cds-test", master="local[1]", shuffle_partitions=1)
 assert spark.range(3).count() == 3
-with open(f"/proc/{spark.sparkContext._gateway.proc.pid}/maps") as fh:
+pid = spark.sparkContext._gateway.proc.pid
+with open(f"/proc/{pid}/maps") as fh:
     maps = fh.read()
 print("MAPS", sorted({l.split()[-1] for l in maps.splitlines() if l.endswith(".jsa")}))
+print("JVM", pid)
 """
 
 
 def test_cds_archive_published_on_clean_exit_then_mapped(tmp_path):
     """First launch dumps and publishes ``<key>.jsa`` after its JVM exits;
-    the second launch's JVM maps it.  Neither prints a CDS log line."""
+    the second launch's JVM maps it.  Neither prints a CDS log line, and
+    neither leaves its JVM running once the Python process returns."""
     import subprocess
     import sys
 
@@ -229,6 +248,8 @@ def test_cds_archive_published_on_clean_exit_then_mapped(tmp_path):
         )
         assert out.returncode == 0, out.stderr[-2000:]
         runs.append(out.stdout)
+        jvm = next(ln.split()[1] for ln in out.stdout.splitlines() if ln.startswith("JVM "))
+        assert not os.path.exists(f"/proc/{jvm}"), "driver JVM outlived its Python process"
         assert not [p for p in cache.iterdir() if p.name.endswith(".part")]
     archives = sorted(str(p) for p in cache.glob("*.jsa"))
     assert len(archives) == 1

@@ -13,7 +13,7 @@ from pride_spark.functions import spectrum_id as sid
 from pride_spark.sinks import mgf as mgf_sink
 from pride_spark.sinks.manifests import write_result_file_manifest
 from pride_spark.sources import dispatch
-from pride_spark.sources.jsonlines import point_lookup, read_archive_spectra, write_jsonlines
+from pride_spark.sources.jsonlines import read_archive_spectra, write_jsonlines
 from pride_spark.sources.mgf import read_mgf
 from pride_spark.sources.tabular import (
     DuplicateSpectrumIndexError,
@@ -105,7 +105,7 @@ def test_jsonlines_roundtrip_and_point_lookup(spark, tmp_path):
     # JSON read resets nullability flags; names+types must match exactly.
     assert back.schema.simpleString() == schemas.BINARY_ARCHIVE_SPECTRUM.simpleString()
     assert back.count() == 2
-    hit = point_lookup(back, ["mzspec:P1:f1:index:2"]).collect()
+    hit = back.filter(F.col("usi") == "mzspec:P1:f1:index:2").collect()
     assert len(hit) == 1 and hit[0]["isDecoy"] is True
 
 
@@ -185,7 +185,7 @@ def test_sdrf_efo_enrichment_end_to_end(spark, tmp_path):
     # the J10 shape: melted SDRF characteristics broadcast-left-joined to
     # the EFO dim; unknown names keep NULL accession like the reference's
     # Param (PrideAnalysisAssayService.java:342-347)
-    from pride_spark.sources.efo import read_sdrf_enriched
+    from pride_spark.sources.efo import enrich_with_efo, read_efo_obo
 
     sdrf = tmp_path / "sample.sdrf.tsv"
     sdrf.write_text(
@@ -196,7 +196,7 @@ def test_sdrf_efo_enrichment_end_to_end(spark, tmp_path):
     )
     obo = tmp_path / "efo.obo"
     obo.write_text(_EFO_OBO)
-    out = read_sdrf_enriched(spark, str(sdrf), str(obo))
+    out = enrich_with_efo(read_sdrf(spark, str(sdrf)), read_efo_obo(spark, str(obo)))
     rows = {(r["dataFile"], r["name"]): r["accession"] for r in out.collect()}
     assert rows[("f1.raw", "organism")] == "NCBITaxon:9606"
     assert rows[("f1.raw", "Disease")] == "EFO:0000408"  # case-insensitive
@@ -234,8 +234,6 @@ def test_file_type_dispatch(spark):
     )
     got = {r["name"]: r["t"] for r in df.select("name", dispatch.file_type_by_name("name").alias("t")).collect()}
     assert got == {"a.mzid": "MZID", "b.MzML.gz": "MZML", "c.mgf": "MGF", "d.mzTab": "MZTAB", "e.unknown": None}
-    comp = {r["name"]: r["c"] for r in df.select("name", dispatch.is_compressed("name").alias("c")).collect()}
-    assert comp["b.MzML.gz"] is True and comp["a.mzid"] is False
     assert dispatch.sniff_pride_xml("<MzIdentML xmlns=...>") == "MZID"
     assert dispatch.sniff_pride_xml("<ExperimentCollection>") == "PRIDE"
 

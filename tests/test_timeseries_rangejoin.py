@@ -177,149 +177,6 @@ def test_rollup_single_input_shuffle(spark, ts_df):
     assert "Expand" not in plan  # no grouping-sets row replication
 
 
-def test_hypertable_store_build_refresh_read(spark, ts_df, tmp_path):
-    """build on the first half, refresh with the second, read back —
-    must equal a from-raw rollup over the full history, and the refresh
-    must only touch the batch's dates."""
-    from pride_spark.operators.timeseries import (
-        build_hypertable_store,
-        read_hypertable,
-        refresh_hypertable_store,
-    )
-
-    path = str(tmp_path / "ht")
-    first = ts_df.filter("id < 250")
-    second = ts_df.filter("id >= 250")
-    build_hypertable_store(first, "ts", AGGS, path, finest="hour")
-    touched = refresh_hypertable_store(spark, path, second, "ts", AGGS, finest="hour")
-
-    # second half spans a strict subset of all dates; refresh reports them
-    second_dates = {
-        r["d"] for r in second.select(F.to_date("ts").alias("d")).distinct().collect()
-    }
-    assert set(touched) == second_dates
-
-    served = read_hypertable(spark, path, AGGS, resolutions=("hour", "day"))
-    direct = hypertable_rollup(ts_df, "ts", AGGS, resolutions=("hour", "day"))
-    cols = sorted(served.columns)
-    assert _rows(served, *cols) == _rows(direct, *cols)
-
-
-def test_hypertable_store_manifest_crash_and_gc_grace(spark, ts_df, tmp_path):
-    """Manifest protocol (r13) crash/GC semantics: (1) debris from an
-    aborted refresh (orphan object dirs + staging, manifest untouched)
-    leaves reads byte-identical to the last commit; (2) a commit keeps
-    the object dirs it DEREFERENCES on disk until the NEXT refresh
-    begins — the reader grace window — then sweeps them."""
-    import os
-
-    from pride_spark.operators.timeseries import (
-        _read_manifest,
-        build_hypertable_store,
-        read_hypertable,
-        refresh_hypertable_store,
-    )
-
-    path = str(tmp_path / "ht")
-    build_hypertable_store(ts_df.filter("id < 250"), "ts", AGGS, path, finest="hour")
-    before = _rows(read_hypertable(spark, path, AGGS), "level", "bucket_start", "n")
-    gen1_dirs = {
-        e["dir"] for e in _read_manifest(path)["partitions"].values()
-    }
-
-    # (1) aborted-attempt debris: reads are unaffected
-    os.makedirs(os.path.join(path, ".obj", "g999999-deadbeef-2024-01-01"))
-    os.makedirs(os.path.join(path, ".staging-deadbeef"))
-    after = _rows(read_hypertable(spark, path, AGGS), "level", "bucket_start", "n")
-    assert after == before
-
-    # (2) a real refresh: sweeps the debris, commits new dirs for the
-    # touched dates, and KEEPS the dereferenced gen-1 dirs (grace)
-    refresh_hypertable_store(
-        spark, path, ts_df.filter("id >= 250"), "ts", AGGS, finest="hour"
-    )
-    on_disk = set(os.listdir(os.path.join(path, ".obj")))
-    assert "g999999-deadbeef-2024-01-01" not in on_disk
-    live = {e["dir"] for e in _read_manifest(path)["partitions"].values()}
-    assert live <= on_disk
-    dereferenced = gen1_dirs - live
-    assert dereferenced and dereferenced <= on_disk  # grace window holds
-
-    # the next refresh's GC (empty batch: GC still runs at start even
-    # though the merge is a no-op) finally removes the dereferenced dirs
-    refresh_hypertable_store(
-        spark, path, ts_df.filter("id < 0"), "ts", AGGS, finest="hour"
-    )
-    on_disk2 = set(os.listdir(os.path.join(path, ".obj")))
-    assert not (dereferenced & on_disk2)
-    final = _rows(read_hypertable(spark, path, AGGS), "level", "bucket_start", "n")
-    direct = _rows(
-        hypertable_rollup(ts_df, "ts", AGGS, resolutions=("hour", "day")),
-        "level", "bucket_start", "n",
-    )
-    assert final == direct
-
-
-def test_hypertable_store_refuses_legacy_and_corrupt_manifest(spark, ts_df, tmp_path):
-    """A pre-manifest hive-layout store is refused by name (silently
-    reading it would bypass the commit protocol), and a PRESENT but
-    corrupt manifest raises instead of being guessed around."""
-    import json
-    import os
-
-    import pytest
-
-    from pride_spark.operators.timeseries import (
-        build_hypertable_store,
-        read_hypertable,
-        refresh_hypertable_store,
-    )
-
-    # legacy layout: part_date= dirs at the store root, no manifest
-    legacy = str(tmp_path / "legacy")
-    os.makedirs(os.path.join(legacy, "part_date=2024-01-01"))
-    with pytest.raises(ValueError, match="hive layout|pre-manifest"):
-        read_hypertable(spark, legacy, AGGS, resolutions=("hour",))
-    with pytest.raises(ValueError, match="hive layout|pre-manifest"):
-        refresh_hypertable_store(
-            spark, legacy, ts_df.limit(5), "ts", AGGS, finest="hour"
-        )
-
-    # corrupt manifest: refused loudly on read AND refresh
-    path = str(tmp_path / "ht")
-    build_hypertable_store(ts_df.filter("id < 100"), "ts", AGGS, path, finest="hour")
-    with open(os.path.join(path, "_manifest"), "w") as fh:
-        fh.write("{not json")
-    with pytest.raises(ValueError, match="corrupt"):
-        read_hypertable(spark, path, AGGS, resolutions=("hour",)).count()
-    with pytest.raises(ValueError, match="corrupt"):
-        refresh_hypertable_store(
-            spark, path, ts_df.limit(5), "ts", AGGS, finest="hour"
-        )
-    # structurally-wrong JSON (missing keys) is corrupt too
-    with open(os.path.join(path, "_manifest"), "w") as fh:
-        json.dump({"generation": "one"}, fh)
-    with pytest.raises(ValueError, match="corrupt"):
-        read_hypertable(spark, path, AGGS, resolutions=("hour",)).count()
-
-
-def test_hypertable_store_empty_refresh_noop(spark, ts_df, tmp_path):
-    from pride_spark.operators.timeseries import (
-        build_hypertable_store,
-        read_hypertable,
-        refresh_hypertable_store,
-    )
-
-    path = str(tmp_path / "ht")
-    build_hypertable_store(ts_df, "ts", AGGS, path, finest="hour")
-    before = _rows(read_hypertable(spark, path, AGGS), "level", "bucket_start", "n")
-    assert refresh_hypertable_store(
-        spark, path, ts_df.filter("id < 0"), "ts", AGGS, finest="hour"
-    ) == []
-    after = _rows(read_hypertable(spark, path, AGGS), "level", "bucket_start", "n")
-    assert before == after
-
-
 def test_rollup_avg_and_approx_distinct(spark, ts_df):
     """avg cascades exactly (decimal sum+count pair); HLL sketch
     estimates carry the direct sketch's accuracy at every cascaded
@@ -355,40 +212,6 @@ def test_rollup_avg_and_approx_distinct(spark, ts_df):
     tot = out.filter(F.col("level") == "total").first()
     assert tot["grp_dv"] == 2          # exact at tiny cardinality
     assert abs(tot["id_dv"] - 500) / 500 < 0.05   # HLL estimate of 500 ids
-
-
-def test_hypertable_store_with_sketches(spark, ts_df, tmp_path):
-    """HLL sketches and avg pairs survive the parquet round-trip and the
-    partition-pruned merge: avg exactly equals from-raw; sketch
-    estimates agree within sketch tolerance."""
-    from pride_spark.operators.timeseries import (
-        AggSpec,
-        build_hypertable_store,
-        hypertable_rollup,
-        read_hypertable,
-        refresh_hypertable_store,
-    )
-
-    aggs = [AggSpec("avg", "v", "v_avg"), AggSpec("approx_distinct", "id", "id_dv")]
-    path = str(tmp_path / "ht")
-    build_hypertable_store(ts_df.filter("id < 300"), "ts", aggs, path, finest="hour")
-    refresh_hypertable_store(
-        spark, path, ts_df.filter("id >= 300"), "ts", aggs, finest="hour"
-    )
-    served = {
-        (r["level"], r["bucket_start"]): r
-        for r in read_hypertable(spark, path, aggs, resolutions=("hour", "day")).collect()
-    }
-    direct = {
-        (r["level"], r["bucket_start"]): r
-        for r in hypertable_rollup(ts_df, "ts", aggs, resolutions=("hour", "day")).collect()
-    }
-    assert set(served) == set(direct)
-    for k in direct:
-        assert served[k]["v_avg"] == direct[k]["v_avg"]
-        assert abs(served[k]["id_dv"] - direct[k]["id_dv"]) <= max(
-            0.02 * direct[k]["id_dv"], 1.0
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -435,43 +258,20 @@ def test_week_finest_recomputes_month_from_raw(spark, straddle_df):
     assert months == {1: 1, 2: 2}
 
 
-def test_store_meta_validates_finest_and_week_cascade(spark, ts_df, tmp_path):
-    from pride_spark.operators.timeseries import (
-        build_hypertable_store,
-        read_hypertable,
-        refresh_hypertable_store,
-    )
-
-    path = str(tmp_path / "ht")
-    build_hypertable_store(ts_df, "ts", AGGS, path, finest="hour")
-    # mislabeled read: stored hour rows must not be served as 'day'
-    with pytest.raises(ValueError, match="finest"):
-        read_hypertable(spark, path, AGGS, resolutions=("day",))
-    # mismatched refresh grain would corrupt the merge
-    with pytest.raises(ValueError, match="finest"):
-        refresh_hypertable_store(spark, path, ts_df, "ts", AGGS, finest="day")
-
-    # a week-grained store cannot serve month (and raw is unavailable)
-    wpath = str(tmp_path / "htw")
-    build_hypertable_store(ts_df, "ts", AGGS, wpath, finest="week")
-    with pytest.raises(ValueError, match="straddle"):
-        read_hypertable(spark, wpath, AGGS, resolutions=("week", "month"))
-
-
 # ---------------------------------------------------------------------------
 # mergeable fixed-bin histogram measure
 # ---------------------------------------------------------------------------
 
 
-def test_histogram_cascade_equals_direct_and_quantile(spark, ts_df):
+def test_histogram_cascade_equals_direct(spark, ts_df):
     """Fixed-boundary counts SUM, so the cascaded histogram is exactly
-    the direct per-level histogram; quantile estimates interpolate
-    within bin resolution."""
-    from pride_spark.operators.timeseries import (
-        AggSpec,
-        histogram_quantile,
-        hypertable_rollup,
-    )
+    the direct per-level histogram."""
+    with pytest.raises(ValueError, match="bins"):
+        AggSpec("histogram", "v", "h")  # bins required
+    with pytest.raises(ValueError, match="increasing"):
+        AggSpec("histogram", "v", "h", bins=[1.0, 1.0])
+    with pytest.raises(ValueError, match="only valid"):
+        AggSpec("sum", "v", "s", bins=[1.0])
 
     bins = [0.25, 0.75, 1.25, 1.75]
     aggs = [AggSpec("count", None, "n"), AggSpec("histogram", "v", "v_hist", bins=bins)]
@@ -504,81 +304,3 @@ def test_histogram_cascade_equals_direct_and_quantile(spark, ts_df):
     # slot counts cover every non-null row
     tot = out.filter("level='total'").first()
     assert sum(tot["v_hist"]) == tot["n"]
-
-    # quantile estimate: median of v (uniform-ish over [0, 12/7]) lands
-    # in the right bin, within bin resolution
-    med = (
-        out.filter("level='total'")
-        .select(histogram_quantile("v_hist", bins, 0.5).alias("p50"))
-        .first()["p50"]
-    )
-    true_med = ts_df.approxQuantile("v", [0.5], 0.0)[0]
-    assert abs(med - true_med) <= 0.5  # one bin width
-
-    # p0/p100 clamp to the finite edges
-    row = out.filter("level='total'").select(
-        histogram_quantile("v_hist", bins, 0.001).alias("lo"),
-        histogram_quantile("v_hist", bins, 1.0).alias("hi"),
-    ).first()
-    assert row["lo"] == bins[0] and row["hi"] == bins[-1]
-
-
-def test_histogram_store_roundtrip_and_validation(spark, ts_df, tmp_path):
-    from pride_spark.operators.timeseries import (
-        AggSpec,
-        build_hypertable_store,
-        hypertable_rollup,
-        read_hypertable,
-        refresh_hypertable_store,
-    )
-
-    with pytest.raises(ValueError, match="bins"):
-        AggSpec("histogram", "v", "h")  # bins required
-    with pytest.raises(ValueError, match="increasing"):
-        AggSpec("histogram", "v", "h", bins=[1.0, 1.0])
-    with pytest.raises(ValueError, match="only valid"):
-        AggSpec("sum", "v", "s", bins=[1.0])
-
-    aggs = [AggSpec("histogram", "v", "v_hist", bins=[0.5, 1.0, 1.5])]
-    path = str(tmp_path / "ht")
-    build_hypertable_store(ts_df.filter("id < 250"), "ts", aggs, path, finest="hour")
-    refresh_hypertable_store(
-        spark, path, ts_df.filter("id >= 250"), "ts", aggs, finest="hour"
-    )
-    served = _rows(read_hypertable(spark, path, aggs), "level", "bucket_start", "v_hist")
-    direct = _rows(
-        hypertable_rollup(ts_df, "ts", aggs), "level", "bucket_start", "v_hist"
-    )
-    assert served == direct
-
-
-def test_corrupt_store_meta_raises_not_skips(spark, ts_df, tmp_path):
-    """Only a MISSING _meta skips validation (pre-meta stores); an
-    unreadable sidecar must raise rather than silently accept a
-    mismatched grain."""
-    import shutil
-
-    from pride_spark.operators.timeseries import (
-        build_hypertable_store,
-        read_hypertable,
-    )
-
-    path = str(tmp_path / "ht")
-    build_hypertable_store(ts_df, "ts", AGGS, path, finest="hour")
-
-    # corrupt sidecar: _meta present but unreadable as the expected record
-    # → raise (a silent skip would re-admit the mislabeled-grain bug)
-    meta_files = [
-        p
-        for p in (tmp_path / "ht" / "_meta").iterdir()
-        if p.name.endswith(".json")
-    ]
-    assert meta_files
-    for p in meta_files:
-        p.write_text('{"wrong_field": 1}\n')
-    with pytest.raises(Exception):
-        read_hypertable(spark, path, AGGS, resolutions=("hour",)).count()
-
-    # pre-meta store: no sidecar → validation skipped, read succeeds
-    shutil.rmtree(path + "/_meta")
-    assert read_hypertable(spark, path, AGGS, resolutions=("hour",)).count() > 0
