@@ -7,10 +7,13 @@ the only pandas-UDF escapes are in :mod:`pride_spark.functions.proforma`
 
 from pride_spark.functions.strings import (  # noqa: F401
     capitalize,
+    clean_file_name,
     clean_usi_special_chars,
     file_name_no_extension,
+    ftp_to_https,
     make_isobaric,
     remove_charge_state,
+    unimod_label_repair,
 )
 from pride_spark.functions.usi import build_usi, spectra_usi  # noqa: F401
 from pride_spark.functions.mass import (  # noqa: F401

@@ -51,3 +51,32 @@ def random_token() -> Column:
     return F.sha1(F.uuid())
 
 
+def peaks_to_arrays(peak_map: Column | str) -> tuple[Column, Column]:
+    """X2 — peak ``map<mz,intensity>`` → sorted parallel arrays.
+
+    Ref: ``PrideAnalysisAssayService.java:584-591`` iterates the peak map
+    into ``Double[]`` masses/intensities.  Sorted by m/z so output is
+    deterministic (Java HashMap order is not reproducible anyway).
+    """
+    m = _c(peak_map)
+    entries = F.array_sort(
+        F.transform(
+            F.map_entries(m),
+            lambda e: F.struct(e["key"].alias("mz"), e["value"].alias("i")),
+        )
+    )
+    return (
+        F.transform(entries, lambda e: e["mz"]),
+        F.transform(entries, lambda e: e["i"]),
+    )
+
+
+def split_list(col: Column | str, sep: str = ",") -> Column:
+    """X5 — comma-separated CLI list → trimmed non-empty array (explode-ready).
+
+    Ref: ``ArchiveMoleculesIndexer.java:186-191``,
+    ``PrideAnalysisAssayService.java:257``.
+    """
+    return F.filter(
+        F.transform(F.split(_c(col), sep), lambda x: F.trim(x)), lambda x: x != ""
+    )

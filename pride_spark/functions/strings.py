@@ -27,6 +27,15 @@ def clean_usi_special_chars(col: Column | str) -> Column:
     return F.translate(F.col(col) if isinstance(col, str) else col, USI_SPECIAL_CHARS, "")
 
 
+def clean_file_name(col: Column | str) -> Column:
+    """C1 — strip quotes/backslashes and trim.
+
+    Ref: ArchiveMoleculesIndexer.java:299-307 (cleanFileName).
+    """
+    c = F.col(col) if isinstance(col, str) else col
+    return F.trim(F.translate(c, "\"'\\", ""))
+
+
 def file_name_no_extension(col: Column | str) -> Column:
     """C5 — basename minus compression extension minus final extension.
 
@@ -57,6 +66,15 @@ def make_isobaric(col: Column | str) -> Column:
     return F.translate(c, "L", "I")
 
 
+def ftp_to_https(col: Column | str) -> Column:
+    """C18 — rewrite ``ftp://`` URLs to ``https://``.
+
+    Ref: submissions.nf:96,151.
+    """
+    c = F.col(col) if isinstance(col, str) else col
+    return F.regexp_replace(c, "^ftp://", "https://")
+
+
 def capitalize(col: Column | str) -> Column:
     """C19 — sentence-case (first letter upper, rest lower).
 
@@ -66,3 +84,14 @@ def capitalize(col: Column | str) -> Column:
     return F.concat(F.upper(F.substring(c, 1, 1)), F.lower(F.substring(c, 2, 2147483647)))
 
 
+def unimod_label_repair(accession: Column | str) -> Column:
+    """C20 — derive cvLabel from the accession prefix.
+
+    Ref: PrideAnalysisAssayService.java:684-692,1016-1018.
+    """
+    acc = F.col(accession) if isinstance(accession, str) else accession
+    return (
+        F.when(F.upper(acc).contains("UNIMOD:"), F.lit("UNIMOD"))
+        .when(F.upper(acc).startswith("MS:"), F.lit("MS"))
+        .otherwise(F.lit("PRIDE"))
+    )

@@ -26,6 +26,29 @@ from pyspark.sql import functions as F
 from pride_spark.functions.strings import make_isobaric
 
 
+def isobaric_pure_clusters(psms: DataFrame, cluster_col: str = "clusterId") -> DataFrame:
+    """A12a — clusterIds whose members share one isobaric sequence."""
+    return (
+        psms.withColumn("__iso", make_isobaric("peptideSequence"))
+        .groupBy(cluster_col)
+        .agg(F.countDistinct("__iso").alias("nIso"))
+        .filter(F.col("nIso") == 1)
+        .select(cluster_col)
+    )
+
+
+def valid_peptidoforms(psms: DataFrame, cluster_col: str = "clusterId") -> DataFrame:
+    """A12b — (clusterId, peptidoform) pairs covering >50% of the cluster."""
+    total = psms.groupBy(cluster_col).agg(F.count("*").alias("__total"))
+    per_form = psms.groupBy(cluster_col, "peptidoform").agg(F.count("*").alias("__n"))
+    return (
+        per_form.join(total, cluster_col)
+        .withColumn("ratio", F.col("__n") / F.col("__total"))
+        .filter(F.col("ratio") > 0.5)
+        .select(cluster_col, "peptidoform", "ratio")
+    )
+
+
 def best_psm_per_cluster(
     psms: DataFrame,
     cluster_col: str = "clusterId",

@@ -1,5 +1,5 @@
 """Corpus-curation operators for large-scale training-data pipelines:
-deterministic hash splits, stratified samples and incremental (new-batch-vs-corpus)
+deterministic hash splits/samples and incremental (new-batch-vs-corpus)
 deduplication.
 
 These extend the reference's capability surface the same way the dedup /
@@ -9,7 +9,7 @@ runs between ingestion and training.
 
 Design notes (scale-first):
 
-- Splits and samples are HASH-deterministic, not ``rand()``-based: the same
+- Splits/samples are HASH-deterministic, not ``rand()``-based: the same
   row lands in the same split on every run, on any partitioning, after
   any upstream re-shuffle — the property that makes train/test
   assignment reproducible and leak-free across pipeline re-runs.  (A
@@ -48,6 +48,16 @@ def hash_fraction(id_col: Column | str, seed: str = "split") -> Column:
         .cast("double")
         / F.lit(float(1 << 32))
     )
+
+
+def hash_sample(
+    df: DataFrame, id_col: str, fraction: float, *, seed: str = "sample"
+) -> DataFrame:
+    """Deterministic ``fraction`` sample by id hash.  Unlike
+    ``DataFrame.sample`` this is stable across runs, partitionings, and
+    engines, and it is a pure narrow filter (predicate-pushable, no
+    sampler state)."""
+    return df.filter(hash_fraction(id_col, seed) < F.lit(float(fraction)))
 
 
 def hash_split(
@@ -181,6 +191,111 @@ def stratified_sample(
         F.lit(float(default_rate))
     )
     return df.filter(frac < rate)
+
+
+def kmeans_assign(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    centroids: list[list[float]] | None = None,
+    *,
+    n_clusters: int = 16,
+    iters: int = 2,
+    cluster_col: str = "cluster_id",
+) -> DataFrame:
+    """Assign every row its nearest k-means centroid — the embedding-space
+    partitioning SemDeDup-style curation pipelines cluster a corpus with
+    before semantic dedup / diversity sampling.
+
+    ``centroids`` omitted trains the deterministic spherical k-means on a
+    BOUNDED sample (``similarity._kmeans_centroids`` — one Spark job
+    regardless of corpus size); pass precomputed centroids for the
+    train-once / assign-many production shape.  Assignment is a pure
+    literal Column expression over the driver-side centroid table
+    (the same ``_nearest_centroids_expr`` machinery the IVF index uses):
+    zero joins, zero shuffles, scan-speed at any corpus size.  Ranking is
+    by ``dot(v, c)/||c||`` (spherical / cosine order — row-norm division
+    cannot change a row's argmax).
+    """
+    from pride_spark.operators.similarity import (
+        _kmeans_centroids,
+        _nearest_centroids_expr,
+    )
+
+    cents = (
+        centroids
+        if centroids is not None
+        else _kmeans_centroids(df, id_col, vec_col, n_clusters, iters)
+    )
+    if not cents:
+        return df.withColumn(cluster_col, F.lit(None).cast("int"))
+    nearest, _order = _nearest_centroids_expr(vec_col, cents)
+    return df.withColumn(cluster_col, nearest)
+
+
+def cluster_balanced_sample(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    *,
+    per_cluster: int,
+    centroids: list[list[float]] | None = None,
+    n_clusters: int = 16,
+    seed: str = "diversity",
+    exact: bool = False,
+    cluster_col: str = "cluster_id",
+) -> DataFrame:
+    """Diversity sampling: cap every embedding cluster at ``per_cluster``
+    rows, keeping a deterministic hash-ordered subset — the
+    cluster-balanced curation step that stops a corpus's dominant modes
+    from flooding a training mix (the sampling half of the
+    SemDeDup/DBSCAN-curation recipe; the dedup half is
+    :func:`dedup_against_corpus` / ``similarity``).
+
+    Default (``exact=False``) is the 100 TB shape: per-cluster keep-RATES
+    are derived from one tiny count aggregate (k rows to the driver) and
+    applied as a pure ``hash_fraction`` filter — narrow, deterministic,
+    no per-cluster ordering, so a billion-row cluster never serializes
+    through one task.  Expected kept ≈ ``per_cluster`` per cluster
+    (binomial, not exact).  ``exact=True`` takes instead a
+    ``row_number`` window ordered by the id hash — exactly
+    ``per_cluster`` rows per cluster, at the cost of one single-task
+    sort PER CLUSTER (fine for moderate cluster sizes; documented trap
+    at extreme skew).  Both variants are pure functions of
+    ``(seed, id)`` given the centroids: re-runs and re-partitions keep
+    the identical subset.
+    """
+    assigned = kmeans_assign(
+        df, id_col, vec_col, centroids,
+        n_clusters=n_clusters, cluster_col=cluster_col,
+    )
+    if exact:
+        from pyspark.sql import Window
+
+        w = Window.partitionBy(cluster_col).orderBy(
+            hash_fraction(id_col, seed), F.col(id_col)
+        )
+        return (
+            assigned.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= per_cluster)
+            .drop("__rn")
+        )
+    counts = {
+        r[cluster_col]: r["n"]
+        for r in assigned.groupBy(cluster_col).count().withColumnRenamed(
+            "count", "n"
+        ).collect()  # bounded: one row per cluster
+    }
+    frac = hash_fraction(id_col, seed)
+    expr = None
+    for cid, n in sorted(counts.items()):
+        rate = min(1.0, per_cluster / n) if n else 0.0
+        cond = F.col(cluster_col) == cid
+        expr = (
+            F.when(cond, F.lit(rate)) if expr is None else expr.when(cond, F.lit(rate))
+        )
+    rate_col = F.lit(0.0) if expr is None else expr.otherwise(F.lit(0.0))
+    return assigned.filter(frac < rate_col)
 
 
 def _tagged_signatures(

@@ -45,6 +45,27 @@ def peptide_length_filter(df: DataFrame, min_len: int = 7, col: str = "peptideSe
     return df.filter(F.length(F.col(col)) >= min_len)
 
 
+def phospho_artifact_filter(df: DataFrame, mods_col: str = "modifications") -> DataFrame:
+    """F8 — drop PSMs carrying the phospho-on-Ala artifact (UNIMOD:21 on A).
+
+    Ref: PrideAnalysisAssayService.java:464 (PIA's has_residue_modification
+    "A##UNIMOD:21").  The mod struct carries a 1-based position; residue
+    is looked up in the sequence via ``substring``.  Position 0 is the
+    N-TERMINUS convention (proforma.py / the mzTab ingest emit it) — it
+    has no residue, and Spark's ``substr(0, 1)`` silently aliases to
+    ``substr(1, 1)``, which flagged an N-term phospho on any peptide
+    starting with A as the artifact (r10 review); terminal mods are
+    exempt.
+    """
+    has_artifact = F.exists(
+        F.col(mods_col),
+        lambda m: (m["accession"] == "UNIMOD:21")
+        & (m["position"] >= 1)
+        & (F.col("peptideSequence").substr(m["position"], F.lit(1)) == "A"),
+    )
+    return df.filter(~F.coalesce(has_artifact, F.lit(False)))
+
+
 def psm_qvalue_filter(df: DataFrame, threshold: float = 0.01, col: str = "qvalue") -> DataFrame:
     """F9 — PSM q-value gate.  Ref: PrideAnalysisAssayService.java:467-468."""
     return df.filter(F.col(col) <= threshold)
@@ -119,6 +140,11 @@ def spectrum_validity_counts(df: DataFrame) -> tuple[int, int]:
     return row["total"], row["valid"]
 
 
+def ms_level_filter(df: DataFrame, col: str = "msLevel") -> DataFrame:
+    """F13 — discard MS1 spectra.  Ref: JmzReaderSpectrumService.java:105-106."""
+    return df.filter(F.col(col) >= 2)
+
+
 def delta_mass_validation(
     df: DataFrame,
     cfg: FilterConfig = FilterConfig(),
@@ -153,6 +179,21 @@ def delta_mass_validation(
     )
 
 
+def scan_id_validation(df: DataFrame, id_col: str = "spectrumId", is_wiff: Column | None = None) -> DataFrame:
+    """F15 — non-WIFF spectrum ids must parse as integers.
+
+    Ref: PrideAnalysisAssayService.java:556-562 — the WHOLE id goes
+    through ``Integer.parseInt``, so the predicate is a full-string
+    integer match.  An ends-in-digits test kept ids like the
+    Bruker-style ``1.1.1.5`` that the reference rejects to the error
+    channel (r10 review).
+    """
+    ok = F.coalesce(F.col(id_col), F.lit("")).rlike(r"^\d+$")
+    if is_wiff is not None:
+        ok = ok | is_wiff
+    return df.filter(ok)
+
+
 def result_file_filters(files: DataFrame) -> DataFrame:
     """F1–F4 — the project-file selection stack.
 
@@ -178,3 +219,28 @@ def result_file_filters(files: DataFrame) -> DataFrame:
     )
 
 
+def assay_validity_gate(
+    psms: DataFrame,
+    cfg: FilterConfig = FilterConfig(),
+    protein_count: int | None = None,
+) -> tuple[bool, dict]:
+    """F11 — require decoys>0 AND targets>0 AND total > minPSMs (STRICT,
+    matching the reference's ``psms.size() > minPSMs``), else abort.
+
+    Ref: PrideAnalysisAssayService.java:440-447,477-480.  One aggregate job
+    (count + conditional sums in a single pass), driver-side decision.
+    The reference additionally aborts when the post-inference protein list
+    is empty (:478); callers that have run inference pass its count via
+    ``protein_count`` to apply that gate too.
+    """
+    row = psms.agg(
+        F.count("*").alias("total"),
+        F.sum(F.col("isDecoy").cast("long")).alias("decoys"),
+        F.sum((~F.col("isDecoy")).cast("long")).alias("targets"),
+    ).first()
+    stats = {"total": row["total"], "decoys": row["decoys"] or 0, "targets": row["targets"] or 0}
+    ok = stats["decoys"] > 0 and stats["targets"] > 0 and stats["total"] > cfg.min_psms
+    if protein_count is not None:
+        stats["proteins"] = protein_count
+        ok = ok and protein_count > 0
+    return ok, stats

@@ -78,6 +78,23 @@ def contains_first_match(
     return joined.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
 
 
+def psm_spectrum_join(
+    psms: DataFrame,
+    spectra: DataFrame,
+    on: Sequence[str] = ("fileName", "spectrumKey"),
+    how: str = "inner",
+) -> DataFrame:
+    """J5 — the big PSM ↔ raw-spectrum equi-join.
+
+    Ref: orchestrated per-PSM point reads at
+    PrideAnalysisAssayService.java:545-553; here it is one shuffle join on
+    (fileName, spectrumKey) with AQE skew handling.  ``spectrumKey`` is the
+    normalized id produced at ingest (spectrum-id repair C9/S7 happens once,
+    not per lookup).
+    """
+    return psms.join(spectra, list(on), how)
+
+
 #: dtypes whose cast-to-double preserves ordering (bucketable lead keys)
 _ORDERED_NUMERIC = {
     "tinyint", "smallint", "int", "bigint", "float", "double",

@@ -105,3 +105,39 @@ def regroup_modifications_flat(
     )
 
 
+def peptide_mods_to_protein_coords(
+    psm_protein: DataFrame,
+    mods_col: str = "modifications",
+    occurrences_col: str = "proteinStartPositions",
+) -> DataFrame:
+    """X4 — one output row per (protein occurrence × modification).
+
+    Input rows carry ``proteinAccession``, ``peptideSequence``, a raw mod
+    array and ``proteinStartPositions: array<int>`` (1-based start of each
+    occurrence of the peptide in the protein).  Output adds ``proteinPos``.
+    The double explode is a projection (no shuffle); downstream rollups
+    group by protein as usual.
+    """
+    exploded = psm_protein.withColumn("__start", F.explode(F.col(occurrences_col))).withColumn(
+        "__mod", F.explode(F.col(mods_col))
+    )
+    return (
+        exploded.withColumn(
+            "proteinPos", F.col("__start") + F.col("__mod.position") - F.lit(1)
+        )
+        .withColumn("modAccession", F.col("__mod.accession"))
+        .withColumn("modName", F.col("__mod.name"))
+        .drop("__start", "__mod")
+    )
+
+
+def distinct_modification_names(psms: DataFrame, mods_col: str = "modifications") -> DataFrame:
+    """A10 — distinct mod names across a PSM set (flatMap + distinct).
+
+    Ref: PrideAnalysisAssayService.java:997-999 (parallelStream flatMap).
+    """
+    return (
+        psms.select(F.explode(F.col(mods_col)).alias("m"))
+        .select(F.col("m.name").alias("name"))
+        .distinct()
+    )

@@ -184,6 +184,42 @@ def _decode_image_real(payload: bytes) -> bytes:
     return _decode_png_builtin(payload)
 
 
+def pillow_image_decoder(mode: str = "RGB") -> Callable[[bytes], bytes]:
+    """Optional Pillow FAST PATH for the ``decoder=`` injection seam
+    (r10 verdict task: the in-repo pure-python JPEG baseline runs at
+    ~7.5k rows/s — 49x the plumbing floor; a real 100 TB multimodal
+    corpus needs a C codec through the same seam).
+
+    Guarded import: raises ``ImportError`` at CONSTRUCTION when Pillow
+    is absent — the failure surfaces once on the driver, not per-task on
+    executors.  The returned callable satisfies the seam contract of
+    :func:`image_features` (``payload: bytes -> decoded pixel bytes``,
+    ``None`` raises, exceptions propagate) and decodes every format the
+    installed Pillow build supports (JPEG/PNG/WebP/...).  For 8-bit RGB
+    PNG its output is byte-identical to :func:`_decode_png_builtin`
+    (contract-tested, skip-if-absent).  No hard dependency: nothing in
+    the engine imports PIL outside this factory and the equivalent
+    guarded branch of ``decoder="real"``."""
+    if importlib.util.find_spec("PIL") is None:
+        raise ImportError(
+            "pillow_image_decoder requires Pillow on driver and executors "
+            "(pip install Pillow); without it use decoder='real' (builtin "
+            "PNG path), decoder='stub', or inject your own codec callable"
+        )
+
+    def decode(payload: bytes) -> bytes:
+        import io
+
+        from PIL import Image
+
+        if payload is None:  # same seam contract as the built-ins
+            raise NotImplementedError("image decode: payload was None")
+        with Image.open(io.BytesIO(payload)) as im:
+            return im.convert(mode).tobytes()
+
+    return decode
+
+
 def image_features(
     media: DataFrame, decoder: str | Callable[[bytes], bytes] = "stub"
 ) -> DataFrame:
@@ -351,6 +387,20 @@ def audio_features(
             )
 
     return media.filter(F.col("kind") == "audio").mapInPandas(kernel, AUDIO_FEATURES_SCHEMA)
+
+
+def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
+    """STUB resize: passes payload through, rewrites metadata; the batch
+    shape / schema contract is what a real PIL kernel would use."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = pdf.copy()
+            out["width"] = width
+            out["height"] = height
+            yield out
+
+    return media.filter(F.col("kind") == "image").mapInPandas(kernel, media.schema)
 
 
 def _extract_frames_stub(payload: bytes, duration_ms: int, every_ms: int) -> list[bytes]:

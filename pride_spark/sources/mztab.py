@@ -97,11 +97,24 @@ _PRT_COLS = {
     "opt_global_cv_MS:1002217_decoy_peptide": "isDecoyRaw",
 }
 
+#: mzTab peptide-section columns we project (name in PEH → output column)
+_PEP_COLS = {
+    "sequence": "peptideSequence",
+    "accession": "proteinAccession",
+    "unique": "uniqueRaw",
+    "best_search_engine_score[1]": "bestSearchEngineScore",
+    "modifications": "modificationsRaw",
+    "retention_time": "retentionTime",
+    "charge": "precursorCharge",
+    "mass_to_charge": "massToCharge",
+    "spectra_ref": "spectraRef",
+}
+
 
 def _read_section(
     spark: SparkSession, path: str, header_tag: str, row_tag: str, colmap: dict[str, str]
 ) -> DataFrame:
-    """Section scan: one driver read of the section header line to
+    """Shared PRT/PEP scan: one driver read of the section header line to
     fix column order, then a distributed projection of the data rows —
     the identical pattern :func:`read_mztab_psms` uses for PSH/PSM."""
     lines = spark.read.text(path)
@@ -161,3 +174,31 @@ def read_mztab_proteins(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def read_mztab_peptides(spark: SparkSession, path: str) -> DataFrame:
+    """PEH/PEP section → one row per author-reported peptide, with
+    ``spectra_ref`` split into ``msRun``/``sourceId`` exactly like the
+    PSM reader (same downstream C9 normalization applies)."""
+    df = _read_section(spark, path, "PEH", "PEP", _PEP_COLS)
+    if "uniqueRaw" in df.columns:
+        df = df.withColumn("unique", F.col("uniqueRaw") == "1").drop("uniqueRaw")
+    if "bestSearchEngineScore" in df.columns:
+        df = df.withColumn(
+            "bestSearchEngineScore", _null_str("bestSearchEngineScore").cast("double")
+        )
+    if "retentionTime" in df.columns:
+        df = df.withColumn("retentionTime", _null_str("retentionTime").cast("double"))
+    if "precursorCharge" in df.columns:
+        df = df.withColumn(
+            "precursorCharge", _null_str("precursorCharge").cast("int")
+        )
+    if "massToCharge" in df.columns:
+        df = df.withColumn("massToCharge", _null_str("massToCharge").cast("double"))
+    if "spectraRef" in df.columns:
+        df = (
+            df.withColumn(
+                "msRun", F.regexp_extract("spectraRef", r"ms_run\[(\d+)\]", 1).cast("int")
+            )
+            .withColumn("sourceId", F.regexp_extract("spectraRef", r"ms_run\[\d+\]:(.*)", 1))
+            .drop("spectraRef")
+        )
+    return df

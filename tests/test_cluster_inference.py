@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
-from pride_spark.operators.cluster import best_psm_per_cluster
+from pride_spark.operators.cluster import (
+    best_psm_per_cluster,
+    isobaric_pure_clusters,
+    valid_peptidoforms,
+)
 from pride_spark.operators.inference import occams_razor
 
 
@@ -25,6 +29,20 @@ def _psms(spark):
     return spark.createDataFrame(
         rows, "clusterId int, usi string, peptideSequence string, peptidoform string, score double"
     )
+
+
+def test_isobaric_purity(spark):
+    pure = {r["clusterId"] for r in isobaric_pure_clusters(_psms(spark)).collect()}
+    assert pure == {1, 3}
+
+
+def test_valid_peptidoforms_majority(spark):
+    valid = {
+        (r["clusterId"], r["peptidoform"]): r["ratio"]
+        for r in valid_peptidoforms(_psms(spark)).collect()
+    }
+    assert set(valid) == {(1, "A/2"), (2, "C/2")}
+    assert valid[(1, "A/2")] == 0.75
 
 
 def test_best_psm_per_cluster(spark):

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from pride_spark.operators.curation import (
     hash_fraction,
+    hash_sample,
     hash_split,
     incremental_near_dup_flags,
 )
@@ -50,6 +51,17 @@ def test_hash_split_deterministic_disjoint_and_weighted(spark):
         ).collect()
     }
     assert a == b
+
+
+def test_hash_sample_is_stable_subset(spark):
+    df = spark.createDataFrame([(f"d{i}",) for i in range(2000)], "id string")
+    s1 = {r["id"] for r in hash_sample(df, "id", 0.25).collect()}
+    s2 = {r["id"] for r in hash_sample(df.repartition(5), "id", 0.25).collect()}
+    assert s1 == s2
+    assert len(s1) == pytest.approx(500, rel=0.15)
+    # monotone: a larger fraction strictly contains the smaller
+    s3 = {r["id"] for r in hash_sample(df, "id", 0.5).collect()}
+    assert s1 < s3
 
 
 BASE = (
@@ -229,6 +241,78 @@ def _emb_corpus(spark, n=300, dim=8):
         for i in range(n)
     ]
     return spark.createDataFrame(rows, "doc_id int, embedding array<double>")
+
+
+def test_kmeans_assign_matches_numpy_reference(spark):
+    import numpy as np
+
+    from pride_spark.operators.curation import kmeans_assign
+
+    df = _emb_corpus(spark)
+    cents = [[((c * 7 + j) % 11 - 5) / 3.0 for j in range(8)] for c in range(5)]
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in kmeans_assign(df, "doc_id", "embedding", cents).collect()
+    }
+    x = np.array([r["embedding"] for r in df.orderBy("doc_id").collect()])
+    c = np.array(cents)
+    norms = np.maximum(np.linalg.norm(c, axis=1), 1e-12)
+    scores = x @ c.T / norms  # spherical: dot / ||c||
+    want = scores.argmax(axis=1)  # numpy argmax ties -> lowest index, same rule
+    assert [got[i] for i in range(len(x))] == list(want)
+
+
+def test_cluster_balanced_sample_exact_and_rate(spark):
+    from pride_spark.operators.curation import cluster_balanced_sample, kmeans_assign
+
+    df = _emb_corpus(spark)
+    cents = [[((c * 7 + j) % 11 - 5) / 3.0 for j in range(8)] for c in range(4)]
+
+    exact = cluster_balanced_sample(
+        df, "doc_id", "embedding", per_cluster=10, centroids=cents, exact=True
+    )
+    sizes = {r["cluster_id"]: r["count"] for r in exact.groupBy("cluster_id").count().collect()}
+    full = {
+        r["cluster_id"]: r["count"]
+        for r in kmeans_assign(df, "doc_id", "embedding", cents)
+        .groupBy("cluster_id").count().collect()
+    }
+    for cid, n in full.items():
+        assert sizes.get(cid, 0) == min(10, n)
+    # deterministic across repartition
+    again = cluster_balanced_sample(
+        df.repartition(7), "doc_id", "embedding", per_cluster=10,
+        centroids=cents, exact=True,
+    )
+    assert sorted(r["doc_id"] for r in exact.collect()) == sorted(
+        r["doc_id"] for r in again.collect()
+    )
+
+    # rate-based (scale path): deterministic, bounded-ish per cluster,
+    # and a pure subset of the assignment
+    rate = cluster_balanced_sample(
+        df, "doc_id", "embedding", per_cluster=10, centroids=cents
+    )
+    rate2 = cluster_balanced_sample(
+        df.repartition(5), "doc_id", "embedding", per_cluster=10, centroids=cents
+    )
+    ids1 = sorted(r["doc_id"] for r in rate.collect())
+    assert ids1 == sorted(r["doc_id"] for r in rate2.collect())
+    rsizes = {r["cluster_id"]: r["count"] for r in rate.groupBy("cluster_id").count().collect()}
+    for cid, n in rsizes.items():
+        assert n <= full[cid]  # never exceeds the cluster
+    assert 0 < sum(rsizes.values()) < sum(full.values())
+
+
+def test_cluster_balanced_sample_trains_when_no_centroids(spark):
+    from pride_spark.operators.curation import cluster_balanced_sample
+
+    df = _emb_corpus(spark, n=120)
+    out = cluster_balanced_sample(
+        df, "doc_id", "embedding", per_cluster=5, n_clusters=3, exact=True
+    )
+    sizes = [r["count"] for r in out.groupBy("cluster_id").count().collect()]
+    assert sizes and all(s <= 5 for s in sizes)
 
 
 def test_hash_split_null_id_and_negative_weight_rejected(spark):

@@ -685,10 +685,10 @@ def test_mzxml_iterparse_memory_bounded(tmp_path):
     assert peak < base + file_bytes / 4, (peak, base, file_bytes)
 
 
-def test_mztab_proteins(spark, tmp_path):
-    """PRT pass-through fidelity (PIAModelerService.java:162-189 consumes
-    full mzTab, author protein rows included)."""
-    from pride_spark.sources.mztab import read_mztab_proteins
+def test_mztab_proteins_and_peptides(spark, tmp_path):
+    """PRT/PEP pass-through fidelity (PIAModelerService.java:162-189
+    consumes full mzTab, author protein/peptide rows included)."""
+    from pride_spark.sources.mztab import read_mztab_peptides, read_mztab_proteins
 
     p = tmp_path / "a.mztab"
     p.write_text(MZTAB)
@@ -705,6 +705,17 @@ def test_mztab_proteins(spark, tmp_path):
     dec = prots["DECOY_Q99999"]
     assert dec["isDecoy"] is True and dec["taxid"] is None
     assert dec["bestSearchEngineScore"] is None and dec["ambiguityMembers"] == []
+
+    peps = {r["peptideSequence"]: r for r in read_mztab_peptides(spark, str(p)).collect()}
+    assert set(peps) == {"PEPTIDEK", "LNGVK"}
+    pk = peps["PEPTIDEK"]
+    assert pk["proteinAccession"] == "P12345" and pk["unique"] is True
+    assert pk["bestSearchEngineScore"] == 0.001 and pk["retentionTime"] == 55.2
+    assert pk["precursorCharge"] == 2 and pk["massToCharge"] == 445.12
+    assert pk["msRun"] == 1 and pk["sourceId"] == "scan=42"
+    lv = peps["LNGVK"]
+    assert lv["unique"] is False and lv["retentionTime"] is None
+    assert lv["msRun"] == 2 and lv["sourceId"] == "index=7"
 
 
 def test_apl_reader_mgf_parity(spark, tmp_path):

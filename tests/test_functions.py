@@ -15,10 +15,13 @@ from pride_spark.functions.mass import (
 from pride_spark.functions.proforma import encode_peptidoform
 from pride_spark.functions.strings import (
     capitalize,
+    clean_file_name,
     clean_usi_special_chars,
     file_name_no_extension,
+    ftp_to_https,
     make_isobaric,
     remove_charge_state,
+    unimod_label_repair,
 )
 from pride_spark.functions.usi import build_usi, spectra_usi
 
@@ -30,6 +33,10 @@ def one(spark, expr, **cols):
 
 def test_clean_usi_special_chars(spark):
     assert one(spark, clean_usi_special_chars(F.col("s")), s="a(b)c d_e=f&g") == "abcdefg"
+
+
+def test_clean_file_name(spark):
+    assert one(spark, clean_file_name(F.col("s")), s='  "run\\01".mgf ') == "run01.mgf"
 
 
 def test_file_name_no_extension(spark):
@@ -46,8 +53,11 @@ def test_make_isobaric(spark):
     assert one(spark, make_isobaric(F.col("s")), s="LEULIL") == "IEUIII"
 
 
-def test_capitalize(spark):
+def test_ftp_https_capitalize_unimod(spark):
+    assert one(spark, ftp_to_https(F.col("s")), s="ftp://host/x") == "https://host/x"
     assert one(spark, capitalize(F.col("s")), s="hELLO wORLD") == "Hello world"
+    assert one(spark, unimod_label_repair(F.col("s")), s="UNIMOD:21") == "UNIMOD"
+    assert one(spark, unimod_label_repair(F.col("s")), s="MS:1001600") == "MS"
 
 
 def test_usi_build_and_truncate(spark):
@@ -141,3 +151,22 @@ def test_sha1_and_token(spark):
     assert len(rows[0]["t"]) == 40 and rows[0]["t"] != rows[1]["t"]
 
 
+def test_peaks_to_arrays(spark):
+    from pride_spark.functions.misc import peaks_to_arrays
+
+    df = spark.createDataFrame(
+        [({300.5: 30.0, 100.1: 10.0, 200.2: 20.0},)], "peaks map<double,double>"
+    )
+    m, i = peaks_to_arrays("peaks")
+    r = df.select(m.alias("m"), i.alias("i")).first()
+    assert r["m"] == [100.1, 200.2, 300.5]
+    assert r["i"] == [10.0, 20.0, 30.0]
+
+
+def test_split_list(spark):
+    from pride_spark.functions.misc import split_list
+
+    df = spark.createDataFrame([("a.mzid, b.mzid,,  c.mzid ",)], "s string")
+    assert df.select(split_list("s").alias("o")).first()["o"] == [
+        "a.mzid", "b.mzid", "c.mzid",
+    ]

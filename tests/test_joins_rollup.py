@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from pride_spark.operators.joins import (
     contains_first_match,
     positional_zip_join,
+    psm_spectrum_join,
     semi_join_members,
 )
 from pride_spark.operators.rollup import (
@@ -33,6 +34,18 @@ def test_contains_first_match_blocked_equals_nested(spark):
         for r in contains_first_match(probe, dim, block_lengths=[5], **kw).collect()
     }
     assert nested == blocked == {(1, "A"), (2, "C")}  # first match by facc; run99 unmatched
+
+
+def test_psm_spectrum_join(spark):
+    psms = spark.createDataFrame(
+        [("p1", "f1", "10"), ("p2", "f1", "99"), ("p3", "f2", "10")],
+        "psmId string, fileName string, spectrumKey string",
+    )
+    spectra = spark.createDataFrame(
+        [("f1", "10", 2), ("f2", "10", 2)], "fileName string, spectrumKey string, msLevel int"
+    )
+    got = {r["psmId"] for r in psm_spectrum_join(psms, spectra).collect()}
+    assert got == {"p1", "p3"}  # p2 has no spectrum → dropped (inner)
 
 
 def test_positional_zip_join(spark):

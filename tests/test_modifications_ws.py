@@ -7,6 +7,8 @@ from pyspark.sql import functions as F
 
 from pride_spark.operators.modifications import (
     RAW_MOD_TYPE,
+    distinct_modification_names,
+    peptide_mods_to_protein_coords,
     regroup_modifications,
 )
 from pride_spark.sources import ws
@@ -83,6 +85,21 @@ def test_regroup_flat_merges_rows_with_a_repeated_key(spark):
         ("psm1", "UNIMOD:35", "Oxidation", [1]),
         ("psm2", "UNIMOD:21", "Phospho", [2]),
     ]
+
+
+def test_protein_coordinate_mapping(spark):
+    out = peptide_mods_to_protein_coords(_psms(spark)).collect()
+    # psm1: 2 occurrences × 4 raw mods = 8 rows; psm2: no mods → none
+    assert len(out) == 8
+    got = {(r["proteinPos"], r["modAccession"]) for r in out}
+    # start=10: pos 3 → 12, pos 5 → 14, pos 1 → 10; start=50: 52, 54, 50
+    assert (12, "UNIMOD:21") in got and (54, "UNIMOD:21") in got
+    assert (10, "UNIMOD:35") in got and (50, "UNIMOD:35") in got
+
+
+def test_distinct_modification_names(spark):
+    names = {r["name"] for r in distinct_modification_names(_psms(spark)).collect()}
+    assert names == {"Phospho", "Oxidation"}
 
 
 # --- WS client -------------------------------------------------------------

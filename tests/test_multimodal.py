@@ -50,6 +50,12 @@ def test_audio_features_match_reference_arithmetic(spark):
         )
 
 
+def test_resize_rewrites_metadata_only(spark):
+    media = _media(spark)
+    out = mm.resize_images(media, 32, 48).collect()
+    assert all(r["width"] == 32 and r["height"] == 48 for r in out)
+
+
 def test_frame_sampling_explodes(spark):
     media = _media(spark)
     frames = mm.sample_frames(media, every_ms=5000)
@@ -419,3 +425,42 @@ def test_injected_jpeg_decoder_matches_builtin_contract_on_png(spark):
     assert a == b  # same decoded pixels -> identical feature row
 
 
+def test_pillow_decoder_absent_raises_clean_importerror():
+    """r11 verdict task #2 — the Pillow fast-path factory fails at
+    CONSTRUCTION (driver-side, actionable message) when Pillow is absent,
+    never as a per-task executor crash.  This is the without-the-library
+    half of the contract; the with-the-library half is the skip-if-absent
+    test below."""
+    import importlib.util
+
+    import pytest
+
+    if importlib.util.find_spec("PIL") is not None:
+        pytest.skip("Pillow installed: absent-path not testable here")
+    with pytest.raises(ImportError, match="Pillow"):
+        mm.pillow_image_decoder()
+
+
+def test_pillow_decoder_contract(spark):
+    """r11 verdict task #2, with-the-library half (skip-if-absent):
+    the Pillow decoder through the SAME decoder= seam produces
+    byte-identical RGB output to the builtin PNG decoder, and the
+    feature rows match across the two kernels."""
+    import pytest
+
+    pytest.importorskip("PIL")
+
+    png = _png_rgb(4, 2, (10, 20, 30))
+    dec = mm.pillow_image_decoder()
+    assert dec(png) == mm._decode_png_builtin(png)
+
+    media = spark.createDataFrame(
+        [(1, "image", bytearray(png), "image/png", 4, 2, None)], mm.MEDIA_SCHEMA
+    )
+    a = mm.image_features(media, decoder="real").collect()[0]
+    b = mm.image_features(media, decoder=dec).collect()[0]
+    assert a == b
+
+    # seam error contract: None payload raises like the built-ins
+    with pytest.raises(Exception):
+        dec(None)

@@ -15,7 +15,10 @@ An edge runs from a definition to every package definition its body
 names, through module aliases, ``from ... import`` bindings (relative
 ones included) and package re-exports.  Tests are not roots: a function
 only a test calls is dead surface unless it is the reference a test
-compares the engine against, or a PARITY_AUDIT reference method.
+compares the engine against, or the port of a reference method that
+PARITY_AUDIT.md or a SURVEY.md row names.  The ``deletion pending``
+entries are test-only extensions scheduled for deletion (ROADMAP
+item 5).
 """
 
 from __future__ import annotations
@@ -46,6 +49,33 @@ ALLOWED = {
     # PARITY_AUDIT reference methods
     "functions.misc.random_token": "PARITY_AUDIT: getRandomToken (C15)",
     "functions.misc.sha1_checksum": "PARITY_AUDIT: calculateSha1Checksum (C14)",
+    "functions.misc.peaks_to_arrays": "PARITY_AUDIT: indexSpectraStep peaks (X2)",
+    "operators.filters.scan_id_validation": "PARITY_AUDIT: indexSpectraStep scan-id check (F15)",
+    "operators.filters.assay_validity_gate": "PARITY_AUDIT: analyzeAssayInformationStep gate (F11)",
+    "operators.joins.psm_spectrum_join": "PARITY_AUDIT: indexSpectraStep spectrum fetch (J5)",
+    "operators.cluster.isobaric_pure_clusters": "PARITY_AUDIT: performProteinInference purity gate (A12a)",
+    "operators.cluster.valid_peptidoforms": "PARITY_AUDIT: performProteinInference majority gate (A12b)",
+    "operators.modifications.distinct_modification_names": "PARITY_AUDIT: convertProteinModifications(List) (A10)",
+    "operators.modifications.peptide_mods_to_protein_coords": "PARITY_AUDIT: convertProteinModifications(String, peptides) (X4)",
+    "sources.jsonlines.write_jsonlines_validated": "PARITY_AUDIT: BackupUtil.write re-parse (K2)",
+    # SURVEY rows: ports of named reference methods
+    "functions.strings.clean_file_name": "SURVEY C1: cleanFileName",
+    "functions.strings.ftp_to_https": "SURVEY C18: submissions.nf ftp->https rewrite",
+    "functions.strings.unimod_label_repair": "SURVEY C20: UNIMOD cvLabel repair",
+    "functions.misc.split_list": "SURVEY X5: comma-separated CLI lists",
+    "operators.filters.phospho_artifact_filter": "SURVEY F8: phospho-on-Ala artifact filter",
+    "operators.filters.ms_level_filter": "SURVEY F13: MS-level filter",
+    "sources.mztab.read_mztab_peptides": "SURVEY S3: mzTab PEP section of the PIA import",
+    # test-only extensions still to delete (ROADMAP item 5): one change
+    # removes a bounded number of tests, so these go in the next one
+    "operators.curation.hash_sample": "deletion pending, test_curation",
+    "operators.curation.kmeans_assign": "deletion pending, test_curation",
+    "operators.curation.cluster_balanced_sample": "deletion pending, test_curation",
+    "operators.multimodal.pillow_image_decoder": "deletion pending, test_multimodal",
+    "operators.multimodal.resize_images": "deletion pending, test_multimodal",
+    "sources.bucketing.write_bucketed": "deletion pending, test_bucketing",
+    "sources.bucketing.read_table": "deletion pending, test_bucketing",
+    "operators.timeseries.histogram_quantile": "deletion pending, test_timeseries_rangejoin",
 }
 
 

@@ -1,5 +1,5 @@
-"""J3 spectra relation (cardinality assertion) + K3 partitioned
-JSON-lines layout."""
+"""J3 spectra relation (cardinality assertion) + K2 validated writer +
+K3 partitioned JSON-lines layout."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import pytest
 
 from pride_spark import schemas
 from pride_spark.operators.joins import SpectraRelationError, relate_spectra_files
-from pride_spark.sources.jsonlines import write_jsonlines
+from pride_spark.sources.jsonlines import write_jsonlines_validated
 
 
 def test_relate_spectra_files_matches(spark):
@@ -33,7 +33,7 @@ def test_relate_spectra_files_cardinality_error(spark):
         relate_spectra_files(refs, files)
 
 
-def _t1(spark, n=20):
+def _t1(spark, n=20, empty_arrays=False):
     rows = [
         {
             "usi": f"mzspec:P1:f{i % 2}:index:{i}",
@@ -41,8 +41,8 @@ def _t1(spark, n=20):
             "isDecoy": False,
             "msLevel": 2,
             "precursorMz": 445.5,
-            "masses": [1.0, 2.0],
-            "intensities": [3.0, 4.0],
+            "masses": [] if empty_arrays and i == 3 else [1.0, 2.0],
+            "intensities": [] if empty_arrays and i == 3 else [3.0, 4.0],
             "numPeaks": 2,
         }
         for i in range(n)
@@ -50,11 +50,27 @@ def _t1(spark, n=20):
     return spark.createDataFrame(rows, schemas.BINARY_ARCHIVE_SPECTRUM)
 
 
+def test_k2_validated_write_ok(spark, tmp_path):
+    path = str(tmp_path / "t1")
+    write_jsonlines_validated(_t1(spark), path, schemas.BINARY_ARCHIVE_SPECTRUM)
+    assert glob.glob(os.path.join(path, "part-*"))
+
+
+def test_k2_validated_write_rejects_empty_arrays(spark, tmp_path):
+    path = str(tmp_path / "t1bad")
+    with pytest.raises(ValueError, match="invalid 1"):
+        write_jsonlines_validated(
+            _t1(spark, empty_arrays=True), path, schemas.BINARY_ARCHIVE_SPECTRUM
+        )
+
+
 def test_k3_partitioned_layout(spark, tmp_path):
     df = _t1(spark).withColumn(
         "sourceFile", __import__("pyspark").sql.functions.split("usi", ":")[2]
     )
     path = str(tmp_path / "t1part")
-    write_jsonlines(df, path, partition_by="sourceFile")
+    write_jsonlines_validated(
+        df, path, df.schema, partition_by="sourceFile"
+    )
     dirs = {os.path.basename(d) for d in glob.glob(os.path.join(path, "sourceFile=*"))}
     assert dirs == {"sourceFile=f0", "sourceFile=f1"}
