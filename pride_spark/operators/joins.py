@@ -107,7 +107,6 @@ def global_row_index(
     order_cols_names: Sequence[str],
     index_name: str = "__pos",
     num_range_partitions: int | None = None,
-    pin: bool = False,
 ) -> DataFrame:
     """0-based global row number in the total order of ``order_cols_names``
     — the two-pass distributed form (same shape as
@@ -115,27 +114,13 @@ def global_row_index(
     quantiles of the leading order key (ties share a bucket, so bucketing
     is a pure value function — stable under AQE), per-bucket counts
     collected to the driver, broadcast prefix offsets, then a per-bucket
-    ``row_number`` window.  Nothing funnels through a single task.
-
-    The keyed frame is consumed THREE times (quantile pass, count pass,
-    the window itself).  ``pin=True`` persists it via
-    ``register_pinned(persist())`` — the ``fdr._global_two_pass``
-    pattern — saving two executions of the caller's upstream plan; use
-    it when that plan is EXPENSIVE (``read_pridexml`` split mode does:
-    its upstream is a full XML record parse).  The default is False
-    because for cheap inputs the cache write costs more than the
-    rescans it saves (measured on q26's column-pruned parquet scan at
-    factor 50: first-run 7.7 s pinned vs 4.0 s unpinned, warm runs
-    equal — r11 A/B).  The bucket expression is deterministic, so the
-    pin is a pure performance choice, never a correctness requirement;
-    ``pin=True`` callers release it with a ``pinned_scope`` around the
-    call (the frame recomputes from lineage afterwards) or with
-    ``release_cached_state``.  No checkpoint is made here.
+    ``row_number`` window.  Nothing funnels through a single task, and
+    nothing is persisted or checkpointed here.
 
     Falls back to the single-partition global window only when the leading
     order column is not numeric/temporal (order-preserving bucket keys need
-    a cast-to-double) — acceptable for the bounded per-file PRIDE use, and
-    the caller can pre-map such keys to a numeric surrogate.
+    a cast-to-double); the caller can pre-map such keys to a numeric
+    surrogate.
 
     ``order_cols_names`` must be a TOTAL order (include a unique
     tie-breaker) or the assigned indices are shuffle-dependent.
@@ -157,8 +142,6 @@ def global_row_index(
             else F.col(lead).cast("double")
         )
         keyed = left.withColumn("__zkey", zkey)
-        if pin:
-            keyed = register_pinned(keyed.persist())
         # Fused probe (r14, the fdr._global_two_pass pattern): ONE
         # monotone-fine-bucket histogram yields the load-balancing
         # splits AND the exact per-bucket counts that previously took a
@@ -170,23 +153,17 @@ def global_row_index(
         )
 
         fined = keyed.withColumn(FINE, F.expr(fine_bucket_sql("__zkey")))
-        if n > 1:
-            hist, chain = fine_histogram_partition(fined, n, [])
-            # null lead keys sort first under Spark's asc ordering → bucket -1
-            bucket = F.when(F.col("__zkey").isNull(), F.lit(-1)).otherwise(chain)
-        else:
-            hist, bucket = None, F.lit(0)
+        hist, chain = fine_histogram_partition(fined, n, [])
+        # null lead keys sort first under Spark's asc ordering → bucket -1
+        bucket = F.when(F.col("__zkey").isNull(), F.lit(-1)).otherwise(chain)
         part = fined.withColumn("__zb", bucket)
-        if hist is None:
-            offsets = [(0, 0)]
-        else:
-            counts: dict[int, int] = {}
-            for h in hist:
-                counts[h["pid"]] = counts.get(h["pid"], 0) + h["c"]
-            offsets, cum = [], 0
-            for b in sorted(counts):
-                offsets.append((b, cum))
-                cum += counts[b]
+        counts: dict[int, int] = {}
+        for h in hist:
+            counts[h["pid"]] = counts.get(h["pid"], 0) + h["c"]
+        offsets, cum = [], 0
+        for b in sorted(counts):
+            offsets.append((b, cum))
+            cum += counts[b]
         off = local_frame(spark, offsets, "__zb int, __zoff long")
         w = Window.partitionBy("__zb").orderBy(*order_cols)
         indexed = (

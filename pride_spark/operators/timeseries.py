@@ -24,7 +24,7 @@ aggregate functions are all re-aggregatable:
     avg    →  struct(decimal sum, count) pair, divided at finish
     approx_distinct → HLL sketch union (mergeable by construction)
     histogram → element-wise sum of fixed-boundary bucket counts
-              (exact; quantile estimates via histogram_quantile)
+              (exact)
 
 Each cascade step after the first is a shuffle over an already-tiny
 frame, so the whole ladder costs one big exchange + k trivial ones.
@@ -110,9 +110,7 @@ class AggSpec:
       ``len(bins)+1`` slots — ``(-inf,e0), [e0,e1), …, [ek,inf)``;
       NULLs count nowhere.  Counts over fixed boundaries SUM, so the
       cascade is exactly a direct per-level histogram (the mergeable
-      alternative to ``approx_percentile``, which cannot re-aggregate);
-      estimate quantiles from the finished counts with
-      :func:`histogram_quantile`.
+      alternative to ``approx_percentile``, which cannot re-aggregate).
     """
 
     def __init__(
@@ -200,37 +198,6 @@ class AggSpec:
         if self.fn == "approx_distinct":
             return F.hll_sketch_estimate(src).alias(self.alias)
         return src
-
-
-def histogram_quantile(
-    counts: Column | str, bins: Sequence[float], q: float
-) -> Column:
-    """Quantile estimate from a finished ``histogram`` counts array:
-    the first slot where the cumulative count reaches ``q × total``,
-    linearly interpolated inside the slot.  The open tail slots clamp
-    to their finite edge (a p99 living in ``[ek, inf)`` reports ``ek``
-    — widen the bins if the tail matters).  Pure Column expression —
-    the slot scan unrolls statically (bins are fixed), all codegen, no
-    UDF.  DOUBLE arithmetic: an estimate, not the exact
-    order-statistic; accuracy is the bin resolution."""
-    c = F.col(counts) if isinstance(counts, str) else counts
-    slots = len(bins) + 1
-    cnt = [c.getItem(i).cast("double") for i in range(slots)]
-    total = cnt[0]
-    for x in cnt[1:]:
-        total = total + x
-    target = F.lit(float(q)) * total
-    expr = None
-    cum_before: Column = F.lit(0.0)
-    for i in range(slots):
-        lo = bins[0] if i == 0 else bins[i - 1]
-        hi = bins[-1] if i == len(bins) else bins[i]
-        est = F.lit(lo) + ((target - cum_before) / cnt[i]) * F.lit(hi - lo)
-        est = F.least(F.greatest(est, F.lit(float(lo))), F.lit(float(hi)))
-        cond = (cnt[i] > 0) & (cum_before + cnt[i] >= target)
-        expr = F.when(cond, est) if expr is None else expr.when(cond, est)
-        cum_before = cum_before + cnt[i]
-    return expr.otherwise(F.lit(None).cast("double"))
 
 
 def _validated_order(resolutions: Sequence[str]) -> list[str]:

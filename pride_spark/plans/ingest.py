@@ -36,7 +36,7 @@ def _ext(path: str) -> str:
 def _sniff_xml(path: str) -> str:
     """Content-sniff a ``.xml`` (possibly ``.xml.gz``) file.  ``_ext``
     strips the ``.gz`` suffix, so a gzipped file reaches the sniff too —
-    read through :func:`xmlsplit.open_xml`, which decompresses, instead
+    read through :func:`xmlstream.open_xml`, which decompresses, instead
     of raw bytes (raw gzip bytes decode to garbage and every gzipped
     mzIdentML-in-``.xml`` would misroute to the PRIDE XML reader).
 
@@ -47,10 +47,10 @@ def _sniff_xml(path: str) -> str:
     pathological single-line file stays bounded; the substring match
     itself (an 'mzidentml' mention anywhere in the window wins) is
     reference parity, shared false-positive surface included."""
-    from pride_spark.sources import xmlsplit
+    from pride_spark.sources.xmlstream import open_xml
 
     lines = []
-    with xmlsplit.open_xml(path) as fh:
+    with open_xml(path) as fh:
         for _ in range(20):
             line = fh.readline(65536)
             if not line:

@@ -4,11 +4,11 @@ Reference capability (SURVEY §2.1 S6): jmzReader opens a per-format
 reader — MzML/MzXml/Pkl — at
 ``/root/reference/src/.../proteomics/JmzReaderSpectrumService.java:34-56``
 and random-accesses one spectrum at a time.  Here each *file* is one unit
-of distributed work: a file-path DataFrame feeds an Arrow-batched
-``mapInPandas`` kernel that stream-parses the XML with
-``xml.etree.iterparse`` (elements are ``clear()``-ed as they complete, so
-memory is one-spectrum-bounded regardless of file size) and decodes the
-base64/zlib peak arrays with numpy.  One task per file ⇒ a submission
+of distributed work (:func:`xmlstream.per_file_reader`): a ``mapInPandas``
+task stream-parses the XML with ``xml.etree.iterparse`` (each spectrum
+is cleared and detached once read, so memory is one-spectrum-bounded
+regardless of file size) and decodes the base64/zlib peak arrays with
+numpy.  One task per file ⇒ a submission
 with hundreds of raw files parses with full cluster parallelism, and the
 schema is identical to :func:`pride_spark.sources.mgf.read_mgf`, so every
 downstream operator (J5/S7/S8, F12/F13, K5) is format-agnostic.
@@ -25,15 +25,13 @@ intensities, numPeaks.
 from __future__ import annotations
 
 import base64
-import xml.etree.ElementTree as ET
 import zlib
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 
-from pride_spark.session import local_frame
-from pride_spark.sources import numpress, xmlsplit
+from pride_spark.sources import numpress
+from pride_spark.sources.xmlstream import iter_detached, localname, per_file_reader
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -59,13 +57,6 @@ SPECTRA_SCHEMA = StructType(
         StructField("numPeaks", IntegerType()),
     ]
 )
-
-_COLS = [f.name for f in SPECTRA_SCHEMA.fields]
-
-
-#: strip any XML namespace — mzML files appear with and without one
-_local = xmlsplit.localname
-
 
 #: MS-Numpress compression terms → (codec, zlib-after-numpress).  The
 #: MS:10027xx accessions mean "numpress THEN zlib", so decode order is
@@ -105,30 +96,6 @@ def _decode_array(text: str | None, *, bits: int, zlib_compressed: bool,
     return arr.astype(np.float64)
 
 
-def _iter_spectra_detached(path: str, want: str = "spectrum"):
-    """Yield each ``want`` element at its end event, then ``clear()`` AND
-    DETACH it from its parent.  ``clear()`` alone leaves an element husk
-    in the parent's child list for every spectrum — GB-scale RSS on a
-    multi-million-spectrum file (the same leak _mzxml_spectra fixed for
-    nested scans); the O(1)-amortized ``remove`` keeps the documented
-    one-spectrum memory bound."""
-    with xmlsplit.open_xml(path) as fh:
-        stack: list = []
-        for event, elem in ET.iterparse(fh, events=("start", "end")):
-            if event == "start":
-                stack.append(elem)
-                continue
-            stack.pop()
-            if _local(elem.tag) == want:
-                yield elem
-                elem.clear()
-                if stack:
-                    try:
-                        stack[-1].remove(elem)
-                    except ValueError:
-                        pass
-
-
 # ---------------------------------------------------------------------------
 # mzML
 # ---------------------------------------------------------------------------
@@ -139,7 +106,7 @@ def _mzml_spectrum_row(elem, base: str, idx: int) -> tuple:
     precursor_mz = precursor_z = None
     arrays: dict[str, np.ndarray] = {}
     for child in elem.iter():
-        name = _local(child.tag)
+        name = localname(child.tag)
         if name == "cvParam":
             cv.setdefault(child.get("accession"),
                           (child.get("value"), child.get("unitName")))
@@ -160,7 +127,7 @@ def _mzml_spectrum_row(elem, base: str, idx: int) -> tuple:
                 except ValueError:
                     pass
         elif name == "binaryDataArray":
-            accs = {p.get("accession") for p in child if _local(p.tag) == "cvParam"}
+            accs = {p.get("accession") for p in child if localname(p.tag) == "cvParam"}
             np_accs = accs & _NUMPRESS_ACCS.keys()
             if len(np_accs) > 1:
                 raise ValueError(
@@ -174,7 +141,7 @@ def _mzml_spectrum_row(elem, base: str, idx: int) -> tuple:
             kind = ("masses" if "MS:1000514" in accs
                     else "intensities" if "MS:1000515" in accs else None)
             if kind:
-                binary = next((b for b in child if _local(b.tag) == "binary"), None)
+                binary = next((b for b in child if localname(b.tag) == "binary"), None)
                 arrays[kind] = _decode_array(
                     binary.text if binary is not None else None,
                     bits=bits, zlib_compressed=compressed,
@@ -190,11 +157,12 @@ def _mzml_spectrum_row(elem, base: str, idx: int) -> tuple:
             rt, masses.tolist(), intens.tolist(), int(masses.size))
 
 
+_SPECTRUM = frozenset(("spectrum",))
+
+
 def _mzml_spectra(path: str, base: str) -> Iterator[tuple]:
-    idx = 0
-    for elem in _iter_spectra_detached(path):
+    for idx, elem in enumerate(iter_detached(path, _SPECTRUM)):
         yield _mzml_spectrum_row(elem, base, idx)
-        idx += 1
 
 
 # ---------------------------------------------------------------------------
@@ -215,12 +183,12 @@ def _mzxml_rt(text: str | None) -> float | None:
 
 def _mzxml_scan_row(elem, base: str, idx: int) -> tuple:
     """One closed ``<scan>`` element → canonical row.  Nested ms2 child
-    scans were ``clear()``-ed at THEIR end events, so ``elem.iter()``
-    here sees only this scan's own precursorMz/peaks."""
+    scans were detached at THEIR end events, so ``elem.iter()`` here
+    sees only this scan's own precursorMz/peaks."""
     precursor_mz = precursor_z = None
     masses = intens = np.empty(0)
     for child in elem.iter():
-        name = _local(child.tag)
+        name = localname(child.tag)
         if name == "precursorMz":
             precursor_mz = float(child.text) if child.text else None
             z = child.get("precursorCharge")
@@ -240,36 +208,13 @@ def _mzxml_scan_row(elem, base: str, idx: int) -> tuple:
 
 
 def _mzxml_spectra(path: str, base: str) -> Iterator[tuple]:
-    """Memory-BOUNDED iterparse: RSS stays flat however large the file.
-
-    ``<scan>`` elements NEST (ms2 scans close inside their ms1 parent),
-    so a start/end element stack tracks the open-scan depth: every scan
-    yields its row (document end-event order, same as before) and is
-    ``clear()``-ed at its end so the parent's ``iter()`` never sees the
-    child's payload; additionally, once NO scan is open, every closed
-    element is DETACHED from its parent (``stack[-1].remove``) — without
-    this, cleared scan husks and the trailing scan-offset ``<index>``
-    accumulate under ``msRun``/root for the whole parse (the round-4
-    single-giant-file ceiling).  Each removal is O(1) amortized because
-    the parent's child list is emptied as it grows."""
-    idx = 0
-    with xmlsplit.open_xml(path) as fh:
-        stack: list = []
-        scan_open = 0
-        for event, elem in ET.iterparse(fh, events=("start", "end")):
-            if event == "start":
-                stack.append(elem)
-                if _local(elem.tag) == "scan":
-                    scan_open += 1
-                continue
-            stack.pop()
-            if _local(elem.tag) == "scan":
-                scan_open -= 1
-                yield _mzxml_scan_row(elem, base, idx)
-                idx += 1
-                elem.clear()
-            if scan_open == 0 and stack:
-                stack[-1].remove(elem)
+    """Rows in end-event order.  ``<scan>`` elements NEST (ms2 scans close
+    inside their ms1 parent); :func:`xmlstream.iter_detached` yields and
+    detaches each nested scan before its parent closes, so the parent's
+    ``iter()`` never sees the child's payload and memory stays flat
+    however large the file."""
+    for idx, elem in enumerate(iter_detached(path, frozenset(("scan",)))):
+        yield _mzxml_scan_row(elem, base, idx)
 
 
 # ---------------------------------------------------------------------------
@@ -288,12 +233,12 @@ def _pridexml_spectrum_row(elem, base: str, idx: int) -> tuple:
     ms_level = precursor_mz = precursor_z = rt = None
     masses = intens = np.empty(0)
     for child in elem.iter():
-        name = _local(child.tag)
+        name = localname(child.tag)
         if name == "spectrumInstrument":
             lvl = child.get("msLevel")
             ms_level = int(lvl) if lvl else None
             for p in child:
-                if _local(p.tag) != "cvParam" or not p.get("value"):
+                if localname(p.tag) != "cvParam" or not p.get("value"):
                     continue
                 acc = p.get("accession")
                 if acc == "PSI:1000038":
@@ -310,7 +255,7 @@ def _pridexml_spectrum_row(elem, base: str, idx: int) -> tuple:
                 elif acc in ("PSI:1000041", "MS:1000041"):
                     precursor_z = int(float(p.get("value")))
         elif name in ("mzArrayBinary", "intenArrayBinary"):
-            data = next((d for d in child if _local(d.tag) == "data"), None)
+            data = next((d for d in child if localname(d.tag) == "data"), None)
             if data is not None:
                 arr = _decode_array(
                     data.text,
@@ -327,150 +272,19 @@ def _pridexml_spectrum_row(elem, base: str, idx: int) -> tuple:
 
 
 def _pridexml_spectra(path: str, base: str) -> Iterator[tuple]:
-    idx = 0
-    for elem in _iter_spectra_detached(path):
+    for idx, elem in enumerate(iter_detached(path, _SPECTRUM)):
         yield _pridexml_spectrum_row(elem, base, idx)
-        idx += 1
 
 
-def _reader(parse) -> "callable":
-    def read(spark: SparkSession, paths: list[str]) -> DataFrame:
-        if isinstance(paths, str):
-            paths = [paths]
-        pdf = local_frame(spark, [(p,) for p in paths], "path string").repartition(
-            min(len(paths), 64)
-        )
+read_mzml = per_file_reader(_mzml_spectra, SPECTRA_SCHEMA)
+read_mzml.__doc__ = "S6 — parse mzML files in parallel → canonical spectra frame."
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # chunked yields: the parser is a one-spectrum-bounded
-            # generator — buffering a whole multi-GB file's rows before
-            # the first yield would undo that bound (r9 review)
-            chunk = 2048
-            for b in batches:
-                rows = []
-                for p in b["path"]:
-                    for row in parse(p, p.rsplit("/", 1)[-1]):
-                        rows.append(row)
-                        if len(rows) >= chunk:
-                            yield pd.DataFrame(rows, columns=_COLS)
-                            rows = []
-                if rows:
-                    yield pd.DataFrame(rows, columns=_COLS)
-
-        return pdf.mapInPandas(kernel, SPECTRA_SCHEMA)
-
-    return read
-
-
-_read_mzml_whole = _reader(_mzml_spectra)
-
-
-def _mzml_split_rows(fn: str, rec: str):
-    """One ``<spectrum>`` record fragment → canonical row.  The row index
-    is mzML's spec-REQUIRED 0-based ``index`` attribute (identical to the
-    whole-file parser's document-order counter for conformant files —
-    asserted in tests), which is what makes the parse order-free and
-    therefore range-parallel."""
-    elem = xmlsplit.fromstring(rec)
-    idx = elem.get("index")
-    if idx is None:
-        raise ValueError(
-            "mzML split mode needs the spectrum 'index' attribute; "
-            "re-read with mode='whole' for non-conformant files"
-        )
-    yield _mzml_spectrum_row(elem, fn, int(idx))
-
-
-def read_mzml(spark: SparkSession, paths: str | list[str], mode: str = "auto") -> DataFrame:
-    """S6 — parse mzML files in parallel → canonical spectra frame.
-
-    ``mode="whole"``: one streaming-iterparse task per file (memory is
-    one-spectrum-bounded, but a single huge run parses serially).
-    ``mode="split"``: byte-range parallel — ``<spectrum>`` records are
-    self-contained (id, msLevel, precursor, base64 peak arrays all
-    inside the element), so a single 20 GB mzML parses across the whole
-    cluster with no joins and no single-task scan.  ``auto`` switches on
-    file size (``xmlsplit.pick_mode``)."""
-    if isinstance(paths, str):
-        paths = [paths]
-    if xmlsplit.pick_mode(paths, mode) == "split":
-        return xmlsplit.scan_df(
-            spark, paths, b"spectrum", False, _mzml_split_rows, SPECTRA_SCHEMA
-        )
-    return _read_mzml_whole(spark, paths)
-
-
-# mzXML stays whole-file only: <scan> elements NEST (ms2 scans inside
-# their ms1 parent), which breaks the input-split ownership contract —
-# a range-owner scanning for "<scan" would claim nested children.  The
-# parse itself is memory-BOUNDED (stack-tracked iterparse, closed
-# subtrees detached — see _mzxml_spectra), so one giant file costs one
-# serial task but never an OOM.
-read_mzxml = _reader(_mzxml_spectra)
+read_mzxml = per_file_reader(_mzxml_spectra, SPECTRA_SCHEMA)
 read_mzxml.__doc__ = "S6 — parse mzXML files in parallel → canonical spectra frame."
 
-_read_pridexml_whole = _reader(_pridexml_spectra)
-
-
-from pyspark.sql.types import LongType, StructField  # noqa: E402
-
-_PRIDEXML_SPLIT_SCHEMA = StructType(
-    [StructField("__off", LongType())] + list(SPECTRA_SCHEMA.fields)
-)
-
-
-def _pridexml_split_rows(fn: str, off: int, rec: str):
-    row = _pridexml_spectrum_row(xmlsplit.fromstring(rec), fn, -1)
-    yield (off, *row)
-
-
-def read_pridexml(
-    spark: SparkSession, paths: str | list[str], mode: str = "auto"
-) -> DataFrame:
-    """S6 — parse legacy PRIDE XML (embedded mzData spectra) in parallel →
-    canonical spectra frame (ref PRIDEXmlWrapper,
-    JmzReaderSpectrumService.java:43-45).
-
-    ``mode="split"``: mzData ``<spectrum>`` records are self-contained
-    like mzML's, but carry NO index attribute — the scanner's byte
-    offsets stand in for document order (strictly increasing), and a
-    per-file two-pass row numbering over them
-    (``operators.joins.global_row_index``) recovers the sequential
-    ``index`` with no single-task sort.  One giant legacy submission
-    file therefore parses at cluster parallelism."""
-    if isinstance(paths, str):
-        paths = [paths]
-    if xmlsplit.pick_mode(paths, mode) != "split":
-        return _read_pridexml_whole(spark, paths)
-    from pride_spark.operators.joins import global_row_index
-    from pride_spark.session import pinned_scope
-
-    out = None
-    for p in paths:  # offsets order WITHIN one file; index files separately
-        recs = xmlsplit.scan_df(
-            spark, [p], b"spectrum", False, _pridexml_split_rows,
-            _PRIDEXML_SPLIT_SCHEMA, with_offset=True,
-        )
-        # pin=True: the upstream here is the full XML record parse —
-        # exactly the expensive-input case the pin exists for (the
-        # quantile/count passes would otherwise re-parse every record).
-        # pinned_scope bounds the pin to THIS file's indexing call (r11
-        # advice): without it, a many-file legacy submission accumulated
-        # one persisted frame per file for the session lifetime.  The
-        # two eager passes inside global_row_index (quantile + count)
-        # run inside the scope and hit the cache; the caller's final
-        # action re-parses each file once from lineage — a bounded cost
-        # (2 parses per file total vs 3 unpinned) that buys bounded
-        # executor storage.
-        with pinned_scope():
-            indexed = global_row_index(recs, ("__off",), "__idx", pin=True)
-        indexed = indexed.select(
-            "fileName",
-            F.col("__idx").cast("int").alias("index"),
-            *[f.name for f in SPECTRA_SCHEMA.fields if f.name not in ("fileName", "index")],
-        )
-        out = indexed if out is None else out.unionByName(indexed)
-    return out
+read_pridexml = per_file_reader(_pridexml_spectra, SPECTRA_SCHEMA)
+read_pridexml.__doc__ = """S6 — parse legacy PRIDE XML (embedded mzData spectra) in parallel →
+canonical spectra frame (ref PRIDEXmlWrapper, JmzReaderSpectrumService.java:43-45)."""
 
 
 # ---------------------------------------------------------------------------

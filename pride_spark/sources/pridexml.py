@@ -7,7 +7,8 @@ non-mzIdentML ``.xml`` to the ``PRIDE`` file type
 (``services/proteomics/PIAModelerService.java:162-189``).  PIA's PRIDE
 XML parser walks ``GelFreeIdentification`` / ``TwoDimensionalIdentification``
 elements and their ``PeptideItem`` children; this module re-expresses
-that walk as a per-file Arrow-batched ``mapInPandas`` task producing the
+that walk as a per-file ``mapInPandas`` task
+(:func:`xmlstream.per_file_reader`) producing the
 SAME canonical psms frame ``read_mzid_psms`` emits (``MZID_PSM_SCHEMA``),
 so everything downstream — filters, FDR, inference, the spectrum join —
 is format-blind.
@@ -34,30 +35,21 @@ accession prefix.
 
 from __future__ import annotations
 
-import xml.etree.ElementTree as ET
 from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-from pride_spark.sources import xmlsplit
-from pride_spark.sources.mzid import MZID_PSM_SCHEMA, _paths_df
+from pride_spark.sources.mzid import MZID_PSM_SCHEMA
+from pride_spark.sources.xmlstream import iter_detached, localname, per_file_reader
 
 _IDENT_TAGS = ("GelFreeIdentification", "TwoDimensionalIdentification")
 _DECOY_ACC = "PRIDE:0000303"
 _MASCOT_SCORE_ACC = "PRIDE:0000069"
 
 
-def _local(tag: str) -> str:
-    return tag.rsplit("}", 1)[-1]
-
-
 def _findtext_local(elem, name: str) -> str | None:
     """Direct-child text lookup by LOCAL name — legacy PRIDE XML appears
     both with and without a namespace."""
     for child in elem:
-        if _local(child.tag) == name:
+        if localname(child.tag) == name:
             return child.text
     return None
 
@@ -67,7 +59,7 @@ def _precursor_of(spec) -> tuple[float | None, int | None]:
     accessions the spectra reader uses (``mzml._pridexml_spectrum_row``)."""
     mz = z = None
     for child in spec.iter():
-        if _local(child.tag) != "ionSelection":
+        if localname(child.tag) != "ionSelection":
             continue
         for p in child:
             if not p.get("value"):
@@ -85,9 +77,9 @@ def _additional_cvparams(elem) -> list:
     a PeptideItem's ModificationItems carry their own blocks)."""
     out = []
     for child in elem:
-        if _local(child.tag) != "additional":
+        if localname(child.tag) != "additional":
             continue
-        out.extend(p for p in child if _local(p.tag) == "cvParam")
+        out.extend(p for p in child if localname(p.tag) == "cvParam")
     return out
 
 
@@ -129,13 +121,13 @@ def _ident_rows(elem, base: str, counter: list[int], precursors: dict) -> Iterat
         ident_score = None
     ident_cvs = _additional_cvparams(elem)
     for pep in elem:
-        if _local(pep.tag) != "PeptideItem":
+        if localname(pep.tag) != "PeptideItem":
             continue
         seq = _findtext_local(pep, "Sequence") or ""
         spec_ref = _findtext_local(pep, "SpectrumReference")
         mods = []
         for m in pep:
-            if _local(m.tag) != "ModificationItem":
+            if localname(m.tag) != "ModificationItem":
                 continue
             loc = _findtext_local(m, "ModLocation")
             macc = _findtext_local(m, "ModAccession")
@@ -168,117 +160,21 @@ def _ident_rows(elem, base: str, counter: list[int], precursors: dict) -> Iterat
         )
 
 
-def _parse_one(path: str) -> list[tuple]:
+def _psms(path: str, base: str) -> Iterator[tuple]:
     """One streaming pass: mzData spectra precede the identifications in
     document order, so the bounded ``id -> (mz, charge)`` map is complete
     before the first Identification end-event fires.  Processed elements
-    are cleared — memory is one-element-bounded plus the scalar map."""
-    base = path.rsplit("/", 1)[-1]
+    are cleared and detached — memory is one-element-bounded plus the
+    scalar map."""
     precursors: dict[str, tuple] = {}
-    rows: list[tuple] = []
     counter = [0]
-    with xmlsplit.open_xml(path) as fh:
-        for _event, elem in ET.iterparse(fh, events=("end",)):
-            name = _local(elem.tag)
-            if name == "spectrum":
-                precursors[elem.get("id")] = _precursor_of(elem)
-                elem.clear()
-            elif name in _IDENT_TAGS:
-                rows.extend(_ident_rows(elem, base, counter, precursors))
-                elem.clear()
-    return rows
+    for elem in iter_detached(path, frozenset(("spectrum", *_IDENT_TAGS))):
+        if localname(elem.tag) == "spectrum":
+            precursors[elem.get("id")] = _precursor_of(elem)
+        else:
+            yield from _ident_rows(elem, base, counter, precursors)
 
 
-def _read_pridexml_psms_whole(spark: SparkSession, paths: list[str]) -> DataFrame:
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for p in pdf["path"]:
-                rows.extend(_parse_one(p))
-            yield pd.DataFrame(rows, columns=[f.name for f in MZID_PSM_SCHEMA.fields])
-
-    return _paths_df(spark, paths).mapInPandas(kernel, MZID_PSM_SCHEMA)
-
-
-_SPLIT_SCHEMA = StructType(
-    [StructField("__off", LongType()), StructField("__seq", IntegerType())]
-    + list(MZID_PSM_SCHEMA.fields)
-)
-
-
-def _ident_split_rows(fn: str, off: int, rec: str) -> Iterator[tuple]:
-    """One Identification record fragment → PSM rows tagged with the
-    record's byte offset + the item's within-record sequence (together a
-    total document order).  Precursor mz/charge stay NULL here — the
-    split path fills them with a distributed join against the mzData
-    spectra scan instead of a per-task dict."""
-    elem = xmlsplit.fromstring(rec)
-    counter = [0]
-    for row in _ident_rows(elem, fn, counter, {}):
-        yield (off, counter[0], *row)
-
-
-def _read_pridexml_psms_split(spark: SparkSession, paths: list[str]) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from pride_spark.operators.joins import global_row_index
-    from pride_spark.sources.mzml import read_pridexml
-
-    out = None
-    for p in paths:  # offsets order WITHIN one file; number files separately
-        recs = None
-        for tag in (b"GelFreeIdentification", b"TwoDimensionalIdentification"):
-            df = xmlsplit.scan_df(
-                spark, [p], tag, False, _ident_split_rows, _SPLIT_SCHEMA,
-                with_offset=True,
-            )
-            recs = df if recs is None else recs.unionByName(df)
-        # recover the whole-mode document-order PSM numbering with the
-        # same two-pass distributed row index read_pridexml uses for
-        # spectrum indices — no single-task sort
-        numbered = global_row_index(recs, ("__off", "__seq"), "__idx").withColumn(
-            "psmId", F.concat(F.lit("PSM_"), (F.col("__idx") + 1).cast("string"))
-        )
-        # precursor mz/charge live on the referenced mzData spectrum; the
-        # whole-mode dict lookup becomes an equi-join against the (also
-        # range-parallel) spectra scan — both sides of a giant legacy
-        # file parse at cluster parallelism
-        spect = read_pridexml(spark, [p]).select(
-            F.col("spectrumId").alias("sourceId"),
-            F.col("precursorMz").alias("__mz"),
-            F.col("precursorCharge").alias("__z"),
-        )
-        joined = (
-            numbered.drop("__off", "__seq", "__idx", "precursorCharge", "massToCharge")
-            .join(spect, "sourceId", "left")
-            .withColumnsRenamed({"__z": "precursorCharge", "__mz": "massToCharge"})
-            .select(*[f.name for f in MZID_PSM_SCHEMA.fields])
-        )
-        out = joined if out is None else out.unionByName(joined)
-    return out
-
-
-def read_pridexml_psms(
-    spark: SparkSession, paths: str | list[str], mode: str = "auto"
-) -> DataFrame:
-    """S3 — PRIDE XML identifications → canonical psms frame.
-
-    ``mode="whole"`` (default for small files): one streaming-iterparse
-    task per file, same executor-side strategy and output schema as
-    ``read_mzid_psms_whole``; memory is one-element-bounded but a single
-    giant file parses serially.
-
-    ``mode="split"`` (auto past ``xmlsplit.SPLIT_THRESHOLD_MB``):
-    ``GelFreeIdentification`` / ``TwoDimensionalIdentification`` records
-    are byte-range partitioned across executors (they are self-contained
-    and never nest), document-order PSM ids are recovered with the
-    two-pass distributed row index, and precursor mz/charge resolve via
-    an equi-join against the range-parallel mzData spectra scan — one
-    multi-GB legacy submission file parses at cluster parallelism.
-    Both modes produce identical rows (asserted in
-    tests/test_format_readers.py)."""
-    if isinstance(paths, str):
-        paths = [paths]
-    if xmlsplit.pick_mode(paths, mode) == "split":
-        return _read_pridexml_psms_split(spark, paths)
-    return _read_pridexml_psms_whole(spark, paths)
+read_pridexml_psms = per_file_reader(_psms, MZID_PSM_SCHEMA)
+read_pridexml_psms.__doc__ = """S3 — PRIDE XML identifications → canonical psms frame, one streaming
+parse task per file (the same strategy and schema as ``read_mzid_psms``)."""

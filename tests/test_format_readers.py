@@ -311,7 +311,7 @@ def test_read_spectra_any_dispatches_and_sniffs_xml(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# S3 split strategy: byte-range parallel mzIdentML parse (sources/mzid.py)
+# S3 mzIdentML streaming parse (sources/mzid.py)
 # ---------------------------------------------------------------------------
 
 #: adversarial mzid: namespace prefix, single-quoted attrs, XML entities,
@@ -377,100 +377,72 @@ def _canon_psms(df):
     return sorted(rows, key=lambda r: (r["fileName"], r["psmId"]))
 
 
-def test_mzid_split_matches_whole(spark, tmp_path):
-    """Both parse strategies produce identical canonical rows — including
-    entities, quote styles, namespace prefixes, evidence-order, dangling
-    refs, and empty-evidence items — across multiple files."""
-    from pride_spark.sources.mzid import (
-        read_mzid_psms_split,
-        read_mzid_psms_whole,
-        read_mzid_spectra_data_split,
-        read_mzid_spectra_data_whole,
-    )
-
+def test_mzid_adversarial_fixture_rows(spark, tmp_path):
+    """Entities, quote styles, namespace prefixes, evidence order,
+    dangling refs and empty-evidence items, across two files."""
     pa, pb = tmp_path / "a.mzid", tmp_path / "b.mzid"
     pa.write_text(MZID)
     pb.write_text(MZID_NASTY)
     paths = [str(pa), str(pb)]
-    whole = _canon_psms(read_mzid_psms_whole(spark, paths))
-    split = _canon_psms(read_mzid_psms_split(spark, paths))
-    assert whole == split
-    assert len(whole) == 5
+    rows = _canon_psms(read_mzid_psms(spark, paths))
+    assert len(rows) == 5
 
-    by_id = {r["psmId"]: r for r in split}
-    # document-order accessions survive the distributed regroup (PE_2 first)
+    by_id = {r["psmId"]: r for r in rows if r["fileName"] == "b.mzid"}
+    # accessions keep the item's evidence order (PE_2 first); decoy is the OR
     assert by_id["SII_1"]["proteinAccessions"] == ("DECOY_P12", "P1&2")
     assert by_id["SII_1"]["isDecoy"] is True
     assert [m[0] for m in by_id["SII_1"]["modifications"]] == [3, 5]
     # dangling dbseq ref + empty accession: dropped from accs, decoy=False
     assert by_id["SII_2"]["proteinAccessions"] == ()
     assert by_id["SII_2"]["isDecoy"] is False
-    # dangling peptide ref: empty sequence, no mods (whole-mode default)
+    # dangling peptide ref: empty sequence, no mods
     assert by_id["SII_3"]["peptideSequence"] == ""
     assert by_id["SII_3"]["modifications"] == ()
 
-    sd_w = sorted(map(tuple, read_mzid_spectra_data_whole(spark, paths).collect()))
-    sd_s = sorted(map(tuple, read_mzid_spectra_data_split(spark, paths).collect()))
-    assert sd_w == sd_s
-    assert ("b.mzid", "SD_1", "file:///data/a&b.mgf", "MS:1000774") in sd_s
+    sd = sorted(map(tuple, read_mzid_spectra_data(spark, paths).collect()))
+    assert ("b.mzid", "SD_1", "file:///data/a&b.mgf", "MS:1000774") in sd
+    assert len(sd) == 2
 
 
-def test_mzid_scan_range_ownership(tmp_path):
-    """A record belongs to the byte range containing its first byte; a
-    record straddling a boundary is read past the end by its owner and
-    never duplicated — regardless of where the boundary falls."""
-    from pride_spark.sources.mzid import _scan_records
-
-    recs = [
-        f'<Peptide id="P{i}"><PeptideSequence>SEQ{i}</PeptideSequence></Peptide>'
-        for i in range(20)
-    ]
-    blob = "JUNKHEADER" + "x" * 57 + "".join(recs) + "TRAILING"
-    p = tmp_path / "scan.xml"
-    p.write_text(blob)
-    size = len(blob)
-    for step in (7, 64, 100, size):
-        got = []
-        for start in range(0, size, step):
-            got.extend(
-                r.decode()
-                for _off, r in _scan_records(str(p), start, min(start + step, size), b"Peptide", False)
-            )
-        assert got == recs, f"step={step}: {len(got)} records"
+_SEQUENCES = MZID_NASTY[
+    MZID_NASTY.index("  <m:SequenceCollection>"):MZID_NASTY.index("  <m:DataCollection>")
+]
+#: MZID_NASTY with its SequenceCollection after the DataCollection, so
+#: every peptide and evidence ref points forward in the document
+MZID_DATA_FIRST = MZID_NASTY.replace(_SEQUENCES, "").replace(
+    "  </m:DataCollection>\n", "  </m:DataCollection>\n" + _SEQUENCES
+)
 
 
-def test_mzid_auto_mode_threshold(tmp_path, monkeypatch):
-    from pride_spark.sources import xmlsplit as X
-
-    small = tmp_path / "s.mzid"
-    small.write_text(MZID)
-    assert X.pick_mode([str(small)], "auto") == "whole"
-    monkeypatch.setattr(X, "SPLIT_THRESHOLD_MB", 1e-6)
-    assert X.pick_mode([str(small)], "auto") == "split"
-    assert X.pick_mode(["http://host/x.mzid"], "auto") == "whole"
-    assert X.pick_mode(["/any/x.mzid.gz"], "auto") == "whole"  # not seekable
-    assert X.pick_mode([str(small)], "whole") == "whole"
-
-
-def test_mzml_split_matches_whole(spark, tmp_path):
-    """Split (byte-range parallel) and whole (iterparse) mzML strategies
-    produce identical canonical rows; split uses the spec-required
-    ``index`` attribute in place of the document-order counter."""
-    from pride_spark.sources.mzml import read_mzml
-
-    xml, _mz, _inten = _mzml_fixture()
-    p = tmp_path / "run1.mzML"
-    p.write_text(xml)
-
-    def canon(df):
-        return sorted(
-            (tuple(r) for r in df.collect()), key=lambda t: (t[0], t[1])
+def test_mzid_sequence_collection_after_data_collection(spark, tmp_path):
+    """Refs resolve once the file ends, so section order does not matter:
+    the rows equal those of a whole-document parse."""
+    p = tmp_path / "data_first.mzid"
+    p.write_text(MZID_DATA_FIRST)
+    assert MZID_DATA_FIRST.index("<m:DataCollection>") < MZID_DATA_FIRST.index(
+        "<m:SequenceCollection>"
+    )
+    rows = {
+        r["psmId"]: (
+            r["peptideSequence"],
+            r["modifications"],
+            r["proteinAccessions"],
+            r["isDecoy"],
         )
-
-    whole = canon(read_mzml(spark, [str(p)], mode="whole"))
-    split = canon(read_mzml(spark, [str(p)], mode="split"))
-    assert whole == split
-    assert len(split) == 2
+        for r in _canon_psms(read_mzid_psms(spark, [str(p)]))
+    }
+    assert rows == {
+        "SII_1": (
+            "PEPTIDEK",
+            ((3, "UNIMOD:21", "Phospho"), (5, "UNIMOD:4", "Carbamidomethyl")),
+            ("DECOY_P12", "P1&2"),
+            True,
+        ),
+        "SII_2": ("LNGVK", (), (), False),
+        "SII_3": ("", (), (), False),
+    }
+    sd = [tuple(r) for r in read_mzid_spectra_data(spark, [str(p)]).collect()]
+    assert sd == [("data_first.mzid", "SD_1", "file:///data/a&b.mgf", "MS:1000774")]
 
 
 def test_mzml_reader_gzipped(spark, tmp_path):
@@ -496,114 +468,6 @@ def test_mzid_reader_gzipped(spark, tmp_path):
         fh.write(MZID)
     psms = {r["psmId"]: r for r in read_mzid_psms(spark, [str(p)]).collect()}
     assert len(psms) == 2 and psms["SII_1"]["peptideSequence"] == "PEPTIDEK"
-
-
-def test_pridexml_split_matches_whole(spark, tmp_path):
-    """PRIDE XML split mode (byte-offset order → two-pass indexing)
-    matches the whole-file iterparse counter exactly."""
-    from pride_spark.sources.mzml import _read_pridexml_whole, read_pridexml
-
-    xml, _mz, _inten = _pridexml_fixture()
-    p = tmp_path / "legacy.xml"
-    p.write_text(xml)
-    whole = sorted(map(tuple, _read_pridexml_whole(spark, [str(p)]).collect()))
-    split = sorted(map(tuple, read_pridexml(spark, [str(p)], mode="split").collect()))
-    assert whole == split and len(split) > 0
-
-
-def test_pridexml_split_releases_per_file_pins(spark, tmp_path):
-    """r11 advice: split mode pinned one persisted frame PER FILE for
-    the session lifetime (global_row_index pin=True inside the loop) —
-    a many-file legacy submission accumulated executor storage.  The
-    per-file indexing now runs in pinned_scope, so after read_pridexml
-    returns no new persisted RDDs remain, and the result (which
-    recomputes the parse from lineage once) is still exact."""
-    from pride_spark.sources.mzml import _read_pridexml_whole, read_pridexml
-
-    xml, _mz, _inten = _pridexml_fixture()
-    paths = []
-    for i in range(3):
-        p = tmp_path / f"legacy{i}.xml"
-        p.write_text(xml)
-        paths.append(str(p))
-
-    sc = spark.sparkContext
-
-    def n_persisted():
-        try:
-            return sc._jsc.getPersistentRDDs().size()
-        except Exception:
-            return None
-
-    before = n_persisted()
-    split_df = read_pridexml(spark, paths, mode="split")
-    after_build = n_persisted()
-    if before is not None:
-        assert after_build == before, "per-file pins must not outlive the call"
-    split = sorted(map(tuple, split_df.collect()))
-    whole = sorted(map(tuple, _read_pridexml_whole(spark, paths).collect()))
-    assert whole == split and len(split) > 0
-
-
-def test_scan_records_gt_inside_attribute_values(tmp_path, monkeypatch):
-    """'>' is legal inside XML attribute values (only '<' and '&' must
-    be escaped): a title like m/z>400 must not truncate an attr-only
-    capture, and a value containing '/>' must not fake a self-close —
-    regression for the first-'>' scanner."""
-    from pride_spark.sources import xmlsplit as X
-
-    recs = [
-        '<Rec id="r0" name="sel m/z>400 and more"><c>x</c></Rec>',
-        "<Rec id='r1' note='a/>b'><c>y</c></Rec>",
-        '<Rec id="r2" name="plain"/>',
-        '<Rec id="r3" name="trail>">text</Rec>',
-    ]
-    blob = "HEAD" + "".join(recs) + "TAIL"
-    p = tmp_path / "gt.xml"
-    p.write_text(blob)
-    size = len(blob)
-
-    # full-record capture, several range partitions incl. 1-byte steps
-    for step in (9, 33, size):
-        got = []
-        for start in range(0, size, step):
-            got.extend(
-                r.decode()
-                for _off, r in X.scan_records(
-                    str(p), start, min(start + step, size), b"Rec", False
-                )
-            )
-        assert got == recs, f"step={step}"
-
-    # attr-only capture keeps the whole open tag, quoted '>' intact
-    open_tags = [
-        r.decode() for _off, r in X.scan_records(str(p), 0, size, b"Rec", True)
-    ]
-    assert open_tags == [
-        '<Rec id="r0" name="sel m/z>400 and more">',
-        "<Rec id='r1' note='a/>b'>",
-        '<Rec id="r2" name="plain"/>',
-        '<Rec id="r3" name="trail>">',
-    ]
-
-    # a quoted value straddling the read-chunk boundary still captures
-    monkeypatch.setattr(X, "_SCAN_CHUNK", 3)
-    assert [
-        r.decode() for _off, r in X.scan_records(str(p), 0, size, b"Rec", False)
-    ] == recs
-
-
-def test_attr_tag_value_ending_in_gt_or_slash():
-    """_attr_tag strips only the structural terminator — attribute
-    values may themselves end in '>' or '/'."""
-    from pride_spark.sources.mzid import _attr_tag
-
-    t = _attr_tag('<E a="x>">')
-    assert t.get("a") == "x>"
-    t = _attr_tag('<E a="x/"/>')
-    assert t.get("a") == "x/"
-    t = _attr_tag("<E a='m/z>400'>")
-    assert t.get("a") == "m/z>400"
 
 
 def _mzxml_nested(n_ms1: int, peaks_per_scan: int = 4) -> str:
@@ -885,35 +749,21 @@ def test_pridexml_through_read_psms_any(spark, tmp_path):
     assert out.count() == 2
 
 
-def test_pridexml_psms_split_matches_whole(spark, tmp_path):
-    """r8: the byte-range-parallel PRIDE XML identification scan must
-    produce IDENTICAL rows to the whole-file parse — document-order
-    psmIds recovered via the distributed row index, precursor mz/charge
-    via the spectra equi-join instead of the per-task dict."""
-    from pride_spark.sources.pridexml import read_pridexml_psms
-
-    p = tmp_path / "legacy.xml"
-    p.write_text(_pridexml_with_idents())
-    whole = sorted(map(repr, read_pridexml_psms(spark, [str(p)], mode="whole").collect()))
-    split = sorted(map(repr, read_pridexml_psms(spark, [str(p)], mode="split").collect()))
-    assert whole == split and len(whole) == 2
-
-
-def test_pridexml_psms_split_multirange(spark, tmp_path, monkeypatch):
-    """Split parity under REAL range partitioning: shrink the range size
-    so the 40-identification fixture spans many byte ranges — record
-    ownership (first byte), cross-range record completion, and the
-    two-pass psmId numbering all exercised."""
-    from pride_spark.sources import xmlsplit as X
+def test_pridexml_psms_document_order(spark, tmp_path):
+    """A 40-identification file: psmIds number the PeptideItems in
+    document order, and every item's precursor resolves from the mzData
+    spectrum it references."""
     from pride_spark.sources.pridexml import read_pridexml_psms
     from tests.test_cli import _pridexml_submission
 
     p = tmp_path / "big_legacy.xml"
     p.write_text(_pridexml_submission(40))
-    whole = sorted(map(repr, read_pridexml_psms(spark, [str(p)], mode="whole").collect()))
-    monkeypatch.setattr(X, "SPLIT_RANGE_MB", 0.002)  # ~2 KB ranges
-    split = sorted(map(repr, read_pridexml_psms(spark, [str(p)], mode="split").collect()))
-    assert whole == split and len(whole) == 40
+    rows = {r["psmId"]: r for r in read_pridexml_psms(spark, [str(p)]).collect()}
+    assert sorted(rows) == sorted(f"PSM_{i + 1}" for i in range(40))
+    for i in range(40):
+        r = rows[f"PSM_{i + 1}"]
+        assert r["sourceId"] == str(i)
+        assert (r["massToCharge"], r["precursorCharge"]) == (400.0 + i, 2)
 
 
 def test_read_psms_any_mixed_formats(spark, tmp_path):
@@ -949,7 +799,7 @@ def test_mzidentml_extension_alias(spark, tmp_path):
 def test_read_psms_any_gzipped_xml_sniffs_through_gzip(spark, tmp_path):
     """r9 (ADVICE): _ext strips .gz, so a gzipped result file named
     ident.xml.gz reaches the content sniff — the sniff must read
-    DECOMPRESSED bytes (via xmlsplit.open_xml), else gzip garbage
+    DECOMPRESSED bytes (via xmlstream.open_xml), else gzip garbage
     misroutes an mzIdentML to the PRIDE XML reader (silent zero PSMs)."""
     import gzip
 
@@ -1085,23 +935,12 @@ def test_open_xml_uppercase_gz(spark, tmp_path):
     case-insensitive extension routing (it was parsed as raw bytes)."""
     import gzip as _gzip
 
-    from pride_spark.sources import xmlsplit
+    from pride_spark.sources.xmlstream import open_xml
 
     p = tmp_path / "TINY.XML.GZ"
     p.write_bytes(_gzip.compress(b"<root><a>1</a></root>"))
-    with xmlsplit.open_xml(str(p)) as fh:
+    with open_xml(str(p)) as fh:
         assert b"<root>" in fh.read()
-    assert xmlsplit.pick_mode([str(p)], "auto") == "whole"
-
-
-def test_fromstring_attribute_prefix_recovery():
-    """r9 review: a fragment whose ONLY prefixed names are attributes
-    (xsi:type=...) gets the dummy-binding recovery too."""
-    from pride_spark.sources import xmlsplit
-
-    frag = '<cvParam xsi:type="Thing" accession="MS:1" value="2"/>'
-    elem = xmlsplit.fromstring(frag)
-    assert elem.get("accession") == "MS:1"
 
 
 def test_mzml_empty_selected_ion_and_multi_codec_refused(spark, tmp_path):
@@ -1141,7 +980,7 @@ def test_mzml_empty_selected_ion_and_multi_codec_refused(spark, tmp_path):
 
     ok = tmp_path / "ok.mzml"
     ok.write_text(mzml(spectrum("")))
-    rows = read_mzml(spark, str(ok), mode="whole").collect()
+    rows = read_mzml(spark, str(ok)).collect()
     assert len(rows) == 1
     assert rows[0]["precursorMz"] is None          # empty value skipped
     assert rows[0]["precursorCharge"] == 2
@@ -1152,7 +991,7 @@ def test_mzml_empty_selected_ion_and_multi_codec_refused(spark, tmp_path):
         '<cvParam accession="MS:1002312"/><cvParam accession="MS:1002314"/>'
     )))
     with _pytest.raises(Exception, match="multiple numpress codecs"):
-        read_mzml(spark, str(bad), mode="whole").collect()
+        read_mzml(spark, str(bad)).collect()
 
 
 def test_numpress_codec_roundtrips():
@@ -1206,7 +1045,7 @@ def test_mzml_numpress_twin_parity(spark, tmp_path):
     """r11 verdict task #1 done-criterion: a numpress-compressed twin of
     the mzML fixture reads with array-level parity to its uncompressed
     twin, for all three codecs AND the three numpress+zlib combined
-    accessions, in whole and split modes."""
+    accessions."""
     import base64
     import zlib as _zlib
 
@@ -1251,23 +1090,22 @@ def test_mzml_numpress_twin_parity(spark, tmp_path):
     p = tmp_path / "numpress.mzML"
     p.write_text(xml)
 
-    for mode in ("whole", "split"):
-        rows = {r["spectrumId"]: r for r in read_mzml(spark, str(p), mode=mode).collect()}
-        assert len(rows) == 5, mode
-        ref_mz = np.asarray(rows["plain"]["masses"])
-        ref_in = np.asarray(rows["plain"]["intensities"])
-        fp = npz.optimal_linear_fixed_point(mz)
-        for sid in ("np", "npz"):
-            got = rows[sid]
-            assert got["numPeaks"] == mz.size
-            # linear m/z: parity within the fixed-point grid
-            assert np.abs(np.asarray(got["masses"]) - ref_mz).max() <= 0.5 / fp + 1e-12
-            # pic intensities: exact integer rounding of the plain twin
-            assert np.array_equal(
-                np.asarray(got["intensities"]), np.round(ref_in)
-            ), sid
-        for sid in ("np_slof", "npz_slof"):
-            got_in = np.asarray(rows[sid]["intensities"])
-            rel = np.abs(got_in - ref_in) / (ref_in + 1)
-            assert rel.max() < 1e-3, sid
-            assert rows[sid]["masses"] == rows["plain"]["masses"]
+    rows = {r["spectrumId"]: r for r in read_mzml(spark, str(p)).collect()}
+    assert len(rows) == 5
+    ref_mz = np.asarray(rows["plain"]["masses"])
+    ref_in = np.asarray(rows["plain"]["intensities"])
+    fp = npz.optimal_linear_fixed_point(mz)
+    for sid in ("np", "npz"):
+        got = rows[sid]
+        assert got["numPeaks"] == mz.size
+        # linear m/z: parity within the fixed-point grid
+        assert np.abs(np.asarray(got["masses"]) - ref_mz).max() <= 0.5 / fp + 1e-12
+        # pic intensities: exact integer rounding of the plain twin
+        assert np.array_equal(
+            np.asarray(got["intensities"]), np.round(ref_in)
+        ), sid
+    for sid in ("np_slof", "npz_slof"):
+        got_in = np.asarray(rows[sid]["intensities"])
+        rel = np.abs(got_in - ref_in) / (ref_in + 1)
+        assert rel.max() < 1e-3, sid
+        assert rows[sid]["masses"] == rows["plain"]["masses"]

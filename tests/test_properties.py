@@ -239,65 +239,6 @@ def test_lsh_first_collision_pairs_match_any_band_reference(spark, docs):
 
 
 # ---------------------------------------------------------------------------
-# xmlsplit range scanner: record ownership under arbitrary boundaries
-# ---------------------------------------------------------------------------
-
-_XML_PARTS = st.lists(
-    st.tuples(
-        st.text(alphabet="ab&; \n", max_size=12),  # inter-record junk (no '<')
-        # record content — includes '>' and '/' (legal in attribute
-        # values and text), the quote-aware-scanner regression chars
-        st.text(alphabet="xyz0189>/", min_size=0, max_size=10),
-        st.booleans(),  # namespace prefix on this record?
-        st.booleans(),  # self-closed?
-    ),
-    min_size=0,
-    max_size=12,
-)
-
-
-@given(parts=_XML_PARTS, step=st.integers(min_value=1, max_value=64))
-@settings(
-    max_examples=60,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_scan_records_ownership_any_boundary(tmp_path_factory, parts, step):
-    """Pure-Python property (no Spark): for ANY byte-range partitioning,
-    the union of per-range scans is exactly the document's record list,
-    in order, with no duplicates — records straddling boundaries are
-    emitted once by the range owning their first byte, self-closed
-    records by their own tag, prefixed records closed by their own
-    prefix."""
-    from pride_spark.sources.xmlsplit import scan_records
-
-    recs, blob = [], []
-    for junk, content, prefixed, selfclosed in parts:
-        p = "ns:" if prefixed else ""
-        if selfclosed:
-            rec = f"<{p}Rec a='{content}'/>"
-        else:
-            rec = f"<{p}Rec>{content}</{p}Rec>"
-        blob.append(junk)
-        blob.append(rec)
-        recs.append(rec)
-    blob.append("tail")
-    data = "".join(blob).encode()
-    d = tmp_path_factory.mktemp("scan")
-    path = d / "doc.xml"
-    path.write_bytes(data)
-
-    got = []
-    size = max(len(data), 1)
-    for start in range(0, size, step):
-        got.extend(
-            r.decode()
-            for _off, r in scan_records(str(path), start, min(start + step, size), b"Rec", False)
-        )
-    assert got == recs
-
-
-# ---------------------------------------------------------------------------
 # range_join ≡ naive BETWEEN join on arbitrary integer points/intervals
 # (incl. end<start garbage, duplicates, negatives, bin-boundary values)
 # ---------------------------------------------------------------------------

@@ -16,9 +16,7 @@ names, through module aliases, ``from ... import`` bindings (relative
 ones included) and package re-exports.  Tests are not roots: a function
 only a test calls is dead surface unless it is the reference a test
 compares the engine against, or the port of a reference method that
-PARITY_AUDIT.md or a SURVEY.md row names.  The ``deletion pending``
-entries are test-only extensions scheduled for deletion (ROADMAP
-item 5).
+PARITY_AUDIT.md or a SURVEY.md row names.
 """
 
 from __future__ import annotations
@@ -66,16 +64,6 @@ ALLOWED = {
     "operators.filters.phospho_artifact_filter": "SURVEY F8: phospho-on-Ala artifact filter",
     "operators.filters.ms_level_filter": "SURVEY F13: MS-level filter",
     "sources.mztab.read_mztab_peptides": "SURVEY S3: mzTab PEP section of the PIA import",
-    # test-only extensions still to delete (ROADMAP item 5): one change
-    # removes a bounded number of tests, so these go in the next one
-    "operators.curation.hash_sample": "deletion pending, test_curation",
-    "operators.curation.kmeans_assign": "deletion pending, test_curation",
-    "operators.curation.cluster_balanced_sample": "deletion pending, test_curation",
-    "operators.multimodal.pillow_image_decoder": "deletion pending, test_multimodal",
-    "operators.multimodal.resize_images": "deletion pending, test_multimodal",
-    "sources.bucketing.write_bucketed": "deletion pending, test_bucketing",
-    "sources.bucketing.read_table": "deletion pending, test_bucketing",
-    "operators.timeseries.histogram_quantile": "deletion pending, test_timeseries_rangejoin",
 }
 
 

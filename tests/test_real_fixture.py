@@ -15,8 +15,6 @@ What it pins on real bytes:
 - the engine re-reads every file to EXACTLY the spectrum count frozen
   at fetch time (``manifest.json``) — parser drift on real vendor
   output fails here;
-- whole-file and byte-range-split scans agree row-for-row on real
-  Thermo nativeID ids and real peak arrays;
 - every spectrum carries peaks and a parseable scan id.
 """
 
@@ -50,18 +48,6 @@ def test_real_mzml_counts_replicate(spark):
     for name, meta in mzml.items():
         df = read_mzml(spark, [os.path.join(DATA, name)])
         assert df.count() == meta["spectra"], name
-
-
-def test_real_mzml_whole_equals_split(spark):
-    from pride_spark.sources.mzml import read_mzml
-
-    name = sorted(
-        k for k in _manifest()["files"] if k.endswith(".mzML")
-    )[0]
-    p = os.path.join(DATA, name)
-    whole = sorted(map(tuple, read_mzml(spark, [p]).collect()))
-    split = sorted(map(tuple, read_mzml(spark, [p], mode="split").collect()))
-    assert whole == split and len(whole) > 0
 
 
 def test_real_mzml_rows_are_well_formed(spark):

@@ -79,6 +79,71 @@ def test_create_dataframe_only_in_session_module():
     assert _package_lines("createDataFrame(") == []
 
 
+def test_map_in_pandas_in_sources_only_in_per_file_reader():
+    """Every file-parsing source shares ONE path frame → ``mapInPandas``
+    kernel, :func:`xmlstream.per_file_reader`; a second copy of that
+    plumbing in ``sources/`` fails here."""
+    assert [
+        line.split(":")[0]
+        for line in _package_lines("mapInPandas(")
+        if line.startswith("sources/")
+    ] == ["sources/xmlstream.py"]
+
+
+#: environment variables the package may read: deployment settings, not
+#: tuning knobs (cds_launch reads the JVM launcher's own variables)
+_DEPLOYMENT_ENV = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_DRIVER_MEMORY",
+    "SPARK_GRAFT_PQ_TRAIN_DIR",
+    "PYSPARK_SUBMIT_ARGS",
+    "SPARK_HOME",
+    "SPARK_CONF_DIR",
+    "JAVA_HOME",
+    "PATH",
+    "XDG_CACHE_HOME",
+}
+
+
+def _env_reads(tree) -> set[str]:
+    """Names read with a string constant through ``os.environ.get``,
+    ``environ.get``, ``os.getenv`` or an ``environ[...]`` subscript."""
+    import ast
+
+    def is_environ(node) -> bool:
+        return (isinstance(node, ast.Name) and node.id == "environ") or (
+            isinstance(node, ast.Attribute) and node.attr == "environ"
+        )
+
+    names = set()
+    for node in ast.walk(tree):
+        key = None
+        if isinstance(node, ast.Call) and node.args:
+            f = node.func
+            if (isinstance(f, ast.Attribute) and f.attr == "get" and is_environ(f.value)) or (
+                isinstance(f, ast.Attribute) and f.attr == "getenv"
+            ) or (isinstance(f, ast.Name) and f.id == "getenv"):
+                key = node.args[0]
+        elif isinstance(node, ast.Subscript) and is_environ(node.value):
+            key = node.slice
+        if isinstance(key, ast.Constant) and isinstance(key.value, str):
+            names.add(key.value)
+    return names
+
+
+def test_no_environment_tuning_knobs():
+    """A knob read from the environment changes behaviour with no trace
+    in the code or the call; only deployment settings may be read."""
+    import ast
+
+    pkg = pathlib.Path(S.__file__).parent
+    read = set()
+    for p in sorted(pkg.rglob("*.py")):
+        read |= _env_reads(ast.parse(p.read_text()))
+    assert read - _DEPLOYMENT_ENV == set()
+    assert {"SPARK_GRAFT_CPUS", "JAVA_HOME"} <= read  # the scan sees reads
+
+
 def test_every_checkpoint_goes_through_session_checkpoint():
     """:func:`session.checkpoint` registers each checkpoint for
     ``pinned_scope`` and ``release_cached_state``; a direct

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from pride_spark.operators.joins import range_join
 from pride_spark.operators.timeseries import (
     AggSpec,
-    histogram_quantile,
     hypertable_rollup,
     time_bucket,
 )
@@ -268,10 +267,9 @@ def test_week_finest_recomputes_month_from_raw(spark, straddle_df):
 # ---------------------------------------------------------------------------
 
 
-def test_histogram_cascade_equals_direct_and_quantile(spark, ts_df):
+def test_histogram_cascade_equals_direct(spark, ts_df):
     """Fixed-boundary counts SUM, so the cascaded histogram is exactly
-    the direct per-level histogram; quantile estimates interpolate
-    within bin resolution."""
+    the direct per-level histogram."""
     with pytest.raises(ValueError, match="bins"):
         AggSpec("histogram", "v", "h")  # bins required
     with pytest.raises(ValueError, match="increasing"):
@@ -310,20 +308,3 @@ def test_histogram_cascade_equals_direct_and_quantile(spark, ts_df):
     # slot counts cover every non-null row
     tot = out.filter("level='total'").first()
     assert sum(tot["v_hist"]) == tot["n"]
-
-    # quantile estimate: median of v (uniform-ish over [0, 12/7]) lands
-    # in the right bin, within bin resolution
-    med = (
-        out.filter("level='total'")
-        .select(histogram_quantile("v_hist", bins, 0.5).alias("p50"))
-        .first()["p50"]
-    )
-    true_med = ts_df.approxQuantile("v", [0.5], 0.0)[0]
-    assert abs(med - true_med) <= 0.5  # one bin width
-
-    # p0/p100 clamp to the finite edges
-    row = out.filter("level='total'").select(
-        histogram_quantile("v_hist", bins, 0.001).alias("lo"),
-        histogram_quantile("v_hist", bins, 1.0).alias("hi"),
-    ).first()
-    assert row["lo"] == bins[0] and row["hi"] == bins[-1]
